@@ -13,11 +13,13 @@ the scale path here is:
 3. Pre-cluster edges: rows sharing an identical non-empty prisoner
    number are linked unconditionally (run_clustering.py:105-110) —
    built as star edges to the group minimum (linear, not quadratic).
-4. Connected components via iterative min-label propagation (fused
-   first round, partition-retaining persists, periodic lineage cuts —
-   see ``connected_components``). Components in name-blocked person
-   graphs are small, so convergence is fast; ``max_iter`` caps the
-   worst case (SURVEY §7 risk 10).
+4. Connected components (``connected_components``): the edge list is
+   materialized once; an edge list that fits on the driver (the
+   planner's own broadcast test) is resolved there by a vectorized
+   union-find, a larger one by distributed min-label propagation.
+   Person graphs are name-blocked, so their edge lists are small next
+   to the mentions they link, and a dozen eager jobs per propagation
+   run would cost more than the data.
 5. ``Person_Entity_ID`` = dense rank of the component root — stable,
    deterministic (SURVEY §7 risk 3: no nondeterministic UUIDs).
 
@@ -31,8 +33,10 @@ linkage semantics.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -47,6 +51,9 @@ from aroa_etl_spark.operators.matching import _score_udf, candidate_pairs
 _AQE_CACHE = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
 _AQE_CACHE_ON = True
 
+# Size of one edge row in the "fits on the driver" test: two 8-byte ids.
+_EDGE_BYTES = 16
+
 
 def connected_components(
     edges: DataFrame,
@@ -56,9 +63,34 @@ def connected_components(
     dedup_edges: bool = False,
     checkpoint_every: int = 5,
     num_partitions: int | None = None,
+    stats: dict | None = None,
 ) -> DataFrame:
     """Connected components over an undirected edge list → (node, component)
     where component is the minimum node id in the component.
+
+    Self-loops and edges with a NULL id are dropped, so a node appears
+    only if it has an edge to another node (no isolated nodes). The id
+    type of the input is kept; string ids are ordered by code point,
+    which is Spark's UTF-8 byte order.
+
+    The edge list is materialized exactly once, as an eager local
+    checkpoint whose row count rides the same job as an Observation.
+    Then one of two paths finishes the job:
+
+    - **driver**: when ``rows × 16 B`` is at most the session's
+      ``spark.sql.autoBroadcastJoinThreshold`` — the test the planner
+      uses to decide that a relation fits on the driver for a broadcast
+      join — the edges are collected with ``toArrow()`` and resolved by
+      a vectorized union-find (``np.unique`` dense ids, ``np.minimum.at``
+      root hooking, pointer jumping). The answer comes back through
+      ``createDataFrame``: one job for the whole fixpoint instead of a
+      job per propagation round, each of which pays driver-side
+      planning on a lineage that grows every round. ``max_iter`` does
+      not apply: the driver always reaches the fixpoint. Ids other than
+      integers and plain (non-collated) strings take the rounds path.
+    - **rounds**: otherwise (and always under a threshold of ``-1``,
+      Spark's "never broadcast"), distributed min-label propagation
+      from the checkpoint, described below.
 
     Min-label propagation: each round every node takes the minimum label
     among itself and its neighbors — ONE join + union + aggregation per
@@ -66,12 +98,12 @@ def connected_components(
     back). Convergence detection free-rides on monotonicity: labels only
     ever decrease, so the label SUM strictly decreases until the
     fixpoint — equality of consecutive sums terminates (computed as
-    decimal so planet-scale id sums can't overflow a long). Converges in
-    O(diameter) rounds — blocked person graphs have tiny diameters; for
-    adversarial graphs raise ``max_iter``.
+    decimal so planet-scale id sums can't overflow a long; ids that are
+    not integers sum a 64-bit hash of each (node, label) pair). Converges in
+    O(diameter) rounds; ``max_iter`` caps them, so raise it for
+    adversarial graphs (or use :func:`connected_components_star`).
 
-    Shuffle budget (measured 27% faster than the checkpoint-per-round
-    shape at sf0.1):
+    Shuffle budget of a round:
 
     - round 1 is FUSED into label init — ``min(self, neighbors)`` is one
       aggregation over the edge list, no join;
@@ -86,80 +118,158 @@ def connected_components(
     - every ``checkpoint_every`` rounds the lineage is cut so plans
       don't grow unboundedly on adversarial-diameter graphs.
 
-    All internal persists are released before returning; the result is
-    an eager local checkpoint that owns its blocks (ContextCleaner frees
-    them when the frame is unreferenced).
+    All internal persists are released before returning; the rounds
+    result is an eager local checkpoint that owns its blocks
+    (ContextCleaner frees them when the frame is unreferenced).
 
     ``num_partitions`` pins ``spark.sql.shuffle.partitions`` for the
-    loop's lifetime (restored on exit) — the iterative analogue of the
-    streaming drain's state-store pinning. Labels are (node, label)
-    pairs, tiny next to the data they describe, so a session-wide
-    shuffle width (e.g. 200 under a plain driver session) schedules
-    mostly-empty tasks every round; size it to ~nodes×16 bytes / 64 MB,
-    floored at the cluster's default parallelism. ``None`` (default)
-    leaves the session conf alone. The edge derivation upstream of the
-    loop materializes inside it (the sym persist), so its shuffles are
-    pinned too.
+    call's lifetime (restored on exit), so the edge derivation upstream
+    (materialized by the checkpoint) and every round shuffle at that
+    width. Labels are (node, label) pairs, tiny next to the data they
+    describe, so a session-wide shuffle width (e.g. 200 under a plain
+    driver session) schedules mostly-empty tasks every round; size it to
+    ~nodes×16 bytes / 64 MB, floored at the cluster's default
+    parallelism. ``None`` (default) leaves the session conf alone.
 
-    The loop additionally enables
+    The call also enables
     ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`` for
     its lifetime (restored on exit): every round persists a labels
     frame, and with the flag at its default (false) cached plans
     compile WITHOUT AQE partition coalescing, so each round's tiny
     label shuffle materializes at the full pinned width — dozens of
     near-empty tasks per round whose scheduling dominates small/medium
-    graphs (measured r14: 3.60 s → 2.25 s at sf0.1, interleaved
-    medians).  With the flag on, AQE sizes every round by the 64 MB
+    graphs. With the flag on, AQE sizes every round by the 64 MB
     advisory instead — width follows the data at any scale (guide §2.2
     fewer-larger partitions; no constant tuned to either local mode or
     a cluster).
+
+    ``stats`` (optional dict) receives ``path`` (``"driver"`` or
+    ``"rounds"``), ``edges`` (edge rows after dropping self-loops and
+    NULL ids) and ``rounds`` (union-find hooking rounds on the driver,
+    propagation rounds including the fused first one otherwise).
     """
     spark = edges.sparkSession
+    stats = {} if stats is None else stats
     conf_before: str | None = None
     aqe_before = spark.conf.get(_AQE_CACHE, "false")
     if num_partitions is not None:
         conf_before = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", str(num_partitions))
     spark.conf.set(_AQE_CACHE, "true" if _AQE_CACHE_ON else aqe_before)
+    ck = None
     try:
-        return _connected_components_loop(
-            edges, src, dst, max_iter, dedup_edges, checkpoint_every
-        )
+        ck, n_edges = _edge_checkpoint(edges, src, dst)
+        stats["edges"] = n_edges
+        id_type = ck.schema["a"].dataType
+        driver_ok = isinstance(id_type, T.IntegralType) or id_type == T.StringType()
+        # the threshold in bytes as the planner reads it (-1: never broadcast)
+        threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+        if driver_ok and n_edges * _EDGE_BYTES <= threshold:
+            stats["path"] = "driver"
+            return _components_on_driver(ck, stats)
+        stats["path"] = "rounds"
+        return _propagation_rounds(ck, max_iter, dedup_edges, checkpoint_every, stats)
     finally:
+        if ck is not None:
+            # both results are materialized without it: free its blocks
+            # now, not whenever a JVM GC lets the ContextCleaner run
+            ck._jdf.queryExecution().analyzed().rdd().unpersist(False)
         spark.conf.set(_AQE_CACHE, aqe_before)
         if conf_before is not None:
             spark.conf.set("spark.sql.shuffle.partitions", conf_before)
 
 
-def _connected_components_loop(
-    edges: DataFrame,
-    src: str,
-    dst: str,
+def _edge_checkpoint(edges: DataFrame, src: str, dst: str) -> tuple[DataFrame, int]:
+    """(a, b) edges with a < b, materialized once → (checkpoint, rows).
+    ``src != dst`` drops self-loops and, being NULL on a NULL id, NULL
+    ids; least/greatest give both ids one common type."""
+    obs = Observation()
+    ck = (
+        edges.filter(F.col(src) != F.col(dst))
+        .select(F.least(src, dst).alias("a"), F.greatest(src, dst).alias("b"))
+        .observe(obs, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint(eager=True)
+    )
+    return ck, obs.get["n"]
+
+
+def _components_on_driver(ck: DataFrame, stats: dict) -> DataFrame:
+    table = ck.toArrow()
+    id_type = table.schema.field("a").type
+    a = table.column("a").to_numpy(zero_copy_only=False)
+    b = table.column("b").to_numpy(zero_copy_only=False)
+    # sorted unique ids: dense id order IS id order (code point order
+    # for str), so the minimum dense id of a component is its min id
+    ids, dense = np.unique(np.concatenate([a, b]), return_inverse=True)
+    root = _union_find(dense[: len(a)], dense[len(a):], len(ids), stats)
+    out = pa.table(
+        {"node": pa.array(ids, id_type), "component": pa.array(ids[root], id_type)}
+    )
+    return ck.sparkSession.createDataFrame(out)
+
+
+def _union_find(u: np.ndarray, v: np.ndarray, n: int, stats: dict) -> np.ndarray:
+    """Root of every dense id 0..n-1 for the undirected edges (u, v); the
+    root of a component is its smallest id.
+
+    Every node points at a node no larger than itself, so pointers never
+    form a cycle. A round hooks the two roots of every edge whose ends
+    still have different roots onto the smaller of the two
+    (``np.minimum.at`` resolves concurrent hooks of one root to the
+    minimum), then pointer-jumps until every node points at its root.
+    Edges whose ends share a root never split again, so each round works
+    only on the edges still live."""
+    parent = np.arange(n)
+    rounds = 0
+    while True:
+        ru, rv = parent[u], parent[v]
+        live = ru != rv
+        if not live.any():
+            break
+        rounds += 1
+        u, v, ru, rv = u[live], v[live], ru[live], rv[live]
+        lo = np.minimum(ru, rv)
+        np.minimum.at(parent, ru, lo)
+        np.minimum.at(parent, rv, lo)
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+    stats["rounds"] = rounds
+    return parent
+
+
+def _propagation_rounds(
+    ck: DataFrame,
     max_iter: int,
     dedup_edges: bool,
     checkpoint_every: int,
+    stats: dict,
 ) -> DataFrame:
-    # symmetrize in ONE pass over the edge input: a union of two selects
-    # evaluates the (possibly expensive) upstream edge derivation twice
-    # during materialization; explode(array(fwd, rev)) scans it once.
-    sym = (
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col(src).alias("a"), F.col(dst).alias("b")),
-                    F.struct(F.col(dst).alias("a"), F.col(src).alias("b")),
-                )
-            ).alias("__e")
-        )
-        .select("__e.a", "__e.b")
-        .filter(F.col("a") != F.col("b"))
-    )
+    # symmetrize in one pass over the checkpoint: explode(array(fwd, rev))
+    sym = ck.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("a"), F.col("b")),
+                F.struct(F.col("b").alias("a"), F.col("a").alias("b")),
+            )
+        ).alias("__e")
+    ).select("__e.a", "__e.b")
     if dedup_edges:
         sym = sym.distinct()
     sym = sym.repartition("b").persist()
 
+    # convergence witness: labels only decrease, so integer labels have
+    # an exact one in their sum; other ids sum a 64-bit hash of every
+    # (node, label) pair, the set-identity witness of the star variant
+    if isinstance(ck.schema["a"].dataType, T.IntegralType):
+        witness = F.col("label")
+    else:
+        witness = F.xxhash64("node", "label")
+
     def probe(df: DataFrame):
-        return df.agg(F.sum(F.col("label").cast("decimal(38,0)")).alias("s")).collect()[0]["s"]
+        return df.agg(F.sum(witness.cast("decimal(38,0)")).alias("s")).collect()[0]["s"]
 
     # fused round 1: every node takes min(self, neighbors) in one agg
     labels = (
@@ -170,8 +280,10 @@ def _connected_components_loop(
     )
     prev_sum = probe(labels)
     cached = [labels]
+    rounds = 1
 
     for i in range(max_iter - 1):
+        rounds += 1
         neighbor_labels = sym.join(labels, sym["b"] == labels["node"]).select(
             F.col("a").alias("node"), "label"
         )
@@ -197,6 +309,7 @@ def _connected_components_loop(
     for df in cached:
         df.unpersist()
     sym.unpersist()
+    stats["rounds"] = rounds
     return out
 
 
@@ -319,11 +432,9 @@ def _connected_components_star_loop(
         # with persist-only). The eager checkpoint materializes the
         # (tiny) edge set and makes every round's plan constant-size.
         # The convergence probe rides the SAME materialization as an
-        # Observation (verified r14: observed metrics fire on an eager
-        # localCheckpoint) — one job per round instead of two; per-round
-        # cost here is job/stage overhead, not data (guide §1.2).
-        from pyspark.sql import Observation
-
+        # Observation (observed metrics fire on an eager localCheckpoint)
+        # — one job per round instead of two; per-round cost here is
+        # job/stage overhead, not data (guide §1.2).
         obs = Observation()
         new_e = new_e.observe(
             obs,
@@ -381,9 +492,7 @@ def similarity_edges(
     """(src, dst, score) edges between persons whose blocked similarity
     ≥ cutoff. Self-join via the matching blocking; pair direction
     canonicalized to src < dst so each pair scores once."""
-    right = df
-    for c in df.columns:
-        right = right.withColumnRenamed(c, f"__r_{c}")
+    right = df.toDF(*[f"__r_{c}" for c in df.columns])
     rid = f"__r_{id_col}"
 
     pairs = candidate_pairs(
@@ -451,7 +560,8 @@ def person_clustering(
     divergence documented in the module docstring.
 
     Entity ids default to the minimum member id per component —
-    deterministic and computed fully distributed. ``dense_ids=True``
+    deterministic, whichever path ``connected_components`` takes.
+    ``dense_ids=True``
     renumbers entities 1..N like the reference's export
     (person_clustering.py:280-288) via range-sort + zipWithIndex over
     the distinct roots: global order comes from the range partitioner,
@@ -468,7 +578,8 @@ def person_clustering(
 
     if prisoner_col and prisoner_col in df.columns:
         known = _star_edges(df.filter(has_value(prisoner_col)), id_col, prisoner_col)
-        edges = edges.unionByName(known).distinct()
+        # no distinct: both CC paths absorb duplicate edges
+        edges = edges.unionByName(known)
 
     comp = connected_components(
         edges, max_iter=max_iter, num_partitions=num_partitions

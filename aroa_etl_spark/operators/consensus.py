@@ -3,8 +3,8 @@ consensus row (SURVEY §2 A1/U1-U4; reference enc/matching.py +
 enc/deduplication.py).
 
 Spark architecture: the user-composable ``ColMatcher`` pipeline compiles
-to a per-group Python kernel executed under
-``groupBy(doc_id).applyInPandas`` — ONE pass computes every column's
+to a Python kernel run over each document's collected rows, many
+documents per Arrow batch — ONE pass computes every column's
 consensus, the ambiguity bookkeeping and the QA propagation for a
 document (the reference runs one groupby-apply per column). Groups are
 tiny (N transcriptions ≤ ~20), so the kernel is group-local by
@@ -436,8 +436,8 @@ def _grouped_rows(df: DataFrame, id_col: str, cols: list[str]) -> DataFrame:
     DataFrame construction PER GROUP — measured ~60% of the full
     consensus wall time at sf0.1 with a no-op kernel. Collecting each
     group's rows JVM-side (one shuffle with map-side partial aggregation,
-    same as applyInPandas) and feeding ``mapInPandas`` lets one Python
-    call process thousands of groups per Arrow batch. ``collect_list``
+    same as applyInPandas) and feeding ``mapInPandas`` or a scalar pandas
+    UDF lets one Python call process thousands of groups per Arrow batch. ``collect_list``
     keeps null field values because the struct wrapper itself is
     non-null.
     """
@@ -700,122 +700,131 @@ class ENCDeduplicater:
         metadata = list(self.metadata_columns)
         matchers = {c: self._matcher_for(c) for c in match_cols}
 
-        # ---- preprocess (enc/deduplication.py:67-84) ----
+        # ---- preprocess (enc/deduplication.py:67-84), one projection ----
         dtypes = dict(self.df.dtypes)
-
-        def qa_bool(c: str):
-            if dtypes.get(c) == "boolean":
-                return F.coalesce(F.col(c), F.lit(False))
-            # stringly-typed inputs round-trip 'True'/'False' — coerce once,
-            # stay BooleanType from here on
-            return F.coalesce(F.lower(F.col(c).cast("string")) == "true", F.lit(False))
-
-        data = self.df
+        cur = {c: F.col(c) for c in self.df.columns}
         for c in qa_cols:
-            data = data.withColumn(c, qa_bool(c))
-        data = data.withColumn(
-            "has_qa",
-            F.greatest(*[F.col(c) for c in qa_cols]) if qa_cols else F.lit(False),
-        )
+            if dtypes.get(c) == "boolean":
+                cur[c] = F.coalesce(F.col(c), F.lit(False))
+            else:
+                # stringly-typed inputs round-trip 'True'/'False' — coerce
+                # once, stay BooleanType from here on
+                cur[c] = F.coalesce(F.lower(F.col(c).cast("string")) == "true", F.lit(False))
+        qa_flags = [cur[c] for c in qa_cols] or [F.lit(False)]
+        cur["has_qa"] = F.greatest(*qa_flags) if len(qa_flags) > 1 else qa_flags[0]
         # NULL → '-' fill; unknown date parts get their 0-sentinels
         year_cols = [c for c in self.date_cols if re.search(r"[yY][eE][aA][rR]", c)]
         for c in match_cols:
-            s = F.coalesce(F.col(c).cast("string"), F.lit("-"))
+            v = F.coalesce(cur[c].cast("string"), F.lit("-"))
             if c in year_cols:
-                s = F.when(s == "-", "0000").otherwise(s)
+                v = F.when(v == "-", "0000").otherwise(v)
             elif c in self.date_cols:
-                s = F.when(s == "-", "00").otherwise(s)
-            data = data.withColumn(c, s)
+                v = F.when(v == "-", "00").otherwise(v)
+            cur[c] = v
+        data = self.df.select(*[e.alias(c) for c, e in cur.items()])
 
         # ---- consensus kernel: match + QA propagation in one pass ----
-        schema = T.StructType(
-            [T.StructField(id_col, T.StringType())]
-            + [T.StructField(c, T.StringType()) for c in match_cols]
-            + [
-                T.StructField("is_ambiguous", T.BooleanType()),
-                T.StructField("ambiguous_columns", T.StringType()),
-            ]
-            + [T.StructField(c, T.BooleanType()) for c in qa_cols]
-            + [
-                T.StructField("has_qa", T.BooleanType()),
-                T.StructField("object_id", T.StringType()),
-            ]
-            + [T.StructField(c, T.StringType()) for c in metadata]
-        )
-
+        doc_fields = list(dict.fromkeys(
+            [(c, T.StringType()) for c in match_cols]
+            + [("is_ambiguous", T.BooleanType()), ("ambiguous_columns", T.StringType())]
+            + [(c, T.BooleanType()) for c in qa_cols]
+            + [("has_qa", T.BooleanType()), ("object_id", T.StringType())]
+            + [(c, T.StringType()) for c in metadata]
+        ))
+        doc_schema = T.StructType([T.StructField(c, t) for c, t in doc_fields])
+        doc_names = doc_schema.fieldNames()
         has_person = bool(self.person_cols)
 
-        def kernel(batches):
-            for pdf in batches:
-                out = []
-                for doc_id, rows in zip(pdf[id_col], pdf["__rows"]):
-                    row: dict = {id_col: str(doc_id)}
-                    ambiguous = []
-                    matched_vals: dict[str, str | None] = {}
-                    for c in match_cols:
-                        vals = [r[c] for r in rows]
-                        n_entries = sum(1 for v in vals if not _is_empty_value(v))
-                        m = matchers[c](vals)
-                        if isinstance(m, list):
-                            m = None
-                        matched_vals[c] = m
-                        if not _success(m, n_entries, True):
-                            ambiguous.append(c)
-                    for c in match_cols:
-                        row[c] = "?" if c in ambiguous else (matched_vals[c] or "")
-                    row["is_ambiguous"] = bool(ambiguous)
-                    row["ambiguous_columns"] = ", ".join(ambiguous)
+        @F.pandas_udf(doc_schema)
+        def kernel(doc_ids: pd.Series, docs: pd.Series) -> pd.DataFrame:
+            out = []
+            for doc_id, rows in zip(doc_ids, docs):
+                row: dict = {}
+                ambiguous = []
+                matched_vals: dict[str, str | None] = {}
+                for c in match_cols:
+                    vals = [r[c] for r in rows]
+                    n_entries = sum(1 for v in vals if not _is_empty_value(v))
+                    m = matchers[c](vals)
+                    if isinstance(m, list):
+                        m = None
+                    matched_vals[c] = m
+                    if not _success(m, n_entries, True):
+                        ambiguous.append(c)
+                for c in match_cols:
+                    row[c] = "?" if c in ambiguous else (matched_vals[c] or "")
+                row["is_ambiguous"] = bool(ambiguous)
+                row["ambiguous_columns"] = ", ".join(ambiguous)
 
-                    # QA propagation: flag iff some raw row equals the
-                    # consensus value AND that raw row carried the QA flag
-                    for qa in qa_cols:
-                        row[qa] = False
-                    for c, qa in qa_map.items():
-                        mv = matched_vals[c]
-                        if mv is None:
-                            continue
-                        row[qa] = row[qa] or any(
-                            r[c] == mv and bool(r[qa]) for r in rows
+                # QA propagation: flag iff some raw row equals the
+                # consensus value AND that raw row carried the QA flag
+                for qa in qa_cols:
+                    row[qa] = False
+                for c, qa in qa_map.items():
+                    mv = matched_vals[c]
+                    if mv is None:
+                        continue
+                    row[qa] = row[qa] or any(r[c] == mv and bool(r[qa]) for r in rows)
+                row["has_qa"] = any(row[q] for q in qa_cols)
+
+                if has_person:
+                    if deterministic_ids:
+                        row["object_id"] = str(
+                            uuid.uuid5(uuid.NAMESPACE_URL, f"aroa-etl-spark:{doc_id}")
                         )
-                    row["has_qa"] = any(row[q] for q in qa_cols)
-
-                    if has_person:
-                        if deterministic_ids:
-                            row["object_id"] = str(
-                                uuid.uuid5(uuid.NAMESPACE_URL, f"aroa-etl-spark:{doc_id}")
-                            )
-                        else:
-                            row["object_id"] = str(uuid.uuid4())
                     else:
-                        row["object_id"] = None
-                    for mcol in metadata:
-                        row[mcol] = str(rows[0][mcol])
-                    out.append(row)
-                if out:
-                    yield pd.DataFrame(out)
+                        row["object_id"] = str(uuid.uuid4())
+                else:
+                    row["object_id"] = None
+                for mcol in metadata:
+                    row[mcol] = str(rows[0][mcol])
+                out.append(row)
+            return pd.DataFrame(out, columns=doc_names)
 
-        consensus = _grouped_rows(
-            data, id_col, match_cols + qa_cols + metadata
-        ).mapInPandas(kernel, schema)
-        consensus = consensus.withColumn("deleted", F.lit(False))
-
-        # ---- mark raw rows + copy doc-level info back (J1 join) ----
-        doc_info = consensus.select(
-            F.col(id_col).alias("__doc_id"),
-            F.col("is_ambiguous").alias("__is_ambiguous"),
-            F.col("ambiguous_columns").alias("__ambiguous_columns"),
-            F.col("object_id").alias("__object_id"),
-        )
-        raw = (
-            data.withColumn("deleted", F.lit(True))
-            .join(doc_info, F.col(id_col).cast("string") == F.col("__doc_id"), "left")
-            .withColumn("is_ambiguous", F.col("__is_ambiguous"))
-            .withColumn("ambiguous_columns", F.col("__ambiguous_columns"))
-            .withColumn("object_id", F.col("__object_id"))
-            .drop("__doc_id", "__is_ambiguous", "__ambiguous_columns", "__object_id")
+        # Each document's raw rows travel with it through the grouping and
+        # stay in the JVM: the kernel sees only the columns it votes on and
+        # returns one doc-level struct, from which ONE generator emits the
+        # consensus row and the raw rows stamped with the doc's ambiguity
+        # info and object_id. The kernel output has a single consumer, so
+        # it runs once, and raw values never round-trip through pandas
+        # (which widens a nullable long inside a struct to float64).
+        kernel_cols = list(dict.fromkeys(match_cols + qa_cols + metadata))
+        docs = _grouped_rows(data, id_col, data.columns).select(
+            id_col,
+            "__rows",
+            kernel(
+                F.col(id_col),
+                F.transform("__rows", lambda r: F.struct(*[r[c].alias(c) for c in kernel_cols])),
+            ).alias("__doc"),
         )
 
-        out = raw.unionByName(consensus, allowMissingColumns=True)
+        doc = F.col("__doc")
+        doc_level = ("is_ambiguous", "ambiguous_columns", "object_id")
+        out_cols = list(data.columns) + [
+            c for c in ("deleted", *doc_level) if c not in data.columns
+        ]
+        data_type = {f.name: f.dataType for f in data.schema.fields}
+
+        def consensus_value(c: str):
+            if c == id_col:
+                return F.col(id_col)
+            if c == "deleted":
+                return F.lit(False)
+            if c in doc_names:
+                return doc[c].cast(data_type.get(c, doc_schema[c].dataType))
+            return F.lit(None).cast(data_type[c])
+
+        def raw_value(r, c: str):
+            if c == "deleted":
+                return F.lit(True)
+            if c in doc_level:
+                # like a left join on the document id: no info for NULL ids
+                return F.when(F.col(id_col).isNotNull(), doc[c])
+            return r[c]
+
+        consensus = F.struct(*[consensus_value(c).alias(c) for c in out_cols])
+        raws = F.transform("__rows", lambda r: F.struct(*[raw_value(r, c).alias(c) for c in out_cols]))
+        out = docs.select(F.inline(F.concat(F.array(consensus), raws)))
         # fill string nulls with '' (reference fillna(''))
         string_cols = [f.name for f in out.schema.fields if isinstance(f.dataType, T.StringType)]
         return out.fillna("", subset=string_cols)

@@ -12,10 +12,12 @@ Spark architecture (replaces the reference's per-row Python probe loop):
 3. Pairs are scored with an Arrow-batched pandas UDF running
    ``person_similarity`` (no built-in fuzzy join exists in Spark; blocked
    equi-join + UDF scoring is the idiomatic pattern).
-4. Top-k per source via ranking window; unmatched sources re-added with
-   score -1 via anti-join (the reference's manual re-add, J4).
-5. ``allow_duplicates=False``: best-per-target window then the same
-   re-add — one extra shuffle, no groupby-merge roundtrip.
+4. Top-k per source via ranking window over every source left-joined to
+   its scored pairs, so unmatched sources come out with score -1 (the
+   reference's manual re-add, J4) without a second pass over the pairs.
+5. ``allow_duplicates=False``: best-per-target window; a source that
+   keeps no target falls back to its -1 row — no groupby-merge
+   roundtrip.
 
 Output schema: (srcID, score, trgID) — the reference's match edge table.
 """
@@ -165,7 +167,11 @@ def _score_udf(name_only: bool, use_prisoner: bool, use_date: bool, use_pob: boo
         )
         return pd.Series(vals)
 
-    return score
+    # Marked nondeterministic only so the optimizer keeps ``score >= cutoff``
+    # ABOVE the projection that computes the score: a deterministic UDF
+    # gets inlined into the pushed-down filter, and the plan then runs the
+    # kernel in two ArrowEvalPython nodes over the same pairs.
+    return score.asNondeterministic()
 
 
 def person_matching(
@@ -248,26 +254,39 @@ def person_matching(
         .filter(F.col("score") >= min_match_score)
     )
 
+    # Every source left-joined to its scored pairs AHEAD of the top-k
+    # window: a source without a pair ≥ min_match_score gets one NULL row,
+    # which ranks first and becomes its sentinel. ``scored`` thus has one
+    # consumer and the kernel runs once; re-adding unmatched sources by an
+    # anti-join on the top-k would evaluate the scored plan a second time.
+    ranked = src_df.select(src_id).distinct().join(
+        scored.select(src_id, "score", target_id), src_id, "left"
+    )
     w = W.partitionBy(src_id).orderBy(F.desc("score"), F.asc(target_id))
-    topk = (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= top_n_matches)
-        .select(F.col(src_id), F.col("score"), F.col(target_id))
+    topk = ranked.withColumn("__rn", F.row_number().over(w)).filter(
+        F.col("__rn") <= top_n_matches
     )
 
     if not allow_duplicates:
-        wt = W.partitionBy(target_id).orderBy(F.desc("score"), F.asc(src_id))
+        # each target keeps its best source; a source left with no target
+        # keeps its first-ranked row as the sentinel. Sentinel rows are
+        # partitioned by source so they don't all land in the NULL-target
+        # window partition.
+        wt = W.partitionBy(
+            target_id, F.when(F.col(target_id).isNull(), F.col(src_id))
+        ).orderBy(F.desc("score"), F.asc(src_id))
+        won = F.col(target_id).isNotNull() & (F.row_number().over(wt) == 1)
         topk = (
-            topk.withColumn("__rt", F.row_number().over(wt))
-            .filter(F.col("__rt") == 1)
-            .drop("__rt")
+            topk.withColumn("__won", won)
+            .withColumn("__any", F.max("__won").over(W.partitionBy(src_id)))
+            .filter(F.col("__won") | (~F.col("__any") & (F.col("__rn") == 1)))
+            .withColumn(target_id, F.when(F.col("__won"), F.col(target_id)))
         )
 
-    # re-add sources that matched nothing (score -1, NULL target)
-    all_src = src_df.select(src_id).distinct()
-    unmatched = all_src.join(topk, src_id, "left_anti").select(
+    # the reference's sentinel: score -1 and a NULL target
+    unmatched = F.col(target_id).isNull()
+    return topk.select(
         F.col(src_id),
-        F.lit(-1.0).alias("score"),
-        F.lit(None).cast(dict(src_df.dtypes).get(src_id, "string")).alias(target_id),
+        F.when(unmatched, F.lit(-1.0)).otherwise(F.col("score")).alias("score"),
+        F.col(target_id),
     )
-    return topk.unionByName(unmatched)

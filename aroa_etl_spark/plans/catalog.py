@@ -850,8 +850,10 @@ def cc_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     engineered to have KNOWN components: within each customer's orders,
     chain edges (order → next order) + star edges (order → group min).
     Components are exactly the per-customer order sets, so the oracle is
-    a plain group-min — while the Spark side runs the real iterative
-    min-label-propagation operator."""
+    a plain group-min — while the Spark side runs the real
+    connected-components operator (its driver union-find while the edge
+    list fits under the broadcast threshold, min-label propagation
+    rounds above it)."""
     from aroa_etl_spark.operators.clustering import connected_components
 
     t = load_tables(spark, sf_dir, ("orders",))

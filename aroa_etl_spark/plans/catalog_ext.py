@@ -2028,9 +2028,9 @@ def tdp_domain_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
 def er_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SEMANTIC near-dup clustering — the embedding-space twin of
     er_neardup_clusters: sign-bucket LSH + exact cosine >= 0.95 pairs
-    (planted zero-last-dim copies) fed into distributed min-label
-    connected components; the oracle derives the same components via a
-    recursive-CTE transitive closure. This is the modern semantic-dedup
+    (planted zero-last-dim copies) fed into connected components; the
+    oracle derives the same components via a recursive-CTE transitive
+    closure. This is the modern semantic-dedup
     recipe (SemDeDup-style: cluster by embedding similarity, keep one
     representative per cluster) with every stage scale-shaped: bucketed
     candidate join, labels-only CC shuffles."""

@@ -1198,8 +1198,9 @@ def er_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     clusters, the dedup→ER handoff a corpus pipeline runs at scale. The
     oracle replays the bit-exact LSH pair generation and then derives
     components INDEPENDENTLY via a recursive-CTE transitive closure
-    (label-set saturation), where the engine runs distributed min-label
-    propagation — two different algorithms, same fixpoint."""
+    (label-set saturation), where the engine runs a union-find (or
+    min-label propagation when the edge list outgrows the driver) — two
+    different algorithms, same fixpoint."""
     from aroa_etl_spark.operators.clustering import connected_components
     from aroa_etl_spark.operators.dedup import minhash_lsh_dedup, release_caches
 
@@ -2317,8 +2318,8 @@ def dedup_canonical_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The DECISION stage of the dedup pipeline — the step that turns
     near-dup PAIRS into a kept/dropped verdict per document: MinHash-LSH
     pairs (the standard 8-perm/4-band pipeline over the planted corpus)
-    → connected components over the pair graph (min-label propagation,
-    operators/clustering.connected_components) → keep exactly the
+    → connected components over the pair graph
+    (operators/clustering.connected_components) → keep exactly the
     minimum-id member of every duplicate cluster (singletons keep
     themselves).  Real pipelines end here: the kept list IS the output
     corpus.  Min-id is the deterministic keep policy; swapping in

@@ -20,6 +20,13 @@ tests use):
 - **python_udf** (error): ``BatchEvalPython`` — row-at-a-time Python in
   the hot path; rewrite as built-ins or an Arrow-batched pandas UDF
   (``ArrowEvalPython`` / ``MapInPandas`` are fine and not flagged).
+- **repeated_python** (warning): one Python function result
+  (``name(...)#id``) evaluated by more than one ``ArrowEvalPython`` /
+  ``MapInPandas`` (or other Python exec) node — the kernel runs once per
+  node over the same rows. Usual causes: a filter on a UDF result pushed
+  below the projection computing it (the UDF is inlined into the
+  filter), or a UDF's output consumed twice (self-join, union, anti-join
+  re-add).
 - **global_sort** (warning): a global ``Sort`` that is not the
   ``TakeOrderedAndProject`` top-k collapse — a total sort of the
   dataset; fine for reports, a scale ceiling on facts.
@@ -57,6 +64,24 @@ def _spark_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().sparkPlan().toString()
 
 
+_PYTHON_NODE = re.compile(
+    r"\b(?:ArrowEvalPython|BatchEvalPython|MapInPandas|MapInArrow|FlatMap\w+In(?:Pandas|Arrow))\b"
+)
+# ``name(args)#resultId``; args may nest two levels of parentheses
+_PYTHON_CALL = re.compile(r"(\w+)\((?:[^()]|\((?:[^()]|\([^()]*\))*\))*\)#(\d+)")
+
+
+def _repeated_python(plan: str) -> list[str]:
+    """``name#id`` of every Python function result evaluated by more than
+    one Python exec node of ``plan``."""
+    nodes: dict[str, int] = {}
+    for line in plan.splitlines():
+        if _PYTHON_NODE.search(line):
+            for call in {f"{m[1]}#{m[2]}" for m in _PYTHON_CALL.finditer(line)}:
+                nodes[call] = nodes.get(call, 0) + 1
+    return sorted(call for call, n in nodes.items() if n > 1)
+
+
 def lint_plan(
     df: DataFrame,
     allow_bnlj: bool = False,
@@ -92,6 +117,18 @@ def lint_plan(
                 "BatchEvalPython: row-at-a-time Python UDF in the hot path — "
                 "use pyspark.sql.functions built-ins, or an Arrow-batched "
                 "pandas UDF (@pandas_udf / mapInPandas).",
+            )
+        )
+    repeated = _repeated_python(plan)
+    if repeated:
+        out.append(
+            Finding(
+                "warning",
+                "repeated_python",
+                f"Python function result(s) {', '.join(repeated)} evaluated by "
+                "more than one Python node: the kernel runs again over the same "
+                "rows. Give the result a single consumer, or keep filters on it "
+                "above the projection that computes it.",
             )
         )
     # a global Sort that isn't the TakeOrderedAndProject top-k collapse

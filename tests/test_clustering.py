@@ -3,6 +3,9 @@ greedy in-component refinement (SURVEY §2 EP2/J7/M8)."""
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -225,3 +228,115 @@ def test_star_cc_handles_duplicate_and_reversed_edges(spark):
     out = {r["node"]: r["component"] for r in connected_components_star(df).collect()}
     # 5's only edge is a self-loop -> dropped, matching connected_components
     assert out == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}
+
+
+# ---------------------------------------------------------------------------
+# driver / rounds paths of connected_components
+# ---------------------------------------------------------------------------
+
+@contextmanager
+def _broadcast_threshold(spark, value: str):
+    """Scope ``spark.sql.autoBroadcastJoinThreshold``; ``-1`` (never
+    broadcast) sends connected_components down the distributed rounds."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, before)
+
+
+def _random_graph(rng, n_nodes: int, n_edges: int):
+    """Chains, islands, self-loops, duplicate and reversed edges and NULL
+    ids over ``n_nodes`` ids."""
+    edges = [(rng.randrange(n_nodes), rng.randrange(n_nodes)) for _ in range(n_edges)]
+    start = rng.randrange(n_nodes)
+    edges += [(start + i, start + i + 1) for i in range(rng.randrange(2, 12))]  # chain
+    edges += [(n_nodes + 2 * i, n_nodes + 2 * i + 1) for i in range(3)]  # islands
+    picks = rng.sample(edges, min(5, len(edges)))
+    edges += picks + [(d, s) for s, d in picks]  # duplicates and reversals
+    edges += [(i, i) for i in rng.sample(range(n_nodes), 3)]  # self-loops
+    edges += [(None, rng.randrange(n_nodes)), (rng.randrange(n_nodes), None), (None, None)]
+    rng.shuffle(edges)
+    return edges
+
+
+def _run_cc(spark, df, threshold: str, **kw):
+    from aroa_etl_spark.operators.clustering import connected_components
+
+    stats: dict = {}
+    with _broadcast_threshold(spark, threshold):
+        rows = connected_components(df, stats=stats, **kw).collect()
+    return {r["node"]: r["component"] for r in rows}, stats
+
+
+@pytest.mark.parametrize("seed", [1, 2, 3])
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_cc_driver_and_rounds_paths_agree(spark, seed, id_type):
+    import random
+
+    rng = random.Random(seed)
+    edges = _random_graph(rng, rng.choice([30, 150]), rng.choice([20, 120]))
+    df = spark.createDataFrame(edges, "src long, dst long")
+    if id_type == "string":
+        # prefixes with a non-ASCII letter: min must follow code points
+        def tag(c):
+            return F.concat(F.when(F.col(c) % 3 == 0, "ä").otherwise("a"), F.col(c)).alias(c)
+
+        df = df.select(tag("src"), tag("dst"))
+
+    driver, d_stats = _run_cc(spark, df, "67108864")
+    rounds, r_stats = _run_cc(spark, df, "-1", max_iter=100)
+    assert (d_stats["path"], r_stats["path"]) == ("driver", "rounds")
+    assert d_stats["edges"] == r_stats["edges"]
+    assert driver == rounds
+
+    # brute-force reference: BFS over the same edge list
+    adj: dict = {}
+    for r in df.collect():
+        s, d = r["src"], r["dst"]
+        if s is None or d is None or s == d:
+            continue
+        adj.setdefault(s, set()).add(d)
+        adj.setdefault(d, set()).add(s)
+    want: dict = {}
+    for node in adj:
+        if node in want:
+            continue
+        comp, todo = {node}, [node]
+        while todo:
+            for nxt in adj[todo.pop()] - comp:
+                comp.add(nxt)
+                todo.append(nxt)
+        for m in comp:
+            want[m] = min(comp)
+    assert driver == want
+
+
+def test_cc_driver_path_keeps_id_type_and_ignores_max_iter(spark):
+    """A 40-node chain under max_iter=2: the driver reaches the fixpoint
+    anyway, keeps the int id type and leaves no persisted RDD behind."""
+    from aroa_etl_spark.operators.clustering import connected_components
+
+    n = 40
+    df = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "src int, dst int")
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = len(persisted())
+    stats: dict = {}
+    out = connected_components(df, max_iter=2, stats=stats)
+    assert stats["path"] == "driver" and stats["edges"] == n - 1
+    assert len(persisted()) == before  # the edge checkpoint is released
+    assert dict(out.dtypes) == {"node": "int", "component": "int"}
+    assert {r["node"]: r["component"] for r in out.collect()} == {i: 0 for i in range(n)}
+
+
+def test_existing_cc_cases_on_rounds_path(spark):
+    """Every fixed-graph connected_components case above, on the rounds."""
+    with _broadcast_threshold(spark, "-1"):
+        test_connected_components_chain_and_islands(spark)
+        test_connected_components_merges_across_edge_order(spark)
+        test_person_clustering_end_to_end(spark)
+        test_greedy_block_clustering_max_linkage(spark)
+        test_person_clustering_dense_ids_distributed(spark)
+        test_star_cc_matches_propagation_on_random_graph(spark)

@@ -193,3 +193,75 @@ def test_exact_grouped_rank_descending_non_numeric(spark):
             assert all(
                 v == list(range(1, len(v) + 1)) for v in per_g.values()
             ), (col, descending)
+
+
+def test_repeated_python_flagged(spark):
+    """A filter on a deterministic pandas UDF's result is pushed below the
+    projection that computes it, so the UDF runs in two ArrowEvalPython
+    nodes; a frame with a mapInPandas output consumed twice runs it twice."""
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("long")
+    def plus(x: pd.Series) -> pd.Series:
+        return x + 1
+
+    twice = spark.range(10).withColumn("y", plus("id")).filter(F.col("y") > 3)
+    found = [f for f in lint_plan(twice) if f.code == "repeated_python"]
+    assert found and found[0].severity == "warning" and "plus#" in found[0].message
+
+    once = spark.range(10).withColumn("y", plus.asNondeterministic()("id")).filter(
+        F.col("y") > 3
+    )
+    assert "repeated_python" not in _codes(lint_plan(once))
+
+    def ident(batches):
+        yield from batches
+
+    mapped = spark.range(10).mapInPandas(ident, "id long")
+    self_join = mapped.join(mapped.withColumnRenamed("id", "id2"), F.col("id") == F.col("id2"))
+    assert "repeated_python" in _codes(lint_plan(self_join), "warning")
+    assert "repeated_python" not in _codes(lint_plan(mapped))
+
+
+def test_repeated_python_absent_on_consensus_and_person_er(spark):
+    """The consensus kernel and the person-scoring UDF each run once per
+    plan: ENCDeduplicater.run, person_matching (both duplicate modes) and
+    similarity_edges."""
+    from aroa_etl_spark.operators.clustering import similarity_edges
+    from aroa_etl_spark.operators.consensus import ENCDeduplicater
+    from aroa_etl_spark.operators.matching import person_matching
+
+    enc = spark.createDataFrame(
+        [("d1", "w", "Anna", "true", "1930"), ("d1", "w", "Anna", "false", "1930"),
+         ("d2", "w", "Bob", "false", "-"), ("d2", "w", "Rob", "false", "1931")],
+        "document_id string, workflow_id string, name string, name_qa string, "
+        "birth_year string",
+    )
+    dedup = (
+        ENCDeduplicater(enc, "document_id", metadata_columns=["workflow_id"])
+        .on_person_cols(["name"])
+        .on_date_cols(["birth_year"])
+        .define_qa_pairs({"birth_year": "name_qa"})
+        .run()
+    )
+    people = spark.createDataFrame(
+        [(1, "anna", "schmidt", "19300201", "", "berlin"),
+         (2, "anna", "schmitt", "19300201", "", "berlin"),
+         (3, "hans", "wagner", "19251130", "555", "hamburg")],
+        "person_id long, strGName_processed string, strLName_processed string, "
+        "strDoB_processed string, prisoner_number string, strPoB_processed string",
+    )
+    src = people.withColumnRenamed("person_id", "srcID")
+    trg = people.withColumnRenamed("person_id", "trgID")
+    plans = {
+        "consensus": dedup,
+        "matching": person_matching(src, trg, top_n_matches=2, min_match_score=80.0),
+        "matching_unique": person_matching(
+            src, trg, top_n_matches=2, min_match_score=80.0, allow_duplicates=False
+        ),
+        "similarity_edges": similarity_edges(people, cutoff=85.0),
+    }
+    for name, df in plans.items():
+        assert "repeated_python" not in _codes(lint_plan(df)), name
+    assert dedup.count() == 6  # 4 raw rows + 2 consensus rows
