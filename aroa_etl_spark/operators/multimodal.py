@@ -2,10 +2,11 @@
 pipelines.
 
 Design: media are opaque ``binary`` columns with a typed metadata
-struct, processed by Arrow-batched ``mapInPandas`` kernels. The
-Spark-side plumbing — schemas, batch iteration, partition sizing,
-output contracts — is real and tested, and so are the codecs for the
-dependency-free formats:
+struct, processed by per-blob kernels that all run through
+:func:`blob_map` (one ``mapInPandas`` stage; see it for the batch,
+normalization and memo contract).  The Spark-side plumbing — schemas,
+partition sizing, output contracts — is real and tested, and so are
+the codecs for the dependency-free formats:
 
 - images: PNG (stdlib zlib), PPM/PGM, uncompressed 24-bit BMP, and
   baseline-sequential JPEG (vendored pure-NumPy T.81 codec,
@@ -30,9 +31,6 @@ Scale notes:
 - Media bytes dominate row size: keep ``spark.sql.files.maxPartitionBytes``
   small enough that a partition of blobs fits executor memory, or store
   blobs as paths + lazy-load inside the kernel (``content_col=None``).
-- ``mapInPandas`` streams record batches — peak memory is one Arrow
-  batch, not one partition; cap ``spark.sql.execution.arrow
-  .maxRecordsPerBatch`` (e.g. 64) for large blobs.
 - Feature extraction is embarrassingly parallel: no shuffle at all
   until the downstream groupBy/join.
 """
@@ -69,8 +67,8 @@ def task_blob_memo(max_entries: int = 64):
 
     Reserve it for kernels whose per-blob work clearly exceeds a hash
     of the payload (full decoders, frame composition); a memo wrapped
-    around an O(header) walk costs more than it saves (measured r13:
-    mm_jpeg_dims_scan 0.78x, s_tar_webdataset 0.74x — both reverted).
+    around an O(header) walk costs more than it saves (the JPEG marker
+    scan ran at 0.78x and the tar header walk at 0.74x with one).
 
     Keys: byte payloads above a small threshold are replaced by their
     128-bit BLAKE2 digest, so the cache never pins up to 64 full blobs
@@ -107,6 +105,76 @@ def task_blob_memo(max_entries: int = 64):
         return v
 
     return get
+
+
+def blob_map(
+    df: DataFrame,
+    schema: T.StructType,
+    fn,
+    *,
+    keys,
+    args,
+    memo: bool = False,
+) -> DataFrame:
+    """Run ``fn`` once per input row as ONE ``mapInPandas`` stage — the
+    batch loop every per-blob kernel (decoders, container walks,
+    archive explodes) shares.
+
+    ``fn(*values)`` gets the row's ``args`` columns and returns a list
+    of output-row dicts: ``[row]`` for a one-row kernel, ``[]`` to drop
+    the input row, k dicts to explode it.  The runner
+
+    - normalizes inputs with one rule: a BINARY value arrives as
+      ``bytes`` (NULL → ``b""``), a STRUCT as a ``dict`` (NULL → ``{}``);
+    - adds the row's ``keys`` columns to every output dict (a value
+      ``fn`` returns under a key's name wins);
+    - with ``memo=True`` computes ``fn`` once per distinct ``args``
+      tuple per task (:func:`task_blob_memo`);
+    - yields each batch in ``schema`` column order, so a batch with no
+      output rows still carries the schema's columns.
+
+    Only the ``keys`` and ``args`` columns are shipped to Python.  Peak
+    memory is one Arrow batch, not one partition: cap
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` (e.g. 64) for
+    large blobs.  No shuffle."""
+    keys, args = tuple(keys), tuple(args)
+    in_types = {f.name: f.dataType for f in df.schema.fields}
+    is_bin = [isinstance(in_types[c], T.BinaryType) for c in args]
+    is_struct = [isinstance(in_types[c], T.StructType) for c in args]
+    cols = [f.name for f in schema.fields]
+
+    def arg_column(pdf, c, b, s):
+        vals = pdf[c].tolist()
+        if b:
+            return [bytes(v or b"") for v in vals]
+        if s:
+            return [dict(v or {}) for v in vals]
+        return vals
+
+    def memo_key(vals):
+        return tuple(
+            tuple(sorted(v.items())) if s else v for v, s in zip(vals, is_struct)
+        )
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        cache = task_blob_memo() if memo else None
+        for pdf in batches:
+            arg_rows = zip(*(
+                arg_column(pdf, c, b, s) for c, b, s in zip(args, is_bin, is_struct)
+            ))
+            out = []
+            for kd, vals in zip(pdf[list(keys)].to_dict("records"), arg_rows):
+                rows = (
+                    fn(*vals) if cache is None
+                    else cache(memo_key(vals), lambda: fn(*vals))
+                )
+                out.extend({**kd, **r} for r in rows)
+            yield pd.DataFrame(out, columns=cols)
+
+    needed = dict.fromkeys(keys + args)
+    return df.select(
+        *[F.col("`" + c.replace("`", "``") + "`") for c in needed]
+    ).mapInPandas(kernel, schema)
 
 
 # ---------------------------------------------------------------------------
@@ -570,7 +638,7 @@ def _decode_tiff(content: bytes) -> np.ndarray:
     if 256 not in tags or 257 not in tags:
         # required tags absent: malformed input -> ValueError per the
         # module's error taxonomy (a bare KeyError would bypass the
-        # strict-mode contract — round-4 advisor finding)
+        # strict-mode contract)
         raise ValueError("malformed TIFF: missing ImageWidth/ImageLength")
     width = tags[256][0]
     height = tags[257][0]
@@ -932,9 +1000,9 @@ _IMAGE_DECODERS = {
     "tif": lambda c: _with_pil_fallback(_decode_tiff, c, "compressed/tiled TIFF"),
     "tiff": lambda c: _with_pil_fallback(_decode_tiff, c, "compressed/tiled TIFF"),
     "gif": lambda c: _with_pil_fallback(_decode_gif, c, "exotic GIF"),
-    # full still-WebP decode: VP8L lossless (round 10/11,
-    # operators/vp8lcodec.py) AND lossy VP8 keyframes incl. ALPH alpha
-    # (round 12, operators/vp8codec.py — RFC 6386, libwebp-differential
+    # full still-WebP decode: VP8L lossless (operators/vp8lcodec.py)
+    # AND lossy VP8 keyframes incl. ALPH alpha (operators/vp8codec.py
+    # — RFC 6386, libwebp-differential
     # bit-exact); only ANMF animation falls through to PIL when present
     "webp": lambda c: _with_pil_fallback(
         __import__(
@@ -1014,7 +1082,7 @@ def decode_image(content: bytes, meta: dict, *, strict: bool = False) -> np.ndar
 
 
 # ---------------------------------------------------------------------------
-# mapInPandas kernels
+# per-blob kernels (each one blob_map stage)
 # ---------------------------------------------------------------------------
 
 IMAGE_FEATURES_SCHEMA = T.StructType(
@@ -1033,40 +1101,20 @@ def image_features(df: DataFrame, *, strict: bool = False) -> DataFrame:
     aspect ratio, and a perceptual-hash-shaped digest (here: sha256 of
     the decoded/fake pixel grid — deterministic, so tests pin it)."""
 
-    def feats(content: bytes, meta: dict) -> tuple:
-        px = decode_image(content, dict(meta), strict=strict)
+    def feats(content: bytes, meta: dict) -> list:
+        px = decode_image(content, meta, strict=strict)
         h, w = px.shape[0], px.shape[1]
-        return (
-            float(px.mean()),
-            (w / h) if h else 0.0,
-            hashlib.sha256(px.tobytes()).hexdigest()[:16],
-        )
+        return [{
+            "n_bytes": len(content),
+            "mean_intensity": float(px.mean()),
+            "aspect_ratio": (w / h) if h else 0.0,
+            "phash": hashlib.sha256(px.tobytes()).hexdigest()[:16],
+        }]
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        memo = task_blob_memo()  # decode each distinct blob once/task
-        for pdf in batches:
-            out = []
-            for media_id, content, meta in zip(
-                pdf["media_id"], pdf["content"], pdf["meta"]
-            ):
-                meta = meta if isinstance(meta, dict) else (meta or {})
-                content = bytes(content or b"")
-                mean, aspect, phash = memo(
-                    (content, tuple(sorted(meta.items()))),
-                    lambda: feats(content, meta),
-                )
-                out.append(
-                    {
-                        "media_id": media_id,
-                        "n_bytes": len(content),
-                        "mean_intensity": mean,
-                        "aspect_ratio": aspect,
-                        "phash": phash,
-                    }
-                )
-            yield pd.DataFrame(out, columns=[f.name for f in IMAGE_FEATURES_SCHEMA.fields])
-
-    return df.mapInPandas(kernel, IMAGE_FEATURES_SCHEMA)
+    return blob_map(
+        df, IMAGE_FEATURES_SCHEMA, feats,
+        keys=["media_id"], args=["content", "meta"], memo=True,
+    )
 
 
 WEBP_YUV_STATS_SCHEMA = T.StructType(
@@ -1084,42 +1132,27 @@ WEBP_YUV_STATS_SCHEMA = T.StructType(
 def webp_yuv_stats(df: DataFrame) -> DataFrame:
     """REAL lossy-WebP decode to the NORMATIVE surface: per-blob 4:2:0
     plane means + dimensions via the vendored RFC 6386 VP8 keyframe
-    decoder (round 12, operators/vp8codec.py).  YUV (not RGB) because
+    decoder (operators/vp8codec.py).  YUV (not RGB) because
     the reconstruction is bit-exact across conformant decoders there —
     RGB conversion is a per-decoder convention.  Strict: a non-VP8 or
     corrupt blob raises.  Scale: mapInPandas per-blob kernel, zero
     shuffle."""
     from aroa_etl_spark.operators.vp8codec import decode_webp_vp8_yuv
 
-    def stats(content: bytes) -> tuple:
+    def stats(content: bytes) -> list:
         y, u, v = decode_webp_vp8_yuv(content)
-        return (
-            y.shape[1], y.shape[0],
-            float(y.mean()), float(u.mean()), float(v.mean()),
-        )
+        return [{
+            "width": y.shape[1],
+            "height": y.shape[0],
+            "mean_y": float(y.mean()),
+            "mean_u": float(u.mean()),
+            "mean_v": float(v.mean()),
+        }]
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        memo = task_blob_memo()  # decode each distinct blob once/task
-        for pdf in batches:
-            out = []
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                content = bytes(content)
-                w, h, my, mu, mv = memo(content, lambda: stats(content))
-                out.append(
-                    {
-                        "media_id": media_id,
-                        "width": w,
-                        "height": h,
-                        "mean_y": my,
-                        "mean_u": mu,
-                        "mean_v": mv,
-                    }
-                )
-            yield pd.DataFrame(
-                out, columns=[f.name for f in WEBP_YUV_STATS_SCHEMA.fields]
-            )
-
-    return df.mapInPandas(kernel, WEBP_YUV_STATS_SCHEMA)
+    return blob_map(
+        df, WEBP_YUV_STATS_SCHEMA, stats,
+        keys=["media_id"], args=["content"], memo=True,
+    )
 
 
 WEBP_ANIM_STATS_SCHEMA = T.StructType(
@@ -1135,7 +1168,7 @@ WEBP_ANIM_STATS_SCHEMA = T.StructType(
 
 
 def webp_anim_stats(df: DataFrame) -> DataFrame:
-    """REAL animated-WebP decode (round 12, operators/vp8codec.
+    """REAL animated-WebP decode (operators/vp8codec.
     decode_webp_anim): per-frame rows with the container metadata and
     the mean of the COMPOSITED canvas after each frame — dispose and
     blend applied per spec, so frame sampling for training data sees
@@ -1147,33 +1180,20 @@ def webp_anim_stats(df: DataFrame) -> DataFrame:
         anim = decode_webp_anim(content)
         n = len(anim["frames"])
         return [
-            (j, n, anim["loop_count"], f["duration_ms"],
-             float(f["canvas"].mean()))
+            {
+                "frame_idx": j,
+                "n_frames": n,
+                "loop_count": anim["loop_count"],
+                "duration_ms": f["duration_ms"],
+                "canvas_mean": float(f["canvas"].mean()),
+            }
             for j, f in enumerate(anim["frames"])
         ]
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        memo = task_blob_memo()  # decode each distinct blob once/task
-        for pdf in batches:
-            out = []
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                content = bytes(content)
-                for j, n, loop, dur, mean in memo(
-                    content, lambda: frames(content)
-                ):
-                    out.append({
-                        "media_id": media_id,
-                        "frame_idx": j,
-                        "n_frames": n,
-                        "loop_count": loop,
-                        "duration_ms": dur,
-                        "canvas_mean": mean,
-                    })
-            yield pd.DataFrame(
-                out, columns=[f.name for f in WEBP_ANIM_STATS_SCHEMA.fields]
-            )
-
-    return df.mapInPandas(kernel, WEBP_ANIM_STATS_SCHEMA)
+    return blob_map(
+        df, WEBP_ANIM_STATS_SCHEMA, frames,
+        keys=["media_id"], args=["content"], memo=True,
+    )
 
 
 def resize_images(df: DataFrame, *, width: int, height: int, strict: bool = False) -> DataFrame:
@@ -1182,34 +1202,25 @@ def resize_images(df: DataFrame, *, width: int, height: int, strict: bool = Fals
     rewrites the meta struct. Shows the full binary-in/binary-out
     mapInPandas contract."""
 
-    out_schema = media_table_schema(IMAGE_META)
+    def resize(content: bytes, meta: dict) -> list:
+        px = decode_image(content, meta, strict=strict)
+        ys = np.linspace(0, px.shape[0] - 1, height).astype(int)
+        xs = np.linspace(0, px.shape[1] - 1, width).astype(int)
+        resized = px[np.ix_(ys, xs)]
+        return [{
+            "content": resized.tobytes(),
+            "meta": {
+                "width": width,
+                "height": height,
+                "channels": int(resized.shape[2]),
+                "format": "raw",
+            },
+        }]
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                meta = dict(row["meta"] or {})
-                content = bytes(row["content"] or b"")
-                px = decode_image(content, meta, strict=strict)
-                ys = np.linspace(0, px.shape[0] - 1, height).astype(int)
-                xs = np.linspace(0, px.shape[1] - 1, width).astype(int)
-                resized = px[np.ix_(ys, xs)]
-                rows.append(
-                    {
-                        "media_id": row["media_id"],
-                        "uri": row["uri"],
-                        "content": resized.tobytes(),
-                        "meta": {
-                            "width": width,
-                            "height": height,
-                            "channels": int(resized.shape[2]),
-                            "format": "raw",
-                        },
-                    }
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
-
-    return df.mapInPandas(kernel, out_schema)
+    return blob_map(
+        df, media_table_schema(IMAGE_META), resize,
+        keys=["media_id", "uri"], args=["content", "meta"],
+    )
 
 
 FRAME_SAMPLE_SCHEMA = T.StructType(
@@ -1228,56 +1239,53 @@ def sample_video_frames(df: DataFrame, *, every_n: int = 30, strict: bool = Fals
     Real paths: ``meta.format == 'rawvideo'`` — content is concatenated
     uncompressed frames of ``width*height*channels`` bytes, and every
     n-th REAL frame is sliced out (the layout ffmpeg's ``rawvideo``
-    muxer writes); ``meta.format == 'avi'`` (round 8) — the RIFF movi
+    muxer writes); ``meta.format == 'avi'`` — the RIFF movi
     walk demuxes the real frame payloads (MJPEG: each is a complete
     JPEG; pair with :func:`video_frame_features` to also decode).
     Other container formats (mp4/mkv): ``strict=True`` raises;
     otherwise frame bytes are hash-derived fakes."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                meta = dict(row["meta"] or {})
-                fmt = (meta.get("format") or "").lower()
-                n_frames = int(meta.get("n_frames") or 0)
-                content = bytes(row["content"] or b"")
-                frame_bytes = (
-                    int(meta.get("width") or 0)
-                    * int(meta.get("height") or 0)
-                    * int(meta.get("channels") or 3)
-                )
-                raw = fmt == "rawvideo" and frame_bytes > 0
-                avi_frames = None
-                if fmt == "avi":
-                    try:
-                        avi_frames = demux_avi_frames(content, strict=strict)
-                        n_frames = len(avi_frames)
-                    except (ValueError, IndexError):
-                        # mislabeled/corrupt blob: strict raises, the
-                        # lenient contract falls back to fake frames
-                        if strict:
-                            raise
-                elif raw and n_frames == 0:
-                    n_frames = len(content) // frame_bytes
-                if strict and not raw and avi_frames is None:
-                    raise NotImplementedError(
-                        f"video format {fmt!r} has no real demuxer here; "
-                        "use format='rawvideo'/'avi' or strict=False"
-                    )
-                for i in range(0, n_frames, every_n):
-                    if avi_frames is not None:
-                        frame = avi_frames[i]
-                    elif raw:
-                        frame = content[i * frame_bytes : (i + 1) * frame_bytes]
-                    else:
-                        frame = hashlib.sha256(content + i.to_bytes(8, "little")).digest()
-                    rows.append(
-                        {"media_id": row["media_id"], "frame_index": i, "frame": frame}
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in FRAME_SAMPLE_SCHEMA.fields])
+    def sample(content: bytes, meta: dict) -> list:
+        fmt = (meta.get("format") or "").lower()
+        n_frames = int(meta.get("n_frames") or 0)
+        frame_bytes = (
+            int(meta.get("width") or 0)
+            * int(meta.get("height") or 0)
+            * int(meta.get("channels") or 3)
+        )
+        raw = fmt == "rawvideo" and frame_bytes > 0
+        avi_frames = None
+        if fmt == "avi":
+            try:
+                avi_frames = demux_avi_frames(content, strict=strict)
+                n_frames = len(avi_frames)
+            except (ValueError, IndexError):
+                # mislabeled/corrupt blob: strict raises, the lenient
+                # contract falls back to fake frames
+                if strict:
+                    raise
+        elif raw and n_frames == 0:
+            n_frames = len(content) // frame_bytes
+        if strict and not raw and avi_frames is None:
+            raise NotImplementedError(
+                f"video format {fmt!r} has no real demuxer here; "
+                "use format='rawvideo'/'avi' or strict=False"
+            )
+        rows = []
+        for i in range(0, n_frames, every_n):
+            if avi_frames is not None:
+                frame = avi_frames[i]
+            elif raw:
+                frame = content[i * frame_bytes : (i + 1) * frame_bytes]
+            else:
+                frame = hashlib.sha256(content + i.to_bytes(8, "little")).digest()
+            rows.append({"frame_index": i, "frame": frame})
+        return rows
 
-    return df.mapInPandas(kernel, FRAME_SAMPLE_SCHEMA)
+    return blob_map(
+        df, FRAME_SAMPLE_SCHEMA, sample,
+        keys=["media_id"], args=["content", "meta"],
+    )
 
 
 def attach_binary_from_ids(df: DataFrame, id_col: str = "media_id") -> DataFrame:
@@ -1411,7 +1419,7 @@ def _decode_ima_adpcm(
     """IMA ADPCM (WAV tag 0x11) → float32 mono waveform.  Block layout:
     4-byte header (int16 predictor, step index, reserved) then 4-bit
     codes two-per-byte, LOW nibble first; a header-only 4-byte final
-    block carries exactly one sample (round-6 review finding).
+    block carries exactly one sample.
     ``samples_per_block`` (the fmt extension's wSamplesPerBlock) caps
     each block and ``total_samples`` (the fact chunk) caps the stream —
     standard encoders zero-pad the final block to block_align, and
@@ -1665,40 +1673,24 @@ def resample_audio(
     PCM payload; the checksum is what makes the arithmetic verifiable
     cross-engine.  mapInPandas, no shuffle."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in AUDIO_RESAMPLE_SCHEMA.fields]
-        for pdf in batches:
-            out = []
-            for mid, content, meta in zip(
-                pdf["media_id"].to_numpy(),
-                pdf["content"].to_numpy(),
-                pdf["meta"].to_numpy(),
-            ):
-                meta = dict(meta) if isinstance(meta, dict) else dict(meta or {})
-                wave = decode_audio(bytes(content or b""), meta, strict=strict)
-                sr = int(meta.get("sample_rate") or 16000)
-                x = wave[:, 0].astype(np.float64)
-                n_in = x.shape[0]
-                n_out = n_in * target_rate // sr
-                pos = (np.arange(n_out, dtype=np.float64) * sr) / target_rate
-                idx = np.floor(pos).astype(np.int64)
-                frac = pos - idx
-                a = x[idx]
-                b = x[np.minimum(idx + 1, n_in - 1)]
-                v = a + (b - a) * frac
-                vsum = int(np.floor(v * 1e9 + 0.5).sum()) if n_out else 0
-                out.append(
-                    {
-                        "media_id": mid,
-                        "n_in": n_in,
-                        "n_out": int(n_out),
-                        "vsum_fp": vsum,
-                    }
-                )
-            yield pd.DataFrame(out, columns=cols)
+    def resample(content: bytes, meta: dict) -> list:
+        wave = decode_audio(content, meta, strict=strict)
+        sr = int(meta.get("sample_rate") or 16000)
+        x = wave[:, 0].astype(np.float64)
+        n_in = x.shape[0]
+        n_out = n_in * target_rate // sr
+        pos = (np.arange(n_out, dtype=np.float64) * sr) / target_rate
+        idx = np.floor(pos).astype(np.int64)
+        frac = pos - idx
+        a = x[idx]
+        b = x[np.minimum(idx + 1, n_in - 1)]
+        v = a + (b - a) * frac
+        vsum = int(np.floor(v * 1e9 + 0.5).sum()) if n_out else 0
+        return [{"n_in": n_in, "n_out": int(n_out), "vsum_fp": vsum}]
 
-    return df.select("media_id", "content", "meta").mapInPandas(
-        kernel, AUDIO_RESAMPLE_SCHEMA
+    return blob_map(
+        df, AUDIO_RESAMPLE_SCHEMA, resample,
+        keys=["media_id"], args=["content", "meta"],
     )
 
 
@@ -1708,27 +1700,21 @@ def audio_features(df: DataFrame, *, strict: bool = False) -> DataFrame:
     waveform — the audio leg of the modality triple, same streaming
     batch contract as image_features."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                meta = row["meta"] if isinstance(row["meta"], dict) else (row["meta"] or {})
-                content = bytes(row["content"] or b"")
-                wave = decode_audio(content, dict(meta), strict=strict)
-                sr = int(meta.get("sample_rate") or 16000)
-                n = wave.shape[0]
-                out.append(
-                    {
-                        "media_id": row["media_id"],
-                        "n_bytes": len(content),
-                        "duration_s": (n / sr) if sr else 0.0,
-                        "rms": float(np.sqrt(np.mean(wave**2))) if n else 0.0,
-                        "peak": float(np.abs(wave).max()) if n else 0.0,
-                    }
-                )
-            yield pd.DataFrame(out, columns=[f.name for f in AUDIO_FEATURES_SCHEMA.fields])
+    def feats(content: bytes, meta: dict) -> list:
+        wave = decode_audio(content, meta, strict=strict)
+        sr = int(meta.get("sample_rate") or 16000)
+        n = wave.shape[0]
+        return [{
+            "n_bytes": len(content),
+            "duration_s": (n / sr) if sr else 0.0,
+            "rms": float(np.sqrt(np.mean(wave**2))) if n else 0.0,
+            "peak": float(np.abs(wave).max()) if n else 0.0,
+        }]
 
-    return df.mapInPandas(kernel, AUDIO_FEATURES_SCHEMA)
+    return blob_map(
+        df, AUDIO_FEATURES_SCHEMA, feats,
+        keys=["media_id"], args=["content", "meta"],
+    )
 
 
 # --------------------------------------------------------------------------
@@ -1778,7 +1764,7 @@ def scan_mpeg_frames(df: DataFrame, *, strict: bool = True) -> DataFrame:
     strict=False skips garbage bytes forward to the next sync, the
     lenient mode for real crawl data."""
 
-    def _scan(content: bytes) -> tuple[int, int, int, int, int]:
+    def _scan(content: bytes) -> list:
         pos = 0
         id3_size = 0
         if content[:3] == b"ID3" and len(content) >= 10:
@@ -1807,8 +1793,8 @@ def scan_mpeg_frames(df: DataFrame, *, strict: bool = True) -> DataFrame:
             if (b1 & 0x18) != 0x18 or (b1 & 0x06) != 0x02:
                 # In lenient mode a false sync in garbage routinely has
                 # bad version/layer bits — that is resync fodder, not an
-                # unsupported file (review finding: raising here killed
-                # the very mode meant for crawl junk).
+                # unsupported file (raising here would kill the very
+                # mode meant for crawl junk).
                 if strict:
                     raise NotImplementedError(
                         "only MPEG-1 Layer III frames are supported "
@@ -1842,33 +1828,19 @@ def scan_mpeg_frames(df: DataFrame, *, strict: bool = True) -> DataFrame:
             pos += frame_len
         if strict and n_frames == 0:
             raise ValueError("no complete MPEG frames in file")
-        return n_frames, bitrate, rate, id3_size, len(content)
+        return [{
+            "n_frames": n_frames,
+            "bitrate_kbps": bitrate,
+            "sample_rate": rate,
+            "id3_size": id3_size,
+            "n_bytes": len(content),
+            "duration_us": n_frames * 1152 * 1_000_000 // rate if rate else 0,
+        }]
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        memo = task_blob_memo()  # walk each distinct blob once/task
-        for pdf in batches:
-            out = []
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                content = bytes(content or b"")
-                n_frames, br, sr, id3, total = memo(
-                    content, lambda: _scan(content)
-                )
-                out.append(
-                    {
-                        "media_id": media_id,
-                        "n_frames": n_frames,
-                        "bitrate_kbps": br,
-                        "sample_rate": sr,
-                        "id3_size": id3,
-                        "n_bytes": total,
-                        "duration_us": (
-                            n_frames * 1152 * 1_000_000 // sr if sr else 0
-                        ),
-                    }
-                )
-            yield pd.DataFrame(out, columns=[f.name for f in MPEG_SCAN_SCHEMA.fields])
-
-    return df.mapInPandas(kernel, MPEG_SCAN_SCHEMA)
+    return blob_map(
+        df, MPEG_SCAN_SCHEMA, _scan,
+        keys=["media_id"], args=["content"], memo=True,
+    )
 
 
 JPEG_SCAN_SCHEMA = T.StructType(
@@ -1961,32 +1933,23 @@ def scan_jpeg_markers(
         if keep_content else JPEG_SCAN_SCHEMA
     )
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # no task_blob_memo: the marker walk is O(header) — hashing the
-        # full payload per row to look it up costs more than the walk
-        # (r13 measured 0.78x with the memo; reverted r14)
-        for pdf in batches:
-            out = []
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                content = bytes(content or b"")
-                w, h, nc, prog = _scan(content)
-                rec = {
-                    "media_id": media_id,
-                    "width": w,
-                    "height": h,
-                    "n_components": nc,
-                    "progressive": prog,
-                    "n_bytes": len(content),
-                }
-                if keep_content:
-                    # scan-gate-then-decode pipelines filter on the
-                    # triage verdict and feed survivors straight to the
-                    # decode kernel without re-reading the blob
-                    rec["content"] = content
-                out.append(rec)
-            yield pd.DataFrame(out, columns=[f.name for f in out_schema.fields])
+    def scan(content: bytes) -> list:
+        w, h, nc, prog = _scan(content)
+        # scan-gate-then-decode pipelines filter on the triage verdict
+        # and feed survivors straight to the decode kernel without
+        # re-reading the blob (keep_content: the schema keeps "content")
+        return [{
+            "width": w,
+            "height": h,
+            "n_components": nc,
+            "progressive": prog,
+            "n_bytes": len(content),
+            "content": content,
+        }]
 
-    return df.mapInPandas(kernel, out_schema)
+    # no memo: the marker walk is O(header), cheaper than hashing the
+    # full payload per row to look it up
+    return blob_map(df, out_schema, scan, keys=["media_id"], args=["content"])
 
 
 MP4_SCAN_SCHEMA = T.StructType(
@@ -1998,7 +1961,7 @@ MP4_SCAN_SCHEMA = T.StructType(
         T.StructField("timescale", T.LongType()),
         T.StructField("duration_ms", T.LongType()),
         T.StructField("mdat_bytes", T.LongType()),
-        # sample-table-derived (r8 verdict ask #1): NULL/0 when the
+        # sample-table-derived: NULL/0 when the
         # file carries no video track with a complete stbl
         T.StructField("video_codec", T.StringType()),
         T.StructField("n_samples", T.LongType()),
@@ -2019,7 +1982,7 @@ def scan_mp4_boxes(df: DataFrame, *, strict: bool = True) -> DataFrame:
     (version 0 and 1 layouts — 32- vs 64-bit times) and the ``trak``
     count.
 
-    Sample-table columns (r8 verdict ask #1): when a video track with
+    Sample-table columns: when a video track with
     a complete stbl exists, ``video_codec`` is the stsd entry fourcc,
     ``n_samples`` the stsz sample count, and ``media_duration_ms`` the
     stts run-length SUM (count·delta over all runs) scaled by the mdhd
@@ -2123,16 +2086,10 @@ def scan_mp4_boxes(df: DataFrame, *, strict: bool = True) -> DataFrame:
             "media_duration_ms": stts_total * 1000 // mts if mts else 0,
         }
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                rec = _scan(bytes(row["content"] or b""))
-                rec["media_id"] = row["media_id"]
-                out.append(rec)
-            yield pd.DataFrame(out, columns=[f.name for f in MP4_SCAN_SCHEMA.fields])
-
-    return df.mapInPandas(kernel, MP4_SCAN_SCHEMA)
+    return blob_map(
+        df, MP4_SCAN_SCHEMA, lambda content: [_scan(content)],
+        keys=["media_id"], args=["content"],
+    )
 
 
 OGG_SCAN_SCHEMA = T.StructType(
@@ -2195,7 +2152,7 @@ def _iter_ogg_pages(content: bytes, strict: bool):
         if content[pos + 4] != 0:
             # lenient resync can land on a false 'OggS' inside body
             # bytes whose 5th byte is arbitrary — that is resync
-            # fodder, not an unsupported file (review finding)
+            # fodder, not an unsupported file
             if strict:
                 raise NotImplementedError(
                     f"Ogg version {content[pos + 4]} (only 0 exists)"
@@ -2272,16 +2229,10 @@ def scan_ogg_pages(df: DataFrame, *, strict: bool = True) -> DataFrame:
             "payload_bytes": payload_bytes,
         }
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                rec = _scan(bytes(row["content"] or b""))
-                rec["media_id"] = row["media_id"]
-                out.append(rec)
-            yield pd.DataFrame(out, columns=[f.name for f in OGG_SCAN_SCHEMA.fields])
-
-    return df.mapInPandas(kernel, OGG_SCAN_SCHEMA)
+    return blob_map(
+        df, OGG_SCAN_SCHEMA, lambda content: [_scan(content)],
+        keys=["media_id"], args=["content"],
+    )
 
 
 def build_ogg_page(
@@ -2389,7 +2340,7 @@ def scan_ogg_ident(df: DataFrame, *, strict: bool = True) -> DataFrame:
         if strict and bos_serial is None:
             # valid pages but no BOS (mid-stream capture): strict mode
             # must raise, not emit an empty-codec row that downstream
-            # filters would treat as identified (review finding)
+            # filters would treat as identified
             raise ValueError(
                 "no BOS page — mid-stream Ogg capture has no "
                 "identification header to parse"
@@ -2411,18 +2362,10 @@ def scan_ogg_ident(df: DataFrame, *, strict: bool = True) -> DataFrame:
             "duration_us": dur,
         }
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                rec = _scan(bytes(row["content"] or b""))
-                rec["media_id"] = row["media_id"]
-                out.append(rec)
-            yield pd.DataFrame(
-                out, columns=[f.name for f in OGG_IDENT_SCHEMA.fields]
-            )
-
-    return df.mapInPandas(kernel, OGG_IDENT_SCHEMA)
+    return blob_map(
+        df, OGG_IDENT_SCHEMA, lambda content: [_scan(content)],
+        keys=["media_id"], args=["content"],
+    )
 
 
 DHASH_SCHEMA = T.StructType(
@@ -2461,30 +2404,19 @@ def image_dhash(df: DataFrame, *, strict: bool = False) -> DataFrame:
     Scale: mapInPandas over the media table, zero shuffle; the decode
     is the cost, the hash is 72 samples per image."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                meta = row["meta"] if isinstance(row["meta"], dict) else (row["meta"] or {})
-                px = decode_image(
-                    bytes(row["content"] or b""), dict(meta), strict=strict
-                )
-                if px.shape[0] == 0 or px.shape[1] == 0:
-                    # a decodable zero-dimension image must degrade to a
-                    # sentinel, not IndexError the task (review finding)
-                    if strict:
-                        raise ValueError("zero-dimension image has no dhash")
-                    out.append({"media_id": row["media_id"], "dhash": ""})
-                    continue
-                out.append(
-                    {
-                        "media_id": row["media_id"],
-                        "dhash": _dhash_bits(px),
-                    }
-                )
-            yield pd.DataFrame(out, columns=[f.name for f in DHASH_SCHEMA.fields])
+    def dhash(content: bytes, meta: dict) -> list:
+        px = decode_image(content, meta, strict=strict)
+        if px.shape[0] == 0 or px.shape[1] == 0:
+            # a decodable zero-dimension image must degrade to a
+            # sentinel, not IndexError the task
+            if strict:
+                raise ValueError("zero-dimension image has no dhash")
+            return [{"dhash": ""}]
+        return [{"dhash": _dhash_bits(px)}]
 
-    return df.mapInPandas(kernel, DHASH_SCHEMA)
+    return blob_map(
+        df, DHASH_SCHEMA, dhash, keys=["media_id"], args=["content", "meta"]
+    )
 
 
 AUDIO_FP_SCHEMA = T.StructType(
@@ -2506,38 +2438,28 @@ def audio_fingerprint(df: DataFrame, *, strict: bool = False) -> DataFrame:
     bucket-then-verify shape as the image and MinHash paths.  Scale:
     decode + 65 samples per clip in mapInPandas, zero shuffle."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                meta = row["meta"] if isinstance(row["meta"], dict) else (row["meta"] or {})
-                wave = decode_audio(
-                    bytes(row["content"] or b""), dict(meta), strict=strict
-                )
-                if wave.shape[0] == 0:
-                    # a valid header with zero data frames must degrade
-                    # to a sentinel, not IndexError (review finding)
-                    if strict:
-                        raise ValueError("empty audio has no fingerprint")
-                    out.append({"media_id": row["media_id"], "afp": ""})
-                    continue
-                mono = wave[:, 0].astype("float64")
-                idx = np.linspace(0, len(mono) - 1, 65).astype(int)
-                g = mono[idx]
-                bits = (g[:-1] > g[1:]).astype(int)
-                out.append(
-                    {
-                        "media_id": row["media_id"],
-                        "afp": "".join(map(str, bits)),
-                    }
-                )
-            yield pd.DataFrame(out, columns=[f.name for f in AUDIO_FP_SCHEMA.fields])
+    def fingerprint(content: bytes, meta: dict) -> list:
+        wave = decode_audio(content, meta, strict=strict)
+        if wave.shape[0] == 0:
+            # a valid header with zero data frames must degrade to a
+            # sentinel, not IndexError
+            if strict:
+                raise ValueError("empty audio has no fingerprint")
+            return [{"afp": ""}]
+        mono = wave[:, 0].astype("float64")
+        idx = np.linspace(0, len(mono) - 1, 65).astype(int)
+        g = mono[idx]
+        bits = (g[:-1] > g[1:]).astype(int)
+        return [{"afp": "".join(map(str, bits))}]
 
-    return df.mapInPandas(kernel, AUDIO_FP_SCHEMA)
+    return blob_map(
+        df, AUDIO_FP_SCHEMA, fingerprint,
+        keys=["media_id"], args=["content", "meta"],
+    )
 
 
 # ---------------------------------------------------------------------------
-# RIFF/AVI container: MJPEG video decoded for REAL (r7 verdict ask #1).
+# RIFF/AVI container: MJPEG video decoded for REAL.
 #
 # The one modality still on the hash stub was video.  AVI is the
 # container whose video path needs nothing this repo doesn't already
@@ -2807,7 +2729,7 @@ def _parse_avi(content: bytes, *, strict: bool) -> dict:
                         # only a 'vids' strf is a BITMAPINFOHEADER (an
                         # audio WAVEFORMATEXTENSIBLE is also ≥40 bytes,
                         # and reading it as dims would report
-                        # width=nSamplesPerSec — review finding)
+                        # width=nSamplesPerSec)
                         cur_type = None
                         for c3, p3, s3 in _walk_riff(
                             content, p2 + 4, p2 + s2, strict=strict
@@ -2859,23 +2781,15 @@ def scan_avi_headers(df: DataFrame, *, strict: bool = True) -> DataFrame:
     mapInPandas, zero shuffle, O(#chunks) per blob; only header bytes
     are touched per chunk, so cost is header-bound, not payload-bound."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                content = bytes(row["content"] or b"")
-                try:
-                    rec = _parse_avi(content, strict=strict)
-                except (ValueError, IndexError):
-                    if strict:
-                        raise
-                    continue
-                rows.append({"media_id": row["media_id"], **rec})
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in AVI_SCAN_SCHEMA.fields]
-            )
+    def scan(content: bytes) -> list:
+        try:
+            return [_parse_avi(content, strict=strict)]
+        except (ValueError, IndexError):
+            if strict:
+                raise
+            return []
 
-    return df.mapInPandas(kernel, AVI_SCAN_SCHEMA)
+    return blob_map(df, AVI_SCAN_SCHEMA, scan, keys=["media_id"], args=["content"])
 
 
 def video_frame_features(
@@ -2894,15 +2808,13 @@ def video_frame_features(
     on long clips, and the triage scan (scan_avi_headers) routes
     non-MJPEG blobs away before this stage ever sees them."""
 
-    def decode_blob(content: bytes) -> "list[tuple] | None":
-        """Pure per-content demux+decode (media_id-free) so the task
-        memo can re-emit it for duplicated payloads."""
+    def decode_blob(content: bytes) -> list:
         try:
             frames = demux_avi_frames(content, strict=strict)
         except (ValueError, IndexError):
             if strict:
                 raise
-            return None  # lenient: a non-AVI blob yields no frames
+            return []  # lenient: a non-AVI blob yields no frames
         out = []
         for i in range(0, len(frames), every_n):
             try:
@@ -2911,41 +2823,23 @@ def video_frame_features(
                 if strict:
                     raise
                 continue
-            out.append(
-                (i, px.shape[1], px.shape[0],
-                 float(px.astype(np.float64).mean()))
-            )
+            out.append({
+                "frame_index": i,
+                "width": px.shape[1],
+                "height": px.shape[0],
+                "mean_intensity": float(px.astype(np.float64).mean()),
+            })
         return out
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        memo = task_blob_memo()  # decode each distinct blob once/task
-        for pdf in batches:
-            rows = []
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                content = bytes(content or b"")
-                frames = memo(content, lambda: decode_blob(content))
-                if frames is None:
-                    continue
-                for i, w, h, mean in frames:
-                    rows.append(
-                        {
-                            "media_id": media_id,
-                            "frame_index": i,
-                            "width": w,
-                            "height": h,
-                            "mean_intensity": mean,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in VIDEO_FRAME_FEATURE_SCHEMA.fields]
-            )
-
-    return df.mapInPandas(kernel, VIDEO_FRAME_FEATURE_SCHEMA)
+    return blob_map(
+        df, VIDEO_FRAME_FEATURE_SCHEMA, decode_blob,
+        keys=["media_id"], args=["content"], memo=True,
+    )
 
 
 # ---------------------------------------------------------------------------
 # Matroska/WebM (EBML) container triage — the sibling of the MP4 box
-# walk and the round-8 RIFF/AVI walk.  EBML's variable-length integers
+# walk and the RIFF/AVI walk.  EBML's variable-length integers
 # (RFC 8794: width signalled by the leading-zero count of the first
 # byte; element IDs keep the marker bit, sizes clear it) are the whole
 # parsing story; the element IDs used here (EBML header 1A45DFA3,
@@ -3012,8 +2906,7 @@ def _mkv_lace(frames: "list[bytes]", mode: str) -> bytes:
     elif mode == "ebml":
         flags = 0x06
         # per RFC the table holds n-1 entries: NONE for a single frame
-        # (writing a first-size entry anyway split that frame in two —
-        # review finding)
+        # (writing a first-size entry anyway splits that frame in two)
         table = _ebml_size(len(frames[0])) if n > 1 else b""
         prev = len(frames[0])
         for f in frames[1:-1]:
@@ -3024,9 +2917,8 @@ def _mkv_lace(frames: "list[bytes]", mode: str) -> bytes:
                     # the DECODER derives the bias from the encoded
                     # width, so the biased value must be written in
                     # EXACTLY width w — _ebml_size would re-minimize
-                    # the width and shift the bias (review finding:
-                    # a frame shrinking by >63 bytes corrupted the
-                    # stream)
+                    # the width and shift the bias (a frame shrinking
+                    # by >63 bytes would corrupt the stream)
                     v = delta + bias
                     b = v.to_bytes(w, "big")
                     table += bytes([b[0] | (1 << (8 - w))]) + b[1:]
@@ -3261,23 +3153,15 @@ def scan_mkv_headers(df: DataFrame, *, strict: bool = True) -> DataFrame:
     mapInPandas, zero shuffle, header-bound (block payloads are
     skipped by size arithmetic, never read)."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                content = bytes(row["content"] or b"")
-                try:
-                    rec = _parse_mkv(content, strict=strict)
-                except (ValueError, IndexError):
-                    if strict:
-                        raise
-                    continue
-                rows.append({"media_id": row["media_id"], **rec})
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in MKV_SCAN_SCHEMA.fields]
-            )
+    def scan(content: bytes) -> list:
+        try:
+            return [_parse_mkv(content, strict=strict)]
+        except (ValueError, IndexError):
+            if strict:
+                raise
+            return []
 
-    return df.mapInPandas(kernel, MKV_SCAN_SCHEMA)
+    return blob_map(df, MKV_SCAN_SCHEMA, scan, keys=["media_id"], args=["content"])
 
 
 VIDEO_DHASH_SCHEMA = T.StructType(
@@ -3303,38 +3187,25 @@ def video_dhash(df: DataFrame, *, every_n: int = 1, strict: bool = True) -> Data
     mapInPandas, zero shuffle here; one groupBy on the key
     downstream."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                content = bytes(row["content"] or b"")
-                try:
-                    frames = demux_avi_frames(content, strict=strict)
-                except (ValueError, IndexError):
-                    if strict:
-                        raise
-                    frames = []  # lenient: sentinel empty fingerprint
-                hashes = []
-                for i in range(0, len(frames), every_n):
-                    try:
-                        px = _decode_jpeg(frames[i])
-                    except (ValueError, NotImplementedError):
-                        if strict:
-                            raise
-                        continue
-                    hashes.append(_dhash_bits(px))
-                out.append(
-                    {
-                        "media_id": row["media_id"],
-                        "vhash": "|".join(hashes),
-                        "n_frames": len(frames),
-                    }
-                )
-            yield pd.DataFrame(
-                out, columns=[f.name for f in VIDEO_DHASH_SCHEMA.fields]
-            )
+    def vhash(content: bytes) -> list:
+        try:
+            frames = demux_avi_frames(content, strict=strict)
+        except (ValueError, IndexError):
+            if strict:
+                raise
+            frames = []  # lenient: sentinel empty fingerprint
+        hashes = []
+        for i in range(0, len(frames), every_n):
+            try:
+                px = _decode_jpeg(frames[i])
+            except (ValueError, NotImplementedError):
+                if strict:
+                    raise
+                continue
+            hashes.append(_dhash_bits(px))
+        return [{"vhash": "|".join(hashes), "n_frames": len(frames)}]
 
-    return df.mapInPandas(kernel, VIDEO_DHASH_SCHEMA)
+    return blob_map(df, VIDEO_DHASH_SCHEMA, vhash, keys=["media_id"], args=["content"])
 
 
 AVI_AUDIO_SCHEMA = T.StructType(
@@ -3365,46 +3236,39 @@ def avi_audio_features(df: DataFrame, *, strict: bool = True) -> DataFrame:
     shuffle; payload cost is linear in audio bytes, video frames are
     skipped by chunk-size arithmetic."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                content = bytes(row["content"] or b"")
-                try:
-                    chunks = demux_avi_audio(content, strict=strict)
-                except (ValueError, IndexError):
-                    if strict:
-                        raise
-                    chunks = []  # lenient: zero-sample sentinel row
-                raw = b"".join(chunks)
-                if len(raw) % 2:
-                    if strict:
-                        raise ValueError(
-                            "PCM s16le stream has an odd byte count"
-                        )
-                    raw = raw[:-1]
-                samples = np.frombuffer(raw, dtype="<i2").astype(np.int64)
-                rows.append(
-                    {
-                        "media_id": row["media_id"],
-                        "n_chunks": len(chunks),
-                        "n_samples": int(samples.size),
-                        "peak_raw": int(np.abs(samples).max()) if samples.size else 0,
-                        "sum_raw": int(samples.sum()),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in AVI_AUDIO_SCHEMA.fields]
-            )
+    def feats(content: bytes) -> list:
+        try:
+            chunks = demux_avi_audio(content, strict=strict)
+        except (ValueError, IndexError):
+            if strict:
+                raise
+            chunks = []  # lenient: zero-sample sentinel row
+        raw = b"".join(chunks)
+        if len(raw) % 2:
+            if strict:
+                raise ValueError("PCM s16le stream has an odd byte count")
+            raw = raw[:-1]
+        return [_pcm_s16_stats(chunks, raw)]
 
-    return df.mapInPandas(kernel, AVI_AUDIO_SCHEMA)
+    return blob_map(df, AVI_AUDIO_SCHEMA, feats, keys=["media_id"], args=["content"])
+
+
+def _pcm_s16_stats(chunks: list, raw: bytes) -> dict:
+    """Exact integer statistics of a PCM s16le payload demuxed from
+    ``chunks`` — the row the AVI and MP4 audio extractors share."""
+    samples = np.frombuffer(raw, dtype="<i2").astype(np.int64)
+    return {
+        "n_chunks": len(chunks),
+        "n_samples": int(samples.size),
+        "peak_raw": int(np.abs(samples).max()) if samples.size else 0,
+        "sum_raw": int(samples.sum()),
+    }
 
 
 # ---------------------------------------------------------------------------
 # ISO BMFF (MP4/QuickTime) — stdlib mux, sample-table demux, real decode
 # ---------------------------------------------------------------------------
-# The round-8 verdict's top gap: scan_mp4_boxes walks the box tree but
-# nothing extracted frames.  The demux below implements the published
+# scan_mp4_boxes walks the box tree; the demux below implements the published
 # ISO/IEC 14496-12 sample-table arithmetic — stsd (codec), stts (decode
 # times), stsc (sample->chunk mapping), stsz (sizes), stco/co64 (chunk
 # offsets) — and composes with the vendored JPEG codec for 'jpeg'
@@ -3984,18 +3848,15 @@ def mp4_video_frame_features(
     scan_mp4_boxes is the triage gate that routes non-MJPEG files
     away before this stage."""
 
-    def decode_blob(content: bytes) -> "list[tuple] | None":
-        """Pure per-content demux+decode: list of frame-feature tuples
-        (or None for skip under lenient mode) — media_id-free so the
-        task memo can re-emit it for duplicated payloads."""
+    def decode_blob(content: bytes) -> list:
         try:
             rec = _parse_mp4_samples(content, strict=strict)
         except (ValueError, IndexError, NotImplementedError):
             if strict:
                 raise
-            return None
+            return []
         if rec is None:
-            return None
+            return []
         mts = rec["media_timescale"] or 1
         idxs = range(len(rec["samples"]))
         if keyframes_only and rec.get("sync") is not None:
@@ -4017,37 +3878,19 @@ def mp4_video_frame_features(
                 if strict:
                     raise
                 continue
-            frames.append(
-                (i, dts * 1000 // mts, px.shape[1], px.shape[0],
-                 float(px.astype(np.float64).mean()))
-            )
+            frames.append({
+                "frame_index": i,
+                "pts_ms": dts * 1000 // mts,
+                "width": px.shape[1],
+                "height": px.shape[0],
+                "mean_intensity": float(px.astype(np.float64).mean()),
+            })
         return frames
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        memo = task_blob_memo()  # decode each distinct blob once/task
-        for pdf in batches:
-            rows = []
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                content = bytes(content or b"")
-                frames = memo(content, lambda: decode_blob(content))
-                if frames is None:
-                    continue
-                for i, pts_ms, w, h, mean in frames:
-                    rows.append(
-                        {
-                            "media_id": media_id,
-                            "frame_index": i,
-                            "pts_ms": pts_ms,
-                            "width": w,
-                            "height": h,
-                            "mean_intensity": mean,
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in MP4_FRAME_FEATURE_SCHEMA.fields]
-            )
-
-    return df.mapInPandas(kernel, MP4_FRAME_FEATURE_SCHEMA)
+    return blob_map(
+        df, MP4_FRAME_FEATURE_SCHEMA, decode_blob,
+        keys=["media_id"], args=["content"], memo=True,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -4058,7 +3901,7 @@ def mp4_video_frame_features(
 def demux_mkv_frames(
     content: bytes, *, strict: bool = True
 ) -> "tuple[str | None, list[tuple[bytes, int]]]":
-    """The EBML demux half (r8 verdict ask #2): (video_codec,
+    """The EBML demux half: (video_codec,
     [(frame_bytes, pts_ticks), ...]) for the FIRST video track —
     extends the triage-level EBML walk (scan_mkv_headers) into
     Cluster/SimpleBlock frame extraction.  pts_ticks is the cluster
@@ -4153,8 +3996,8 @@ def demux_mkv_frames(
                     sizes.append(s)
             elif lacing == 0x06:  # EBML
                 # the table holds n-1 entries: a single-frame laced
-                # block has NO first-size entry (review finding: the
-                # unconditional read split the frame in two)
+                # block has NO first-size entry (an unconditional read
+                # would split the frame in two)
                 if n_lace > 1:
                     first, q = _read_vint(content, q, keep_marker=False)
                     if first is None:
@@ -4232,50 +4075,42 @@ def mkv_video_frame_features(
     mapInPandas over the (typically broadcast) blob column, zero
     shuffle; every_n bounds decode cost on long clips."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                content = bytes(row["content"] or b"")
-                try:
-                    codec, frames = demux_mkv_frames(content, strict=strict)
-                except (ValueError, IndexError):
-                    if strict:
-                        raise
-                    continue
-                if codec != "V_MJPEG":
-                    if strict:
-                        raise NotImplementedError(
-                            f"MKV video codec {codec!r} — only V_MJPEG "
-                            "decodes in this sandbox; route others via "
-                            "scan_mkv_headers triage"
-                        )
-                    continue
-                for i in range(0, len(frames), every_n):
-                    payload, pts = frames[i]
-                    try:
-                        px = _decode_jpeg(payload)
-                    except (ValueError, NotImplementedError):
-                        if strict:
-                            raise
-                        continue
-                    rows.append(
-                        {
-                            "media_id": row["media_id"],
-                            "frame_index": i,
-                            "pts_ticks": pts,
-                            "width": px.shape[1],
-                            "height": px.shape[0],
-                            "mean_intensity": float(
-                                px.astype(np.float64).mean()
-                            ),
-                        }
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in MKV_FRAME_FEATURE_SCHEMA.fields]
-            )
+    def decode_blob(content: bytes) -> list:
+        try:
+            codec, frames = demux_mkv_frames(content, strict=strict)
+        except (ValueError, IndexError):
+            if strict:
+                raise
+            return []
+        if codec != "V_MJPEG":
+            if strict:
+                raise NotImplementedError(
+                    f"MKV video codec {codec!r} — only V_MJPEG "
+                    "decodes in this sandbox; route others via "
+                    "scan_mkv_headers triage"
+                )
+            return []
+        rows = []
+        for i in range(0, len(frames), every_n):
+            payload, pts = frames[i]
+            try:
+                px = _decode_jpeg(payload)
+            except (ValueError, NotImplementedError):
+                if strict:
+                    raise
+                continue
+            rows.append({
+                "frame_index": i,
+                "pts_ticks": pts,
+                "width": px.shape[1],
+                "height": px.shape[0],
+                "mean_intensity": float(px.astype(np.float64).mean()),
+            })
+        return rows
 
-    return df.mapInPandas(kernel, MKV_FRAME_FEATURE_SCHEMA)
+    return blob_map(
+        df, MKV_FRAME_FEATURE_SCHEMA, decode_blob, keys=["media_id"], args=["content"]
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -4368,7 +4203,7 @@ MP3_WALK_SCHEMA = T.StructType(
 
 
 def _walk_mp3(content: bytes, *, strict: bool) -> "dict | None":
-    """Complete frame walk (r8 verdict ask #5): every frame's bitrate
+    """Complete frame walk: every frame's bitrate
     from its own header (no CBR assumption), frame lengths from the
     public 144000·br//sr + padding arithmetic, and the frame-0 VBR tag
     (Xing/Info at the post-side-info offset by channel mode, VBRI at
@@ -4473,7 +4308,7 @@ def _walk_mp3(content: bytes, *, strict: bool) -> "dict | None":
 
 
 def mp3_frame_walk(df: DataFrame, *, strict: bool = True) -> DataFrame:
-    """MP3 COMPLETE frame walk (r8 verdict ask #5) — upgrades the
+    """MP3 COMPLETE frame walk — upgrades the
     first-sync triage of :func:`scan_mpeg_frames` to per-frame truth:
     VBR detection and min/max bitrate from every frame's own header,
     exact byte totals, the integer average bitrate, and the Xing/Info/
@@ -4484,19 +4319,11 @@ def mp3_frame_walk(df: DataFrame, *, strict: bool = True) -> DataFrame:
     blobs with zero complete frames are dropped.  Scale: mapInPandas,
     zero shuffle, O(n_frames) per blob, header bytes only."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                rec = _walk_mp3(bytes(row["content"] or b""), strict=strict)
-                if rec is None:
-                    continue
-                rows.append({"media_id": row["media_id"], **rec})
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in MP3_WALK_SCHEMA.fields]
-            )
+    def walk(content: bytes) -> list:
+        rec = _walk_mp3(content, strict=strict)
+        return [] if rec is None else [rec]
 
-    return df.mapInPandas(kernel, MP3_WALK_SCHEMA)
+    return blob_map(df, MP3_WALK_SCHEMA, walk, keys=["media_id"], args=["content"])
 
 
 def _parse_trak_audio(content: bytes, tb: int, te: int) -> "dict | None":
@@ -4635,33 +4462,16 @@ def mp4_audio_features(df: DataFrame, *, strict: bool = True) -> DataFrame:
     mapInPandas, zero shuffle; the chunk walk is O(#chunks), video
     frames are never touched."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                content = bytes(row["content"] or b"")
-                try:
-                    chunks = demux_mp4_audio(content, strict=strict)
-                except (ValueError, IndexError, NotImplementedError):
-                    if strict:
-                        raise
-                    chunks = []
-                raw = b"".join(chunks)
-                samples = np.frombuffer(raw, dtype="<i2").astype(np.int64)
-                rows.append(
-                    {
-                        "media_id": row["media_id"],
-                        "n_chunks": len(chunks),
-                        "n_samples": int(samples.size),
-                        "peak_raw": int(np.abs(samples).max()) if samples.size else 0,
-                        "sum_raw": int(samples.sum()),
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in AVI_AUDIO_SCHEMA.fields]
-            )
+    def feats(content: bytes) -> list:
+        try:
+            chunks = demux_mp4_audio(content, strict=strict)
+        except (ValueError, IndexError, NotImplementedError):
+            if strict:
+                raise
+            chunks = []
+        return [_pcm_s16_stats(chunks, b"".join(chunks))]
 
-    return df.mapInPandas(kernel, AVI_AUDIO_SCHEMA)
+    return blob_map(df, AVI_AUDIO_SCHEMA, feats, keys=["media_id"], args=["content"])
 
 
 # ---------------------------------------------------------------------------
@@ -4828,7 +4638,7 @@ def _parse_mp4_fragments(content: bytes, trak_rec: dict) -> dict:
                 need = 12 if ver == 1 else 8
                 if de - db < need:
                     # silent reads past the box handed a bogus base
-                    # time to every sample (review finding)
+                    # time to every sample
                     raise ValueError(
                         f"tfdt v{ver} body too small ({de - db} < {need})"
                     )
@@ -4945,7 +4755,7 @@ def parse_id3v2_text_frames(content: bytes) -> "list[tuple[str, str]]":
     and 3 (UTF-8) decode; non-text frames are skipped by size
     arithmetic; a zero frame-id byte ends the walk (padding).  v2.2
     uses its own 3-byte id / 3-byte size layout (misreading it with
-    v2.3 arithmetic yields garbage — review finding); ids are reported
+    v2.3 arithmetic yields garbage); ids are reported
     as written ('TT2' under v2.2, 'TIT2' later).  Returns [] when no
     ID3v2 tag — or a version this parser does not know — leads the
     blob."""
@@ -5035,27 +4845,16 @@ def mp3_id3_tags(df: DataFrame, *, strict: bool = True) -> DataFrame:
     no rows (that is data, not an error).  Scale: mapInPandas, zero
     shuffle, O(tag bytes) per blob — audio frames are never touched."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                content = bytes(row["content"] or b"")
-                try:
-                    pairs = parse_id3v2_text_frames(content)
-                except (ValueError, IndexError):
-                    if strict:
-                        raise
-                    continue
-                for fid, val in pairs:
-                    rows.append(
-                        {"media_id": row["media_id"], "frame_id": fid,
-                         "value": val}
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in ID3_SCHEMA.fields]
-            )
+    def tags(content: bytes) -> list:
+        try:
+            pairs = parse_id3v2_text_frames(content)
+        except (ValueError, IndexError):
+            if strict:
+                raise
+            return []
+        return [{"frame_id": fid, "value": val} for fid, val in pairs]
 
-    return df.mapInPandas(kernel, ID3_SCHEMA)
+    return blob_map(df, ID3_SCHEMA, tags, keys=["media_id"], args=["content"])
 
 
 # ---------------------------------------------------------------------------
@@ -5238,16 +5037,10 @@ def scan_webp(df: DataFrame, *, strict: bool = True) -> DataFrame:
             return fail(f"unknown leading chunk {fourcc!r}")
         return out
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                rec = _scan(bytes(row["content"] or b""))
-                rec["media_id"] = row["media_id"]
-                out.append(rec)
-            yield pd.DataFrame(out, columns=[f.name for f in WEBP_SCAN_SCHEMA.fields])
-
-    return df.mapInPandas(kernel, WEBP_SCAN_SCHEMA)
+    return blob_map(
+        df, WEBP_SCAN_SCHEMA, lambda content: [_scan(content)],
+        keys=["media_id"], args=["content"],
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -5362,18 +5155,10 @@ def audio_silence_segments(
             "kept_ms": kept * frame_len * 1000 // sr if sr else 0,
         }
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                rec = _scan(bytes(row["content"] or b""))
-                rec["media_id"] = row["media_id"]
-                out.append(rec)
-            yield pd.DataFrame(
-                out, columns=[f.name for f in SILENCE_SCAN_SCHEMA.fields]
-            )
-
-    return df.mapInPandas(kernel, SILENCE_SCAN_SCHEMA)
+    return blob_map(
+        df, SILENCE_SCAN_SCHEMA, lambda content: [_scan(content)],
+        keys=["media_id"], args=["content"],
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -5513,18 +5298,7 @@ def scan_ogg_comments(df: DataFrame, *, strict: bool = True) -> DataFrame:
             return fail(str(e))
         return rows
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                for rec in _scan(bytes(row["content"] or b"")):
-                    rec["media_id"] = row["media_id"]
-                    out.append(rec)
-            yield pd.DataFrame(
-                out, columns=[f.name for f in OGG_COMMENT_SCHEMA.fields]
-            )
-
-    return df.mapInPandas(kernel, OGG_COMMENT_SCHEMA)
+    return blob_map(df, OGG_COMMENT_SCHEMA, _scan, keys=["media_id"], args=["content"])
 
 
 def build_comment_packet(
@@ -5579,37 +5353,25 @@ def image_entropy(df: DataFrame, *, strict: bool = False) -> DataFrame:
     double.  Scale: mapInPandas over the media table, zero shuffle, one
     bincount per image."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                meta = row["meta"] if isinstance(row["meta"], dict) else (row["meta"] or {})
-                content = bytes(row["content"] or b"")
-                px = decode_image(content, dict(meta), strict=strict)
-                ch = px.shape[2] if px.ndim == 3 else 1
-                luma = (
-                    px.reshape(-1, ch).astype(np.int64).sum(axis=1) // ch
-                )
-                n = int(luma.size)
-                counts = np.bincount(luma, minlength=256)
-                nz = counts[counts > 0].astype(np.float64)
-                terms = np.rint(
-                    1e9 * nz * np.log2(n / nz) / n
-                ).astype(np.int64)
-                efp = int(terms.sum())
-                out.append(
-                    {
-                        "media_id": row["media_id"],
-                        "n_pixels": n,
-                        "n_distinct": int((counts > 0).sum()),
-                        "v_min": int(luma.min()) if n else None,
-                        "v_max": int(luma.max()) if n else None,
-                        "entropy_fp": efp,
-                        "entropy_bits": round(efp / 1e9, 6),
-                    }
-                )
-            yield pd.DataFrame(
-                out, columns=[f.name for f in IMAGE_ENTROPY_SCHEMA.fields]
-            )
+    def entropy(content: bytes, meta: dict) -> list:
+        px = decode_image(content, meta, strict=strict)
+        ch = px.shape[2] if px.ndim == 3 else 1
+        luma = px.reshape(-1, ch).astype(np.int64).sum(axis=1) // ch
+        n = int(luma.size)
+        counts = np.bincount(luma, minlength=256)
+        nz = counts[counts > 0].astype(np.float64)
+        terms = np.rint(1e9 * nz * np.log2(n / nz) / n).astype(np.int64)
+        efp = int(terms.sum())
+        return [{
+            "n_pixels": n,
+            "n_distinct": int((counts > 0).sum()),
+            "v_min": int(luma.min()) if n else None,
+            "v_max": int(luma.max()) if n else None,
+            "entropy_fp": efp,
+            "entropy_bits": round(efp / 1e9, 6),
+        }]
 
-    return df.mapInPandas(kernel, IMAGE_ENTROPY_SCHEMA)
+    return blob_map(
+        df, IMAGE_ENTROPY_SCHEMA, entropy,
+        keys=["media_id"], args=["content", "meta"],
+    )

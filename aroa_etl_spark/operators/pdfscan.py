@@ -18,8 +18,7 @@ header names the object at the recorded index) — a single corrupted
 offset (bit rot, truncated upload) fails loudly instead of producing
 a plausible-looking row.
 
-Round 10 closed the PDF 1.5+ boundary: BOTH cross-reference layouts
-parse now —
+Both PDF 1.5+ cross-reference layouts parse —
 
 - classic tables, including multi-subsection bodies and ``/Prev``
   chains from incremental updates (newest section wins per object);
@@ -34,13 +33,12 @@ parse now —
   so catalogs/page dicts compressed into object streams triage and
   extract like direct objects.
 
-Object lookup for text extraction is XREF-DRIVEN (the round-10
-advisor fix): bodies are sliced at their recorded offsets instead of
-regex-scanned across the whole blob, so compressed-stream bytes that
-happen to contain ``N 0 obj`` can never shadow a real object.
+Object lookup for text extraction is XREF-DRIVEN: bodies are sliced
+at their recorded offsets instead of regex-scanned across the whole
+blob, so compressed-stream bytes that happen to contain ``N 0 obj``
+can never shadow a real object.
 
-Round 11 closed the two boundaries the round-10 verdict ranked
-highest:
+Encryption and CID text are handled too:
 
 - ENCRYPTION (ISO 32000 §7.6 standard security handler, via
   operators/pdfcrypt.py): the triage scanner authenticates the EMPTY
@@ -54,10 +52,10 @@ highest:
 - Type0/CID TEXT (§9.10.3): show strings under an Identity-H Type0
   font decode as 2-byte codes through the font's /ToUnicode CMap
   (bfchar + bfrange, multi-unit UTF-16BE dsts incl. surrogate pairs),
-  with ``Tf`` font switching tracked sequentially.  Round 12 adds
-  PREDEFINED CMaps of the Uni*-UCS2/UTF16 families (UniGB-UCS2-H and
-  friends — the CJK crawl case): their codes are UTF-16BE by the
-  public CMap definition, so text extracts with no registry tables.
+  with ``Tf`` font switching tracked sequentially.  PREDEFINED CMaps
+  of the Uni*-UCS2/UTF16 families (UniGB-UCS2-H and friends — the CJK
+  crawl case) decode too: their codes are UTF-16BE by the public CMap
+  definition, so text extracts with no registry tables.
   Identity-H (or any other predefined CMap) WITHOUT /ToUnicode stays
   a named boundary — those codes are bare CIDs.
 
@@ -66,19 +64,20 @@ writers computing real offsets; both emit the classic layout AND the
 xref-stream/objstm layout (``xref_stream=True``) so the catalog
 oracle replays every field from construction arithmetic across both.
 
-Scale: mapInPandas over the media table, zero shuffle, O(header+xref)
-bytes per blob for triage — content streams are only read by the text
-extractor.
+Both operators are per-blob kernels run by
+:func:`aroa_etl_spark.operators.multimodal.blob_map` (see it for the
+batch and memo contract): zero shuffle, O(header+xref) bytes per blob
+for triage — content streams are only read by the text extractor.
 """
 
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from aroa_etl_spark.operators.multimodal import blob_map
 
 __all__ = [
     "PDF_SCAN_SCHEMA",
@@ -106,7 +105,7 @@ PDF_SCAN_SCHEMA = T.StructType(
 _OBJ_RE = re.compile(rb"(\d+) 0 obj")
 
 
-# --- xref / object-stream infrastructure (round 10) -------------------------
+# --- xref / object-stream infrastructure ------------------------------------
 
 def _png_unpredict(data: bytes, predictor: int, columns: int) -> bytes:
     """Reverse the PNG row predictors (ISO 32000 §7.4.4.4 delegates to
@@ -220,8 +219,8 @@ def _parse_xref_at(content: bytes, at: int):
     entries: obj_num -> ('n', offset, gen) | ('f',) | ('s', objstm_num,
     idx).  The in-use generation rides along because RC4/AES-128 object
     keys are salted with (num, gen) — hardcoding gen 0 silently
-    mis-decrypts a gen>0 object (advice finding, r12; objects inside an
-    ObjStm are gen 0 by spec).  Classic tables read every subsection up
+    mis-decrypts a gen>0 object (objects inside an ObjStm are gen 0 by
+    spec).  Classic tables read every subsection up
     to the ``trailer`` keyword; xref streams decode /W-described
     big-endian rows over /Index."""
     if content[at:at + 4] == b"xref":
@@ -404,7 +403,7 @@ def _object_bytes(
     return body
 
 
-# --- encryption (round 11: ISO 32000 standard security handler) --------------
+# --- encryption (ISO 32000 standard security handler) -----------------------
 
 _OCTAL_RE = re.compile(rb"\\([0-7]{1,3})")
 _CTRL_ESCAPES = {
@@ -537,9 +536,8 @@ def _make_decryptor(ctx, entries: "dict | None" = None):
     """(obj_num, raw) -> plaintext decryptor bound to a context from
     ``_encryption_context``.  RC4/AES-128 object keys are salted with
     (num, gen): the per-object generation from the xref rides along via
-    ``entries`` (advice finding, r12 — gen was hardcoded 0, silently
-    mis-decrypting gen>0 objects; V5 is unaffected, its file key is
-    object-independent)."""
+    ``entries`` (a hardcoded gen 0 silently mis-decrypts gen>0
+    objects; V5 is unaffected, its file key is object-independent)."""
     from aroa_etl_spark.operators.pdfcrypt import decrypt_data, object_key
 
     gens = _generation_map(entries) if entries else {}
@@ -553,7 +551,7 @@ def _make_decryptor(ctx, entries: "dict | None" = None):
     return dec
 
 
-# --- Type0/CID text via ToUnicode CMaps (round 11) ----------------------------
+# --- Type0/CID text via ToUnicode CMaps --------------------------------------
 
 _MAX_CMAP_ENTRIES = 1 << 20  # corrupt-range guard
 
@@ -589,9 +587,9 @@ def _parse_tounicode(data: bytes) -> "dict[int, str]":
                 raise ValueError("pdf: ToUnicode bfrange out of bounds")
             if rm.group(3) is not None:
                 h = rm.group(3)
-                # at least one UTF-16 code unit (review finding r11:
-                # the old max() applied before //2, flooring 2-digit
-                # dsts to width 1 and mis-decoding the whole range)
+                # at least one UTF-16 code unit (applying max() before
+                # //2 floors 2-digit dsts to width 1 and mis-decodes
+                # the whole range)
                 width = max(2, (len(h) + len(h) % 2) // 2)
                 base = int(h, 16) if h else 0
                 for c in range(lo, hi + 1):
@@ -680,7 +678,7 @@ def _page_fonts(content, entries, page_body, cache, dec):
             continue
         tum = re.search(rb"/ToUnicode\s+(\d+)\s+0\s+R", fbody)
         if not tum:
-            # predefined CMaps (round 12, §9.7.5): the Uni*-UCS2-* /
+            # predefined CMaps (§9.7.5): the Uni*-UCS2-* /
             # Uni*-UTF16-* families (UniGB-UCS2-H, UniJIS-UTF16-H, …,
             # the common CJK crawl case) map FROM Unicode — their
             # show-string codes ARE UTF-16BE text, no registry tables
@@ -725,7 +723,7 @@ def _shown_parts_with_fonts(data: bytes, fonts: dict) -> "list[str]":
 
     def one(lit, hexs, cmap):
         raw = _pdf_string_bytes(lit) if lit is not None else _hex_bytes(hexs)
-        if cmap == "utf16":  # predefined Uni*-UCS2/UTF16 CMap (round 12)
+        if cmap == "utf16":  # predefined Uni*-UCS2/UTF16 CMap
             return raw.decode("utf-16-be", "replace")
         if cmap is not None:
             return _decode_cid_string(raw, cmap)
@@ -880,7 +878,7 @@ def build_pdf(
     layout — dict objects packed into an object stream (``objstm=
     False`` keeps them direct) and a FlateDecode xref stream with PNG
     ``/Predictor 12`` by default.  ``encrypted=True`` emits a REAL
-    /Encrypt dict (round 11: empty user+owner passwords, ``crypt`` in
+    /Encrypt dict (empty user+owner passwords, ``crypt`` in
     rc4/aesv2/aesv3 — operators/pdfcrypt.py computes the actual /O //U
     material and, in the objstm layout, the object stream payload is
     genuinely encrypted with its object key).  Real offsets either
@@ -965,7 +963,7 @@ def _scan_blob(content: bytes, strict: bool) -> dict:
     except ValueError as e:
         return fail(str(e).removeprefix("pdf: "))
     enc = 1 if re.search(rb"/Encrypt\b", trailer) else 0
-    # empty-user-password authentication (round 11): 'readable' is the
+    # empty-user-password authentication: 'readable' is the
     # triage gate's real question — can text extraction proceed with no
     # password?  Unencrypted PDFs are trivially readable; a locked one
     # (real password) reports 0 WITHOUT raising, that is data.
@@ -1029,21 +1027,10 @@ def scan_pdf_structure(df: DataFrame, *, strict: bool = True) -> DataFrame:
     """PDF triage rows (see module docstring) from a
     (media_id, content binary) frame."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from aroa_etl_spark.operators.multimodal import task_blob_memo
-
-        memo = task_blob_memo()  # walk each distinct blob once/task
-        for pdf in batches:
-            out = []
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                content = bytes(content or b"")
-                rec = memo(content, lambda: _scan_blob(content, strict))
-                out.append({**rec, "media_id": media_id})
-            yield pd.DataFrame(
-                out, columns=[f.name for f in PDF_SCAN_SCHEMA.fields]
-            )
-
-    return df.mapInPandas(kernel, PDF_SCAN_SCHEMA)
+    return blob_map(
+        df, PDF_SCAN_SCHEMA, lambda content: [_scan_blob(content, strict)],
+        keys=["media_id"], args=["content"], memo=True,
+    )
 
 
 PDF_TEXT_SCHEMA = T.StructType(
@@ -1079,7 +1066,7 @@ def build_pdf_with_text(
     (content stream objects always stay DIRECT: the spec forbids
     streams inside object streams).
 
-    ``type0=True`` (round 11) emits a REAL Identity-H Type0 font with
+    ``type0=True`` emits a REAL Identity-H Type0 font with
     a /ToUnicode CMap: printable ASCII maps through an identity
     ``bfrange``, every other character through ``bfchar`` entries at
     private-use codes (surrogate-pair dsts included), and the page
@@ -1088,9 +1075,9 @@ def build_pdf_with_text(
     rc4/aesv2/aesv3 encrypts every stream (content, ToUnicode, objstm)
     with its object key under empty user+owner passwords.
 
-    ``predefined_cmap="UniGB-UCS2-H"`` (round 12) emits a Type0 font
+    ``predefined_cmap="UniGB-UCS2-H"`` emits a Type0 font
     with that /Encoding name and NO /ToUnicode — the CJK-crawl shape
-    the round-11 verdict named — showing page text as UTF-16BE hex
+    — showing page text as UTF-16BE hex
     codes, which is exactly what the Uni*-UCS2/UTF16 predefined CMaps
     define the codes to be."""
     import hashlib as _hl
@@ -1245,7 +1232,7 @@ def build_pdf_with_text(
 
 
 def _unescape_pdf_string(raw: bytes) -> str:
-    # full §7.3.4.2 escape set since round 11 (shared with the crypt
+    # full §7.3.4.2 escape set (shared with the crypt
     # material parser): named controls, octal, line continuations
     return _pdf_string_bytes(raw).decode("latin-1")
 
@@ -1366,7 +1353,7 @@ def extract_pdf_text(df: DataFrame, *, strict: bool = True) -> DataFrame:
     """Per-page text extraction from uncompressed or FlateDecode
     content streams (``Tj``/``TJ`` show operators, escape-correct
     string parsing in both literal and hex forms) — the step that
-    turns a crawled PDF into training text.  Round 11: Type0/CID text
+    turns a crawled PDF into training text.  Type0/CID text
     decodes through /ToUnicode CMaps, and encrypted documents decrypt
     under the empty user password (RC4 / AES-128 / AES-256).  Honest
     boundaries: Type0 without /ToUnicode, non-empty passwords, and
@@ -1374,21 +1361,7 @@ def extract_pdf_text(df: DataFrame, *, strict: bool = True) -> DataFrame:
     and strict mode raises on any structural miss.  Scale:
     mapInPandas, zero shuffle, O(stream bytes) per page."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from aroa_etl_spark.operators.multimodal import task_blob_memo
-
-        memo = task_blob_memo()  # parse each distinct blob once/task
-        for pdf in batches:
-            out = []
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                content = bytes(content or b"")
-                recs = memo(
-                    content, lambda: _extract_blob_text(content, strict)
-                )
-                for rec in recs:
-                    out.append({**rec, "media_id": media_id})
-            yield pd.DataFrame(
-                out, columns=[f.name for f in PDF_TEXT_SCHEMA.fields]
-            )
-
-    return df.mapInPandas(kernel, PDF_TEXT_SCHEMA)
+    return blob_map(
+        df, PDF_TEXT_SCHEMA, lambda content: _extract_blob_text(content, strict),
+        keys=["media_id"], args=["content"], memo=True,
+    )

@@ -25,6 +25,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# persist=True rank/AUC frames go through the one operator cache
+# registry: ``stats.release_caches`` IS ``dedup.release_caches``
+from aroa_etl_spark.operators.dedup import _barrier, release_caches
+
 __all__ = [
     "exact_linear_stats",
     "exact_global_rank",
@@ -32,44 +36,6 @@ __all__ = [
     "exact_weighted_median",
     "release_caches",
 ]
-
-# Frames persisted by the persist=True rank/AUC paths, released by
-# release_caches() — the dedup.py registry pattern (r13 verdict #3):
-# the returned frame is lazy, so the operator cannot unpersist eagerly,
-# and "the caller clears it" left nothing ever unpersisting in a
-# long-lived session (InMemoryRelations accumulate per invocation, and
-# Spark's CacheManager plan-matching silently lets a LATER identical
-# invocation reuse the stale cache).  Harnesses (bench.py reps loop,
-# the mirror sweep) call release_caches() after each materialization.
-_CACHED_FRAMES: list = []
-
-
-def _barrier(df: DataFrame) -> DataFrame:
-    """Persist ``df`` as a reuse point and register it for
-    :func:`release_caches`.  Compiled WITH AQE partition coalescing
-    (the flag binds at persist time — see dedup._barrier): without it
-    the staged frame materializes at the session's full shuffle width,
-    200 near-empty tasks under the driver's plain session."""
-    from aroa_etl_spark.operators.skew import persist_coalesced
-
-    df = persist_coalesced(df)
-    _CACHED_FRAMES.append(df)
-    return df
-
-
-def release_caches() -> int:
-    """Unpersist every frame cached by this module's persist=True paths
-    (including :func:`aroa_etl_spark.operators.evaluation.exact_auc`,
-    which delegates here) since the last call.  Returns the count."""
-    n = 0
-    for df in _CACHED_FRAMES:
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:
-            pass
-    _CACHED_FRAMES.clear()
-    return n
 
 
 def exact_linear_stats(
@@ -139,7 +105,7 @@ def exact_global_rank(
     when the upstream is expensive, or precomputed ``bounds`` to skip
     the percentile probe (callers can fold it into their own scalar
     aggregate).  CACHE OWNERSHIP: with ``persist=True`` the staged
-    frame is registered in this module's cache registry — call
+    frame is registered in the operator cache registry — call
     :func:`release_caches` once the result is materialized (this
     function cannot unpersist eagerly because the returned frame is
     lazy; bench/mirror harnesses release between reps).  Skew note: boundaries are
@@ -151,11 +117,10 @@ def exact_global_rank(
     if persist:
         # persist BEFORE the percentile probe, so the probe itself
         # materializes the cache: probing the unpersisted input first
-        # (the pre-r13 order) re-ran the expensive upstream a second
-        # time before the sizes aggregation ever hit the cache —
-        # measured 2×2.5 s of classifier scoring inside
-        # eval_classifier_auc at sf0.1 (guide §5: cache only what is
-        # reused, but DO let every scan reuse it)
+        # re-ran the expensive upstream a second time before the sizes
+        # aggregation ever hit the cache — measured 2×2.5 s of
+        # classifier scoring inside eval_classifier_auc at sf0.1 (cache
+        # only what is reused, but DO let every scan reuse it)
         df = _barrier(df)
     if bounds is None:
         bounds = df.select(
@@ -211,7 +176,7 @@ def exact_grouped_rank(
 ) -> DataFrame:
     """EXACT per-group rank (row_number over a total order WITHIN each
     group) without any group-sized sort task — the grouped
-    generalization of :func:`exact_global_rank` (r7 verdict ask #4:
+    generalization of :func:`exact_global_rank` (plain
     `row_number() OVER (PARTITION BY month ORDER BY …)` puts every
     customer of a month in ONE window partition; at extreme scale that
     is one fat sort task per month).

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from aroa_etl_spark.plans.catalog import query
 from aroa_etl_spark.session import load_tables
@@ -35,13 +36,13 @@ _SQL_DIGEST = (
     "list_transform(range(1, 33), i -> ('0x'||substr(sha256(text), 2*i-1, 2))::BIGINT)"
 )
 
-# Per-PROCESS memo of synthetic fixture-blob lists (r13). The blobs are
+# Per-PROCESS memo of synthetic fixture-blob lists. The blobs are
 # pure functions of constants — nothing derives from the testdata, so
 # this is fixture staging, not result caching: a fresh process always
 # rebuilds from scratch (the inc_table_pruned_read precedent), and only
 # reps 2..N of one bench/gate process skip re-synthesizing identical
 # bytes the entry exists to DECODE, not to encode.  The expensive
-# builders (PDF with AES encryption: 2.6 s/call measured at r13) are
+# builders (PDF with AES encryption: 2.6 s/call measured) are
 # the motivation; cheap ones ride along for the per-rep driver time.
 _FIXTURE_MEMO: dict = {}
 
@@ -222,7 +223,7 @@ def mm_video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def mm_image_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S8 with a REAL codec in the gate (round 3): every document becomes
+    """S8 with a REAL codec in the gate: every document becomes
     a genuine binary P6 PPM — an 11-byte header plus a 4×3 RGB payload
     of md5-hex ASCII bytes, assembled with native binary concat — and
     the feature kernel runs ``strict=True``, so the bytes go through the
@@ -427,8 +428,8 @@ def mm_audio_g711_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 def mm_jpeg_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S8's dominant real-world format (the reference's card scans are
     JPEG/TIFF) decoded for REAL under strict=True via the vendored
-    pure-NumPy baseline JPEG codec (operators/jpegcodec.py; round-3
-    judge ask #4 — no PIL in this sandbox).  Each document maps to a
+    pure-NumPy baseline JPEG codec (operators/jpegcodec.py; no PIL
+    needed).  Each document maps to a
     flat 8x16 grayscale JPEG with value v = 128 + 5*((doc_id%40) - 20);
     v == 128 (mod 5) makes the quantized DC coefficient exact at
     quality 85 (luma DC quant step = 5), so a CORRECT decode returns
@@ -478,11 +479,10 @@ def mm_jpeg_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def mm_jpeg_progressive_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PROGRESSIVE (SOF2) JPEG decoded for REAL under strict=True —
-    round-4 judge ask #3: real archive scans are often progressive, and
-    the baseline-only codec raised NotImplementedError on them.  The
-    codec now implements T.81 Annex G (spectral selection + successive
-    approximation), and each document maps to a flat 16x32 grayscale
-    SOF2 stream built by encode_progressive_jpeg's six-scan script
+    real archive scans are often progressive, and a baseline-only
+    codec raises NotImplementedError on them.  The codec implements
+    T.81 Annex G (spectral selection + successive approximation), and
+    each document maps to a flat 16x32 grayscale SOF2 stream built by encode_progressive_jpeg's six-scan script
     (DC first Al=1, two spectral AC bands Al=2, two AC refinement
     passes, DC refinement) — a flat image leaves every AC band zero, so
     the scans exercise the EOB-run machinery across all 8 blocks, and
@@ -697,10 +697,9 @@ def mm_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def mm_png_interlaced_real(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Adam7-interlaced 16-BIT PNG under strict=True (round-5 judge ask
-    #5): 40 distinct 32x16 grayscale uint16 ramps (pixel = ((k*7 +
-    row*5 + col*3) * 257) % 65536 — the x257 spread puts signal in both
-    sample bytes and wraps the 16-bit range) encoded with interlace=1
+    """Adam7-interlaced 16-BIT PNG under strict=True: 40 distinct
+    32x16 grayscale uint16 ramps (pixel = ((k*7 + row*5 + col*3) * 257)
+    % 65536 — the x257 spread puts signal in both sample bytes and wraps the 16-bit range) encoded with interlace=1
     and the filter type cycling 0-4 per scanline, broadcast-joined to
     the fact table on doc_id % 40.  mean_intensity matches the oracle's
     pure-arithmetic replay only if the seven-pass Adam7 geometry (incl.
@@ -1174,7 +1173,7 @@ def mm_jpeg_dims_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         enc = encode_progressive_jpeg if k % 2 else encode_baseline_jpeg
         blobs.append((k, bytearray(enc(pix, quality=85))))
     # spread=False: the marker walk is O(header) — the v_key exchange
-    # cost more than the serial walk it parallelized (r13: 0.78x)
+    # cost more than the serial walk it parallelized (0.78x)
     media = _dim_media(spark, sf_dir, blobs, spread=False)
     return scan_jpeg_markers(media, strict=True).select(
         "media_id", "width", "height", "n_components", "progressive"
@@ -1254,8 +1253,8 @@ def _mp4_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def mm_mp4_box_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ISO BMFF (MP4) container triage, now sample-table-deep (r8
-    verdict ask #1's scan half): every document maps to a GENUINE MP4
+    """ISO BMFF (MP4) container triage, sample-table-deep: every
+    document maps to a GENUINE MP4
     written by the stdlib-only BMFF muxer (encode_mp4_mjpeg) — ftyp
     isom/mp41, moov with mvhd VERSION ALTERNATING 0/1 (both the 32-
     and 64-bit time layouts are walked), a full video trak
@@ -1307,7 +1306,7 @@ def mm_mp4_box_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def mm_mp4_video_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL MP4 video decode (r8 verdict ask #1): demux through the
+    """REAL MP4 video decode: demux through the
     ISO BMFF sample tables — stsd fourcc routes, stsc/stco(co64)
     chunk arithmetic locates every sample, stsz sizes it, stts times
     it — and decode each MJPEG sample through the vendored pure-NumPy
@@ -1378,7 +1377,7 @@ def s_tar_webdataset(spark: SparkSession, sf_dir: str) -> DataFrame:
                 tf.addfile(info, io.BytesIO(payload))
         blobs.append((k, bytearray(buf.getvalue())))
     # spread=False: the USTAR header walk is cheap — the v_key exchange
-    # cost more than the serial walk it parallelized (r13: 0.74x)
+    # cost more than the serial walk it parallelized (0.74x)
     media = _dim_media(spark, sf_dir, blobs, spread=False)
     return parse_tar_members(media, strict=True)
 
@@ -1410,7 +1409,7 @@ def mm_tar_sample_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one row per sample: binary ``ppm`` tensor column + ``cls`` label
     sidecar) → the REAL netpbm decoder under ``strict=True``
     (operators/multimodal.image_features) — sample→tensor-columns
-    end-to-end, r6 verdict ask #1's composition clause.  Shards are
+    end-to-end.  Shards are
     genuine stdlib-tarfile archives of 4×3 P6 images whose pixel bytes
     are md5-hex ASCII, so the oracle replays mean intensity EXACTLY
     (integer ascii sum / 36, both engines' double division — the
@@ -1511,7 +1510,7 @@ def mm_pdf_triage(spark: SparkSession, sf_dir: str) -> DataFrame:
     document pipeline applies before OCR or text extraction.  The
     40-blob dim carries real PDFs (build_pdf: catalog + pages node +
     1-5 page objects, versions 1.4-1.7); every 7th blob is GENUINELY
-    ENCRYPTED (round 11 — operators/pdfcrypt.py, the ISO 32000
+    ENCRYPTED (operators/pdfcrypt.py, the ISO 32000
     standard security handler with empty user+owner passwords, modes
     rotating RC4-128 / AES-128 /AESV2 / AES-256 /AESV3 R6): the
     scanner authenticates the empty user password against the real
@@ -1520,8 +1519,8 @@ def mm_pdf_triage(spark: SparkSession, sf_dir: str) -> DataFrame:
     the verification walk must decrypt with the ObjStm's own object
     key.  Every third blob uses the PDF 1.5+ LAYOUT — dict objects
     packed into a /Type /ObjStm and a FlateDecode /Type /XRef stream
-    (PNG /Predictor 12 on even k, predictor-free on odd) — which
-    round 10 made first-class: W-field rows decode, type-2 entries
+    (PNG /Predictor 12 on even k, predictor-free on odd): W-field
+    rows decode, type-2 entries
     verify through the ObjStm header, and the objstm + xref-stream
     objects themselves add 2 to n_objects, all replayed by the oracle
     from doc_id arithmetic (n_bytes excluded: offset-digit growth
@@ -1556,7 +1555,7 @@ def mm_pdf_triage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _pdf_text_blobs() -> "list[tuple[int, bytearray]]":
     """The 40 PDF fixture variants of mm_pdf_text_extract — the single
-    most expensive fixture synth in the catalog (2.6 s/call at r13:
+    most expensive fixture synth in the catalog (2.6 s/call:
     AES-256 KDF rounds dominate), hence the per-process memo."""
     from aroa_etl_spark.operators.pdfscan import build_pdf_with_text
 
@@ -1574,7 +1573,7 @@ def _pdf_text_blobs() -> "list[tuple[int, bytearray]]":
                         predictor=12 if k % 2 == 0 else 1,
                         hex_strings=k % 5 == 4,
                         type0=k % 8 == 6,
-                        # round 12: every 8th blob shows text through a
+                        # every 8th blob shows text through a
                         # PREDEFINED CMap (UniGB-UCS2-H, no /ToUnicode)
                         # whose codes are UTF-16BE by definition
                         predefined_cmap=(
@@ -1610,17 +1609,17 @@ def _pdf_text_blobs() -> "list[tuple[int, bytearray]]":
 def mm_pdf_text_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-page PDF text extraction (operators/pdfscan.
     extract_pdf_text): the step that turns a crawled PDF into training
-    text — objects resolve AT THEIR XREF OFFSETS (round 10: both
+    text — objects resolve AT THEIR XREF OFFSETS (both
     classic tables and PDF 1.5+ xref streams, page dicts packed into
     object streams on every third blob), /Contents streams FlateDecode-
     inflate where declared, and Tj show-strings parse in BOTH forms —
     escape-correct paren literals (the planted '(note)' parens
     round-trip through PDF string escaping) and, on every fifth blob,
-    hex strings (<...> Tj).  Round 11 adds the two dominant real-world
-    hard cases: every 8th blob shows its text through a REAL
+    hex strings (<...> Tj).  It covers the dominant real-world hard
+    cases: every 8th blob shows its text through a REAL
     Identity-H Type0 font — 2-byte CID codes routed through a
     /ToUnicode CMap (identity bfrange for ASCII), the path virtually
-    all modern PDF text takes — round 12 adds the CJK-crawl shape on
+    all modern PDF text takes — the CJK-crawl shape on
     another 8th of the dim: a Type0 font with the PREDEFINED
     /UniGB-UCS2-H encoding and NO /ToUnicode, whose 2-byte codes are
     UTF-16BE by the CMap family's public definition — and every 7th
@@ -1934,9 +1933,9 @@ def mm_webp_dims_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def mm_webp_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL WebP VP8L lossless decode under strict=True (round 10 —
-    operators/vp8lcodec.py, the vendored Huffman+LZ77 codec; round 11
-    completed + vectorized it per the r10 verdict): 40 distinct 32x16
+    """REAL WebP VP8L lossless decode under strict=True
+    (operators/vp8lcodec.py, the vendored vectorized Huffman+LZ77
+    codec): 40 distinct 32x16
     grayscale blobs rotate the format's machinery by k%4 — plain
     prefix-coded literals, the SUBTRACT_GREEN transform (half of those
     blobs ALSO carrying CROSS_COLOR on top), the COLOR_INDEXING
@@ -1991,13 +1990,13 @@ def mm_webp_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
             blobs.append((k, bytearray(blob)))
         return blobs
 
-    # per-process fixture memo (r13 template): the 40 VP8L encodes are
+    # per-process fixture memo: the 40 VP8L encodes are
     # pure functions of constants and cost a measured 0.24 s of driver
     # time per call — reps 2..N time the decode the oracle attests
     blobs = _memo_blobs("webp_vp8l", _build)
     # _dim_media hash-spreads the fact on v_key BEFORE the broadcast
-    # join (r13): the old post-join round-robin repartition shuffled
-    # the blob bytes themselves and scattered equal payloads across
+    # join: a post-join round-robin repartition would shuffle the blob
+    # bytes themselves and scattered equal payloads across
     # tasks; keying on v_key moves only (media_id, v_key) rows and
     # co-locates duplicates for the kernel's per-task decode memo.
     media = _dim_media(
@@ -2107,8 +2106,8 @@ def mm_webp_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def mm_webp_lossy_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL lossy-WebP VP8 keyframe decode (round 12 —
-    operators/vp8codec.py, the RFC 6386 keyframe path: boolean
+    """REAL lossy-WebP VP8 keyframe decode (operators/vp8codec.py,
+    the RFC 6386 keyframe path: boolean
     arithmetic decoder, segment map + per-segment quantizers, keyframe
     intra mode trees, coefficient tokens, dequantization with the
     y2dc/uvdc deltas and the chroma-DC 117-index cap, inverse WHT DC
@@ -2128,8 +2127,7 @@ def mm_webp_lossy_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle pins the NORMATIVE surface (4:2:0 plane means); loop filter
     (level 0 here), B_PRED submodes, AC coefficients, and ALPH alpha
     are pinned bit-exactly against the system libwebp by
-    tests/test_vp8codec.py.  Lossy WebP dominates real crawled .webp —
-    this closes the round-11 verdict's top format gap.
+    tests/test_vp8codec.py.  Lossy WebP dominates real crawled .webp.
     Scale: 40-blob broadcast dim, fact repartitioned to core count
     before the decode kernel, zero shuffle."""
     import numpy as np
@@ -2162,10 +2160,10 @@ def mm_webp_lossy_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
             blobs.append((k, bytearray(blob)))
         return blobs
 
-    # per-process fixture memo (r13 template): the 40 VP8 encodes are
+    # per-process fixture memo: the 40 VP8 encodes are
     # pure functions of constants; reps 2..N time only the decode
     blobs = _memo_blobs("webp_vp8_lossy", _build)
-    # v_key-spread BEFORE the broadcast join (r13): shuffles only tiny
+    # v_key-spread BEFORE the broadcast join: shuffles only tiny
     # key rows, never blob bytes, and co-locates equal payloads for
     # the kernel's per-task decode memo
     media = _dim_media(spark, sf_dir, blobs)
@@ -2215,8 +2213,8 @@ def mm_webp_lossy_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def mm_webp_anim_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANIMATED WebP decode for real (round 12 — the LAST WebP
-    boundary: operators/vp8codec.decode_webp_anim walks VP8X + ANIM +
+    """ANIMATED WebP decode for real (operators/vp8codec.
+    decode_webp_anim walks VP8X + ANIM +
     ANMF, decodes each frame through the vendored lossy VP8 keyframe
     codec, and COMPOSITES the canvas per the container spec: frames
     placed at their even-valued offsets, 'background' disposal
@@ -2260,7 +2258,7 @@ def mm_webp_anim_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             })
         blobs.append((k, bytearray(encode_webp_anim(32, 32, frames,
                                                     loop=2))))
-    # v_key-spread BEFORE the broadcast join (r13) — see
+    # v_key-spread BEFORE the broadcast join — see
     # mm_webp_decode_real for the rationale
     media = _dim_media(spark, sf_dir, blobs)
     return webp_anim_stats(media).select(
@@ -2348,7 +2346,7 @@ def mm_ogg_page_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def mm_ogg_ident_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vorbis/Opus identification-header parse on the CRC-verified Ogg
-    page walk (operators/multimodal.scan_ogg_ident; r6 verdict ask #4):
+    page walk (operators/multimodal.scan_ogg_ident):
     channels, sample rate, Opus pre-skip, and granule-derived duration
     with ZERO codec decode.  The 40-blob broadcast dim alternates
     genuine Vorbis identification headers (Vorbis I spec 4.2.2) and
@@ -2436,8 +2434,8 @@ def mm_ogg_ident_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def mm_triage_gated_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Filter-before-decode — THE 100 TB multimodal recipe (r6 verdict
-    ask #5): route every blob by cheap triage before any expensive
+    """Filter-before-decode — THE 100 TB multimodal recipe: route every
+    blob by cheap triage before any expensive
     kernel runs.  Magic bytes split the mixed corpus (jpeg vs mp3);
     JPEGs go through the marker scanner (dims, no IDCT) and ONLY those
     at or under 1024 pixels continue to the real JPEG decoder — the
@@ -2459,6 +2457,7 @@ def mm_triage_gated_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aroa_etl_spark.operators.multimodal import (
         MPEG1_L3_BITRATES,
         MPEG1_SAMPLE_RATES,
+        blob_map,
         decode_image,
         scan_jpeg_markers,
         scan_mpeg_frames,
@@ -2487,8 +2486,8 @@ def mm_triage_gated_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         blobs.append((k, bytearray(blob)))
     # spread=False: this plan consumes media in THREE branches (decode,
     # skip, audio) — a per-branch exchange costs more than the
-    # memo-cheap scan kernels it would parallelize (measured r13:
-    # 9-19 s spread vs ~2 s unspread at sf0.1)
+    # memo-cheap scan kernels it would parallelize (measured 9-19 s
+    # spread vs ~2 s unspread at sf0.1)
     media = _dim_media(spark, sf_dir, blobs, spread=False)
 
     is_jpeg = F.hex(F.substring(F.col("content"), 1, 2)) == "FFD8"
@@ -2497,38 +2496,19 @@ def mm_triage_gated_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     small = F.col("width") * F.col("height") <= 1024
 
-    import pandas as _pd
+    def n_pixels(content: bytes) -> list:
+        px = decode_image(content, {"format": "jpeg"}, strict=True)
+        return [{"n_pixels": int(px.shape[0]) * int(px.shape[1])}]
 
-    def decode_kernel(batches):
-        from aroa_etl_spark.operators.multimodal import task_blob_memo
-
-        memo = task_blob_memo()  # decode each distinct blob once/task
-
-        def n_pixels(content: bytes) -> int:
-            px = decode_image(content, {"format": "jpeg"}, strict=True)
-            return int(px.shape[0]) * int(px.shape[1])
-
-        for pdf in batches:
-            out = []
-            for media_id, content, w, h in zip(
-                pdf["media_id"], pdf["content"], pdf["width"], pdf["height"]
-            ):
-                content = bytes(content)
-                out.append(
-                    {
-                        "media_id": media_id,
-                        "width": w,
-                        "height": h,
-                        "n_pixels": memo(content, lambda: n_pixels(content)),
-                    }
-                )
-            yield _pd.DataFrame(
-                out, columns=["media_id", "width", "height", "n_pixels"]
-            )
-
-    decoded = scanned.filter(small).mapInPandas(
-        decode_kernel,
-        "media_id bigint, width int, height int, n_pixels bigint",
+    decoded = blob_map(
+        scanned.filter(small),
+        T.StructType([
+            T.StructField("media_id", T.LongType()),
+            T.StructField("width", T.IntegerType()),
+            T.StructField("height", T.IntegerType()),
+            T.StructField("n_pixels", T.LongType()),
+        ]),
+        n_pixels, keys=["media_id", "width", "height"], args=["content"], memo=True,
     ).select(
         "media_id",
         F.lit("jpeg").alias("kind"),
@@ -2790,7 +2770,7 @@ def mm_media_type_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def mm_avi_header_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RIFF/AVI container triage (operators/multimodal.scan_avi_headers
-    — r7 verdict ask #1's twin): every document maps to a GENUINE AVI
+    — the decode entry's twin): every document maps to a GENUINE AVI
     written by the stdlib-only RIFF muxer (encode_avi_mjpeg) — LIST
     hdrl with a full avih + strl(strh 'vids'/MJPG + strf
     BITMAPINFOHEADER), a movi list of real SOF0 JPEG frame chunks, and
@@ -2848,8 +2828,7 @@ def mm_avi_header_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def mm_video_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL video decode — the last stubbed modality closed (r7 verdict
-    ask #1): MJPEG-in-AVI demuxed by the RIFF movi walk and decoded
+    """REAL video decode: MJPEG-in-AVI demuxed by the RIFF movi walk and decoded
     frame-by-frame through the vendored pure-NumPy baseline JPEG codec
     (operators/jpegcodec.py), composing two fully-owned pieces exactly
     like mm_tar_sample_decode composed tar + netpbm.  Each document
@@ -2914,7 +2893,7 @@ def mm_video_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 def mm_mkv_header_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Matroska/WebM (EBML) container triage
     (operators/multimodal.scan_mkv_headers) — completes the
-    container-walk family the round-7 verdict named (MP4 boxes, Ogg
+    container-walk family (MP4 boxes, Ogg
     pages, RIFF/AVI, now EBML): every document maps to a GENUINE EBML
     stream written by the stdlib-only writer (encode_mkv_stub — real
     RFC 8794 VINTs with width-marker arithmetic, DocType header,
@@ -2975,7 +2954,7 @@ def mm_mkv_header_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def mm_mkv_video_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL Matroska/WebM video decode (r8 verdict ask #2): the EBML
+    """REAL Matroska/WebM video decode: the EBML
     walk extended past track census into Cluster/SimpleBlock frame
     extraction (operators/multimodal.demux_mkv_frames) — track-number
     VINT match, signed 16-bit relative timestamps on top of each
@@ -3065,7 +3044,7 @@ def mm_video_dhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/multimodal.video_dhash): the per-frame dHash
     concatenation is the bucket key a video-dedup pipeline joins on —
     the video analogue of the image dHash and audio fingerprint
-    entries, now over REAL decode (round 8's AVI demux + vendored
+    entries, over REAL decode (the AVI demux + vendored
     JPEG codec).  Each blob is an MJPEG AVI of 1-3 frames; frame j is
     a two-flat-block 16×8 image (left/right values from k-arithmetic,
     both ≡ 128 mod 5, so the quantized DC coefficients are exact at
@@ -3228,7 +3207,7 @@ def mm_avi_audio_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def mm_mp3_frame_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MP3 COMPLETE frame walk (r8 verdict ask #5) — upgrades
+    """MP3 COMPLETE frame walk — upgrades
     mm_mp3_header_scan's first-sync triage to per-frame truth
     (operators/multimodal.mp3_frame_walk): every frame's bitrate from
     its own header gives VBR detection and min/max bitrate, byte
@@ -3245,9 +3224,8 @@ def mm_mp3_frame_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     trap).  The oracle replays frame lengths, totals, averages, and
     tag values in exact integer math.  Untagged files surface as
     vbr_tag='none' / -1 sentinels AT THIS BOUNDARY (the operator keeps
-    honest NULLs; nullable BIGINTs densify to float64 through the
-    driver's pandas materialization and would repr-mismatch — the r7
-    comparator lesson).  Scale: 40-blob broadcast dim, mapInPandas,
+    honest NULLs; nullable BIGINTs densify to float64 through a pandas
+    materialization and would repr-mismatch in the comparator).  Scale: 40-blob broadcast dim, mapInPandas,
     zero shuffle, O(n_frames) per blob."""
     from aroa_etl_spark.operators.multimodal import (
         encode_mp3_frames, mp3_frame_walk,

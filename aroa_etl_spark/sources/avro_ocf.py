@@ -13,8 +13,7 @@ with every ``long``/``int`` zigzag-varint encoded, strings/bytes
 length-prefixed, doubles little-endian IEEE, booleans one byte, and
 two-branch null unions a varint branch index that honors the DECLARED
 branch order (``["null", T]`` and ``[T, "null"]`` both occur in the
-wild).  Supported here (round 10 widened; round 11 added bytes/fixed
-and the logical types): record schemas over ``long / int / string /
+wild).  Supported here: record schemas over ``long / int / string /
 double / boolean / bytes``, FIXED blocks, NESTED records, ARRAYS
 (block-encoded, including negative block counts carrying a byte-size
 skip hint), and null unions at any position; codecs ``null``,
@@ -25,8 +24,8 @@ format_description.txt), with the spec's trailing 4-byte big-endian
 CRC32 of the uncompressed block verified.  Maps (string-keyed,
 block-encoded) and enums (index into the symbol list) decode too.
 
-LOGICAL TYPES (round 11, r10 verdict #5 — standard in production Avro
-from the Kafka/Debezium ecosystems): ``decimal`` over bytes/fixed
+LOGICAL TYPES (standard in production Avro from the Kafka/Debezium
+ecosystems): ``decimal`` over bytes/fixed
 (big-endian two's complement unscaled int -> ``decimal.Decimal``),
 ``date`` over int (epoch days -> ``datetime.date``),
 ``timestamp-millis``/``timestamp-micros`` over long (->
@@ -37,7 +36,7 @@ type) and any UNKNOWN logicalType keeps its base type with the
 annotation surfaced verbatim in the returned header schema.
 
 Multi-branch unions decode to nullable memberK dicts, and NAMED-TYPE
-REFERENCES resolve (both round 12) — records/enums/fixed register
+REFERENCES resolve — records/enums/fixed register
 under their (namespace-qualified) names as defined, later bare names
 follow the definition, and self-referential records (linked lists —
 the data terminates via null unions) decode with bounded recursion.
@@ -62,9 +61,7 @@ from __future__ import annotations
 import json
 import struct
 import zlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -260,15 +257,15 @@ def _parse_type(t, env=None, ns=None):
       writer puts null at branch 1, and assuming 0 would misparse)
     - ``("fixed", size)`` — fixed-size byte blocks
     - ``("decimal", base_node, scale)`` / ``("date", base_node)`` /
-      ``("timestamp", base_node, unit_us)`` — LOGICAL TYPES (round 11,
-      Avro 1.11 spec): decimal over bytes/fixed (big-endian two's
+      ``("timestamp", base_node, unit_us)`` — LOGICAL TYPES (Avro
+      1.11 spec): decimal over bytes/fixed (big-endian two's
       complement unscaled int), date over int (epoch days),
       timestamp-millis/-micros over long.  ``uuid`` stays its string
       base (Spark has no uuid type) and any UNKNOWN logicalType keeps
       its base type — the annotation is still surfaced verbatim in the
       header schema parse_avro_blob returns.
 
-    NAMED-TYPE REFERENCES resolve since round 12: records/enums/fixed
+    NAMED-TYPE REFERENCES resolve: records/enums/fixed
     register under their (namespace-qualified) names in ``env`` as they
     are defined — forward cells, so SELF-referential records (linked
     lists, trees — terminated by null unions in the data) parse too —
@@ -292,7 +289,7 @@ def _parse_type(t, env=None, ns=None):
         if len(t) == 2 and "null" in t:
             nb = t.index("null")
             return ("union", nb, _parse_type(t[1 - nb], env, ns))
-        # MULTI-BRANCH unions (round 12): ["null", A, B, ...] or
+        # MULTI-BRANCH unions: ["null", A, B, ...] or
         # [A, B] — decoded to a dict of nullable "memberK" entries
         # (K indexes the NON-NULL branches in declared order, the
         # same member naming Spark's own Avro connector surfaces),
@@ -429,7 +426,7 @@ def _encode_node(node, v) -> bytes:
 
         unit = node[2]
         if isinstance(v, _dt.datetime):
-            # review finding (r11): an epoch carrying the VALUE's own
+            # an epoch carrying the VALUE's own
             # tzinfo cancels the offset — a +05:00 datetime encoded as
             # if it were UTC.  Anchor at UTC for aware values, at the
             # naive epoch for naive ones.
@@ -678,7 +675,7 @@ def _decode_value(t: str, buf: bytes, pos: int):
     if t == "boolean":
         if pos >= len(buf):
             # typed error, not IndexError: the module's fail-loudly
-            # taxonomy is ValueError for corruption (round-10 fuzz)
+            # taxonomy is ValueError for corruption
             raise ValueError("avro: boolean overruns the block")
         return buf[pos] == 1, pos + 1
     raise NotImplementedError(t)
@@ -807,8 +804,8 @@ def parse_avro_blob(blob: bytes) -> tuple[dict, "list[dict]"]:
             try:
                 payload = zlib.decompress(payload, -15)
             except zlib.error as e:
-                # fuzz finding (r11): raw zlib.error leaked past the
-                # ValueError taxonomy on corrupted deflate blocks
+                # a raw zlib.error must not leak past the ValueError
+                # taxonomy on corrupted deflate blocks
                 raise ValueError(
                     f"avro: deflate block failed to inflate: {e}"
                 ) from None
@@ -879,24 +876,20 @@ def avro_records(
         [T.StructField(id_col, T.LongType()), *record_schema.fields]
     )
     names = [f.name for f in record_schema.fields]
+    from aroa_etl_spark.operators.multimodal import blob_map
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in out_schema.fields]
-        for pdf in batches:
-            rows = []
-            for bid, content in zip(
-                pdf[id_col].to_numpy(), pdf[content_col].to_numpy()
-            ):
-                _, recs = parse_avro_blob(bytes(content or b""))
-                for rec in recs:
-                    missing = [n for n in names if n not in rec]
-                    if missing:
-                        raise ValueError(
-                            f"avro: blob {bid} lacks declared fields {missing}"
-                        )
-                    row = {n: rec[n] for n in names}
-                    row[id_col] = bid
-                    rows.append(row)
-            yield pd.DataFrame(rows, columns=cols)
+    def rows_for(bid, content: bytes) -> list:
+        _, recs = parse_avro_blob(content)
+        rows = []
+        for rec in recs:
+            missing = [n for n in names if n not in rec]
+            if missing:
+                raise ValueError(
+                    f"avro: blob {bid} lacks declared fields {missing}"
+                )
+            rows.append({n: rec[n] for n in names})
+        return rows
 
-    return df.select(id_col, content_col).mapInPandas(kernel, out_schema)
+    return blob_map(
+        df, out_schema, rows_for, keys=[id_col], args=[id_col, content_col]
+    )

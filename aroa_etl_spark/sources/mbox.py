@@ -36,9 +36,7 @@ TFRecord.
 from __future__ import annotations
 
 import re
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -157,23 +155,17 @@ def parse_mbox_blob(blob: bytes) -> list[dict]:
 def parse_mbox_records(
     df: DataFrame, *, content_col: str = "content", id_col: str = "blob_id"
 ) -> DataFrame:
-    """Explode a (blob_id, content binary) frame into mbox messages via
-    mapInPandas — one output row per message, input partitioning
-    preserved, no shuffle."""
+    """Explode a (blob_id, content binary) frame into mbox messages —
+    one output row per message, input partitioning preserved, no
+    shuffle."""
+    from pyspark.sql import functions as F
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in MBOX_MESSAGE_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for bid, content in zip(
-                pdf[id_col].to_numpy(), pdf[content_col].to_numpy()
-            ):
-                for rec in parse_mbox_blob(bytes(content or b"")):
-                    rec["blob_id"] = bid
-                    rows.append(rec)
-            yield pd.DataFrame(rows, columns=cols)
+    from aroa_etl_spark.operators.multimodal import blob_map
 
-    return df.select(id_col, content_col).mapInPandas(kernel, MBOX_MESSAGE_SCHEMA)
+    return blob_map(
+        df.select(F.col(id_col).alias("blob_id"), F.col(content_col).alias("content")),
+        MBOX_MESSAGE_SCHEMA, parse_mbox_blob, keys=["blob_id"], args=["content"],
+    )
 
 
 def build_mbox(messages: list[dict]) -> bytes:

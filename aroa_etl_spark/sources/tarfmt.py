@@ -6,7 +6,7 @@ members).  This module parses the 512-byte USTAR header blocks by hand
 — name, octal size, typeflag, and the spec's checksum (header bytes
 summed with the checksum field blanked) — and explodes each archive
 blob into one row per regular member, the same Content-Length-driven,
-zero-shuffle mapInPandas shape as the WARC/MPEG/JPEG/BMFF scanners.
+zero-shuffle ``blob_map`` kernel as the WARC/MPEG/JPEG/BMFF scanners.
 
 Hand-parsing (rather than the stdlib ``tarfile``) keeps the kernel
 byte-transparent for the catalog oracle and makes the failure modes
@@ -26,10 +26,8 @@ input is the honest way to test a reader.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
 import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -105,7 +103,7 @@ def parse_tar_blob(content: bytes, *, strict: bool = True,
         # 100 chars into prefix (345..500) + name; rejoin them.  The
         # magic must be the POSIX 'ustar\0' exactly — GNU format's
         # 'ustar ' puts atime/ctime/sparse fields at 345+, which would
-        # otherwise be prepended as a junk prefix (review finding).
+        # otherwise be prepended as a junk prefix.
         if header[257:263] == b"ustar\x00":
             prefix = header[345:500].split(b"\x00", 1)[0].decode("utf-8")
             if prefix:
@@ -128,32 +126,19 @@ def parse_tar_blob(content: bytes, *, strict: bool = True,
 def parse_tar_members(df: DataFrame, *, strict: bool = True) -> DataFrame:
     """Explode (media_id, content) tar blobs into one row per regular
     member: (media_id, member_idx, name, size, payload_md5)."""
+    from aroa_etl_spark.operators.multimodal import blob_map
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # no task_blob_memo: the USTAR header walk is O(members), far
-        # cheaper than hashing the whole archive per row for a cache
-        # lookup (r13 measured 0.74x with the memo; reverted r14)
-        for pdf in batches:
-            out = []
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                content = bytes(content or b"")
-                for idx, name, size, digest in parse_tar_blob(
-                    content, strict=strict
-                ):
-                    out.append(
-                        {
-                            "media_id": media_id,
-                            "member_idx": idx,
-                            "name": name,
-                            "size": size,
-                            "payload_md5": digest,
-                        }
-                    )
-            yield pd.DataFrame(
-                out, columns=[f.name for f in TAR_MEMBERS_SCHEMA.fields]
-            )
+    def members(content: bytes) -> list:
+        return [
+            {"member_idx": idx, "name": name, "size": size, "payload_md5": digest}
+            for idx, name, size, digest in parse_tar_blob(content, strict=strict)
+        ]
 
-    return df.mapInPandas(kernel, TAR_MEMBERS_SCHEMA)
+    # no memo: the USTAR header walk is O(members), far cheaper than
+    # hashing the whole archive per row for a cache lookup
+    return blob_map(
+        df, TAR_MEMBERS_SCHEMA, members, keys=["media_id"], args=["content"]
+    )
 
 
 WEBDATASET_MANIFEST_SCHEMA = T.StructType(
@@ -224,9 +209,10 @@ def write_webdataset_shards(
         buf = io.BytesIO()
         with tarfile.open(fileobj=buf, mode="w",
                           format=tarfile.USTAR_FORMAT) as tf:
-            for _, row in pdf.sort_values("__id").iterrows():
-                payload = bytes(row["__content"] or b"")
-                info = tarfile.TarInfo(name=str(row["__name"]))
+            ordered = pdf.sort_values("__id")
+            for name, content in zip(ordered["__name"], ordered["__content"]):
+                payload = bytes(content or b"")
+                info = tarfile.TarInfo(name=str(name))
                 info.size = len(payload)
                 info.mtime = 0
                 tf.addfile(info, io.BytesIO(payload))
@@ -328,28 +314,23 @@ def gunzip_column(df: DataFrame, col: str, *, strict: bool = True) -> DataFrame:
     (no 1F 8B magic) pass through unchanged, so the operator composes
     safely over a mixed extension map; corrupt gzip raises in strict
     mode and degrades to the raw bytes with ``strict=False``.
-    Scale: Arrow-batched mapInPandas, one zlib C call per row, zero
-    shuffle — the compression_ratio signal's cost model."""
+    NULL stays NULL.  Scale: one zlib C call per row, zero shuffle —
+    the compression_ratio signal's cost model."""
     import gzip as _gzip
-    from pyspark.sql import functions as F  # noqa: F401
 
-    out_schema = df.schema
+    from aroa_etl_spark.operators.multimodal import blob_map
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            def one(v):
-                if v is None:
-                    return v
-                raw = bytes(v)
-                if raw[:2] != b"\x1f\x8b":
-                    return raw
-                try:
-                    return _gzip.decompress(raw)
-                except Exception:
-                    if strict:
-                        raise
-                    return raw
-            pdf[col] = pdf[col].map(one)
-            yield pdf
+    def one(raw: bytes) -> list:
+        # returning no value for ``col`` keeps the input value (the
+        # column is also a pass-through key), so NULL and non-gzip
+        # bytes come back untouched
+        if raw[:2] != b"\x1f\x8b":
+            return [{}]
+        try:
+            return [{col: _gzip.decompress(raw)}]
+        except Exception:
+            if strict:
+                raise
+            return [{}]
 
-    return df.mapInPandas(kernel, out_schema)
+    return blob_map(df, df.schema, one, keys=df.columns, args=[col])

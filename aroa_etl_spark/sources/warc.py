@@ -32,9 +32,7 @@ workload, Spark-first.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -69,7 +67,7 @@ def split_gzip_members(blob: bytes) -> list[bytes]:
     out: list[bytes] = []
     # memoryview: blob[pos:] on bytes would COPY the whole tail per
     # member — O(members x size) memcpy on a real Common Crawl file
-    # with tens of thousands of members (round-6 review finding #5)
+    # with tens of thousands of members
     view = memoryview(blob)
     pos = 0
     n = len(blob)
@@ -120,7 +118,7 @@ def parse_warc_blob(blob: bytes) -> list[dict]:
             if not key.isascii():
                 # the module taxonomy: ALL malformed structure raises
                 # ValueError (a raw UnicodeDecodeError here escaped the
-                # per-blob catch of non-strict callers — round-10 fuzz)
+                # per-blob catch of non-strict callers)
                 raise ValueError(
                     f"malformed WARC: non-ASCII header name {key[:24]!r}"
                 )
@@ -152,22 +150,14 @@ def parse_warc_blob(blob: bytes) -> list[dict]:
 def parse_warc_records(
     df: DataFrame, *, content_col: str = "content", id_col: str = "blob_id"
 ) -> DataFrame:
-    """Explode a (blob_id, content binary) frame into WARC records via
-    mapInPandas — one output row per record, input partitioning
-    preserved, no shuffle."""
+    """Explode a (blob_id, content binary) frame into WARC records —
+    one output row per record, input partitioning preserved, no
+    shuffle."""
+    from pyspark.sql import functions as F
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in WARC_RECORD_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            # plain ndarray zip, not iterrows(): per-row Series
-            # construction would dominate the parse on record-dense blobs
-            for bid, content in zip(
-                pdf[id_col].to_numpy(), pdf[content_col].to_numpy()
-            ):
-                for rec in parse_warc_blob(bytes(content or b"")):
-                    rec["blob_id"] = bid
-                    rows.append(rec)
-            yield pd.DataFrame(rows, columns=cols)
+    from aroa_etl_spark.operators.multimodal import blob_map
 
-    return df.select(id_col, content_col).mapInPandas(kernel, WARC_RECORD_SCHEMA)
+    return blob_map(
+        df.select(F.col(id_col).alias("blob_id"), F.col(content_col).alias("content")),
+        WARC_RECORD_SCHEMA, parse_warc_blob, keys=["blob_id"], args=["content"],
+    )

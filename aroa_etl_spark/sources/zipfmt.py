@@ -37,9 +37,7 @@ from __future__ import annotations
 import re
 import struct
 import zlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -178,7 +176,7 @@ def parse_zip_central(
     except NotImplementedError:
         # named capability boundary (spanned/multi-disk): raise in
         # strict, degrade per-blob in lenient — a fuzzed/poisoned
-        # archive must not kill a 100 TB kernel (round-10 fuzz finding)
+        # archive must not kill a 100 TB kernel
         if strict:
             raise
         return []
@@ -290,26 +288,20 @@ def parse_zip_records(
     verify_crc: bool = True,
 ) -> DataFrame:
     """Explode (blob_id, content binary) into per-member rows plus the
-    archive kind — mapInPandas, zero shuffle."""
+    archive kind — zero shuffle."""
+    from pyspark.sql import functions as F
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in ZIP_MEMBER_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for bid, content in zip(
-                pdf[id_col].to_numpy(), pdf[content_col].to_numpy()
-            ):
-                members = parse_zip_central(
-                    bytes(content or b""), strict=strict, verify_crc=verify_crc
-                )
-                kind = detect_zip_kind([m["name"] for m in members])
-                for m in members:
-                    m["blob_id"] = bid
-                    m["kind"] = kind
-                    rows.append(m)
-            yield pd.DataFrame(rows, columns=cols)
+    from aroa_etl_spark.operators.multimodal import blob_map
 
-    return df.select(id_col, content_col).mapInPandas(kernel, ZIP_MEMBER_SCHEMA)
+    def members(content: bytes) -> list:
+        ms = parse_zip_central(content, strict=strict, verify_crc=verify_crc)
+        kind = detect_zip_kind([m["name"] for m in ms])
+        return [{**m, "kind": kind} for m in ms]
+
+    return blob_map(
+        df.select(F.col(id_col).alias("blob_id"), F.col(content_col).alias("content")),
+        ZIP_MEMBER_SCHEMA, members, keys=["blob_id"], args=["content"],
+    )
 
 
 def extract_zip_member(blob: bytes, name: str) -> bytes:
@@ -386,8 +378,9 @@ def extract_office_text(df: DataFrame, *, strict: bool = True) -> DataFrame:
     paragraph boundaries), epub reads every ``.xhtml``/``.html``
     member in name order — one output row per extracted member.
     Plain/jar archives yield no rows (strict raises: they were routed
-    here by mistake). Scale: mapInPandas, zero shuffle, O(member
-    bytes) for the text members only."""
+    here by mistake). Scale: zero shuffle, O(member bytes) for the
+    text members only."""
+    from aroa_etl_spark.operators.multimodal import blob_map
 
     def rows_for(blob: bytes) -> "list[dict]":
         # lenient mode must survive ANY bad blob (a corrupt archive, a
@@ -426,18 +419,6 @@ def extract_office_text(df: DataFrame, *, strict: bool = True) -> DataFrame:
                 raise
             return []
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in OFFICE_TEXT_SCHEMA.fields]
-        for pdf in batches:
-            rows = []
-            for bid, content in zip(
-                pdf["blob_id"].to_numpy(), pdf["content"].to_numpy()
-            ):
-                for rec in rows_for(bytes(content or b"")):
-                    rec["blob_id"] = bid
-                    rows.append(rec)
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.select("blob_id", "content").mapInPandas(
-        kernel, OFFICE_TEXT_SCHEMA
+    return blob_map(
+        df, OFFICE_TEXT_SCHEMA, rows_for, keys=["blob_id"], args=["content"]
     )

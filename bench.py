@@ -2,20 +2,20 @@
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
 and prints ONE JSON line with per-query wall times.
 
-Protocol (since round 8, r7 verdict ask #3): each query is timed
-REPS (=3) times within the shared session and the reported number is
-the MEDIAN — single-run driver variance (r07's w2_topk read 4.88 s vs
-a same-host rerun's 2.71 s on unchanged code) previously masqueraded
-as regression.  Min/max per query ship in a "variance" tail so spread
-stays visible.  The timed action is a full materialization (collect of
-the aggregate result or count for large outputs) so the whole plan —
-scan, shuffle, agg — is paid.  Rounds ≤7 timed each query once;
-cross-round comparison vs those files should expect the median to sit
-at or below the old single-shot numbers (first-run cache warmup moves
-to run 1 of 3).
+Protocol: each query is timed REPS (=3) times within the shared
+session and the reported number is the MEDIAN — single-run
+variance (one w2_topk run read 4.88 s vs a same-host rerun's 2.71 s
+on unchanged code) otherwise masquerades as regression.  Min/max per
+query ship in a "variance" tail so spread stays visible.  The timed
+action is a full materialization (collect of the aggregate result or
+count for large outputs) so the whole plan —
+scan, shuffle, agg — is paid.  BENCH_r01..r07 timed each query once;
+comparison vs those files should expect the median to sit at or below
+the old single-shot numbers (first-run cache warmup moves to run 1 of
+3).
 
-Since round 13 (r12 verdict ask #1 — the recorded bench absorbed a
-~1.65x uniform host-throughput shift twice in three rounds): a FIXED
+The bench carries its own yardstick, because recorded benches have
+absorbed ~1.65x uniform host-throughput shifts: a FIXED
 pure-CPU calibration workload (xxhash64 fold over spark.range, no
 input data, no Python) is timed at bench start and end and shipped in
 the final line ("calibration", median seconds).  Normalized medians
@@ -65,7 +65,7 @@ def main() -> None:
     # plan-audited and pinned by tests/test_plan_invariants.py; their
     # `WindowExec: No Partition Defined` warnings would flood the bench
     # tail and let a REAL data-sized unpartitioned window hide in the
-    # noise (r7 verdict ask #8) — scope the logger down for the bench
+    # noise — scope the logger down for the bench
     # only; the plan-invariant tests, not the log, are the guard.
     jvm_log = spark._jvm.org.apache.log4j  # noqa: SLF001
     jvm_log.Logger.getLogger(
@@ -83,7 +83,7 @@ def main() -> None:
     # so the first timed query doesn't absorb one-time JVM startup cost.
     spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).limit(1).count()
 
-    # Python-worker warmup, same principle (r13): the first
+    # Python-worker warmup, same principle: the first
     # mapInPandas/Arrow entry otherwise absorbs the one-time daemon +
     # per-core worker spawn and Arrow serializer init (measured ~9 s
     # extra on mm_jpeg_dims_scan's first rep at local[32]) — spawn one
@@ -101,8 +101,8 @@ def main() -> None:
 
     # Streaming warmup, same principle: the first streaming query
     # otherwise absorbs the one-time MicroBatchExecution / state-store /
-    # sink JIT (~3.5 s measured on a fresh session) — r9's
-    # st_windowed_counts median read 1.39 s vs a steady state of ~1.0 s
+    # sink JIT (~3.5 s measured on a fresh session) — a
+    # st_windowed_counts median once read 1.39 s vs a steady state of ~1.0 s
     # purely because rep 1 carried that cold cost into a 3-rep median.
     import tempfile
 
@@ -124,12 +124,11 @@ def main() -> None:
             .awaitTermination()
         )
 
-    from aroa_etl_spark.operators import dedup as _dedup
-    from aroa_etl_spark.operators import stats as _stats
+    from aroa_etl_spark.operators.dedup import release_caches
 
     def calibration_secs() -> float:
-        """Fixed pure-CPU reference workload (r12 verdict #1: the bench
-        must carry its own yardstick).  A deterministic xxhash64 fold
+        """Fixed pure-CPU reference workload (the bench carries its own
+        yardstick).  A deterministic xxhash64 fold
         over spark.range touches no input data and no Python workers,
         so its wall time tracks HOST THROUGHPUT (cpu contention,
         frequency scaling) and nothing in this repo.  Median of 3.
@@ -155,7 +154,7 @@ def main() -> None:
         runs: list[float] = []
         spark.sparkContext.setJobDescription(f"bench: {name}")
         while len(runs) < REPS or (
-            # adaptive reps (r12 verdict #1c): when the 3-rep spread
+            # adaptive reps: when the 3-rep spread
             # exceeds 2x the median is contention noise, not signal —
             # buy 2 more samples for that entry only
             len(runs) < REPS + 2 and max(runs) > 2 * min(runs)
@@ -170,9 +169,8 @@ def main() -> None:
             # (dedup barriers + the stats/evaluation persist=True rank
             # caches — without the latter, reps 2..N of
             # eval_classifier_auc reused rep 1's cached scoring
-            # projection via CacheManager plan-matching, r13 verdict #3)
-            _dedup.release_caches()
-            _stats.release_caches()
+            # projection via CacheManager plan-matching)
+            release_caches()
         spark.sparkContext.setJobDescription(None)
         timings[name] = round(statistics.median(runs), 3)
         reps_detail[name] = [round(r, 3) for r in runs]
@@ -186,7 +184,7 @@ def main() -> None:
         sf_val = float(sf)
     except ValueError:
         sf_val = None
-    # Protocol (r10 verdict #1+#3): the driver captures only a
+    # Protocol: the consumer of this output keeps only a
     # 2000-char TAIL of stdout, so EVERYTHING that must survive —
     # every median AND every per-rep timing — lives in ONE compact
     # final line.  "rep_secs" is aligned with "queries" insertion

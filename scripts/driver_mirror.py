@@ -1,8 +1,8 @@
 """Faithful local mirror of the correctness driver.
 
 Builds a PLAIN SparkSession (no get_spark — the driver does not use our
-session factory; round 1 proved that any conf we only set in get_spark
-is invisible to the gate) and runs every catalog query at sf0.01
+session factory, so any conf we only set in get_spark is invisible to
+the gate) and runs every catalog query at sf0.01
 against its DuckDB oracle with the strict repr-level comparator.
 
 Usage: python scripts/driver_mirror.py [sf_dir] [name_filter...]
@@ -58,12 +58,10 @@ def main() -> int:
             results[name] = {"status": "ERROR", "detail": traceback.format_exc()[-500:]}
         results[name]["sec"] = round(time.time() - t0, 2)
         # free operator-internal reuse caches at entry exit so storage
-        # does not accumulate across the sweep (r13 verdict #3)
-        from aroa_etl_spark.operators import dedup as _dedup
-        from aroa_etl_spark.operators import stats as _stats
+        # does not accumulate across the sweep
+        from aroa_etl_spark.operators.dedup import release_caches
 
-        _dedup.release_caches()
-        _stats.release_caches()
+        release_caches()
         print(f"{name:40s} {results[name]['status']:10s} {results[name]['sec']}s", flush=True)
 
     bad = {k: v for k, v in results.items() if v["status"] not in ("ok", "rows_only")}
@@ -76,9 +74,9 @@ def main() -> int:
 
 
 def _write_receipt(results: dict[str, dict], sf_dir: str) -> None:
-    """Persist the mirror outcome as RECEIPTS/r{N}_mirror.json (r6
-    verdict ask #7: attestation receipts must be machine-checkable, not
-    git archaeology).  N = the upcoming round (max CORRECTNESS round +
+    """Persist the mirror outcome as RECEIPTS/r{N}_mirror.json
+    (attestation receipts must be machine-checkable, not git
+    archaeology).  N = the upcoming round (max CORRECTNESS round +
     1).  A full run rewrites the round's receipt; a filtered run MERGES
     its entries into it, so targeted re-attestations after a code change
     keep the receipt fresh without a 30-minute full sweep.  Each entry
@@ -112,10 +110,10 @@ def _write_receipt(results: dict[str, dict], sf_dir: str) -> None:
             entries = json.load(fh).get("entries", {})
     for name, rec in results.items():
         entries[name] = {**rec, "commit": commit, "dirty": dirty, "round": n}
-    # freshness is machine-checked, not just recorded (r7 advice): a
+    # freshness is machine-checked, not just recorded: a
     # filtered run merges into prior entries attested against an older
     # commit — surface that drift in the header so test_receipts and
-    # judges see it without per-entry archaeology
+    # readers see it without per-entry archaeology
     stale = sorted(
         k for k, v in entries.items() if v.get("commit") != commit
     )

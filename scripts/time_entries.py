@@ -21,14 +21,27 @@ from aroa_etl_spark.session import get_spark  # noqa: E402
 COLLECT_CAP = 100_000
 
 
-def main() -> None:
-    args = sys.argv[1:]
+def parse_args(args: list[str], known) -> tuple[str, list[str]]:
+    """Split argv into (sf_dir, entry names); exit with a message naming
+    a missing sf_dir or unknown entries before any session starts."""
     sf_dir = args[0] if args and os.path.isdir(args[0]) else "/root/testdata/sf0.1"
     names = args[1:] if args and os.path.isdir(args[0]) else args
+    if names and "/" in names[0]:
+        sys.exit(f"time_entries: sf_dir {names[0]!r} is not a directory")
+    if not names:
+        sys.exit(__doc__)
+    unknown = [n for n in names if n not in known]
+    if unknown:
+        sys.exit(f"time_entries: unknown catalog entries: {', '.join(unknown)}")
+    return sf_dir, names
+
+
+def main() -> None:
+    qmap = catalog.queries()
+    sf_dir, names = parse_args(sys.argv[1:], qmap)
     reps = int(os.environ.get("REPS", "4"))
     spark = get_spark(app_name="time_entries")
     spark.sparkContext.setLogLevel("ERROR")
-    qmap = catalog.queries()
 
     # same warmups as bench.py: parquet reader + python workers
     spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).limit(1).count()
@@ -37,8 +50,7 @@ def main() -> None:
         lambda it: it, "id long"
     ).write.format("noop").mode("overwrite").save()
 
-    from aroa_etl_spark.operators import dedup as _dedup
-    from aroa_etl_spark.operators import stats as _stats
+    from aroa_etl_spark.operators.dedup import release_caches
 
     for name in names:
         runs = []
@@ -50,8 +62,7 @@ def main() -> None:
             if len(rows) > COLLECT_CAP:
                 df.count()
             runs.append(time.perf_counter() - t0)
-            _dedup.release_caches()
-            _stats.release_caches()
+            release_caches()
         spark.sparkContext.setJobDescription(None)
         med = statistics.median(runs[1:]) if len(runs) > 1 else runs[0]
         print(

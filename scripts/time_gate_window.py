@@ -4,7 +4,7 @@ first 50 of queries() in order, strict comparator, plain session.
 Usage: python scripts/time_gate_window.py [sf_dir]
 Prints per-entry seconds for anything over the threshold and the window
 total — run this after re-curating GATE_PRIORITY so no round ships a
-window the gate can't afford (~10 s/entry budget, see VERDICT r2 #3).
+window the gate can't afford (~10 s/entry budget).
 """
 
 from __future__ import annotations
@@ -21,8 +21,8 @@ from aroa_etl_spark.plans import catalog  # noqa: E402
 from tests.oracle_harness import compare  # noqa: E402
 
 THRESHOLD_S = 8.0
-# Total spark-side budget for the 50-entry window (r6 verdict ask #8):
-# the r5 window ran 40.6 s and the r6 window 58.6-62.2 s as heavy
+# Total spark-side budget for the 50-entry window: earlier windows ran
+# 40.6 s and then 58.6-62.2 s as heavy
 # codec/streaming families rotated in — 120 s leaves ~2x headroom over
 # the observed trend while still failing LOUDLY here, before a driver
 # timeout finds it first.  Exceeding either budget exits nonzero.
@@ -54,12 +54,10 @@ def main() -> None:
         if dt > THRESHOLD_S:
             slow.append((n, round(dt, 1)))
         compare(df, sf_dir, spec.oracle, name=n)
-        # free operator-internal caches at entry exit (r13 verdict #3)
-        from aroa_etl_spark.operators import dedup as _dedup
-        from aroa_etl_spark.operators import stats as _stats
+        # free operator-internal caches at entry exit
+        from aroa_etl_spark.operators.dedup import release_caches
 
-        _dedup.release_caches()
-        _stats.release_caches()
+        release_caches()
     print(
         f"spark-side total: {spark_total:.1f}s over {len(names)} entries "
         f"(wall incl. oracles: {time.time() - t0:.1f}s)"

@@ -182,3 +182,32 @@ def test_triage_gate_upstream_of_decode(spark, sf_dir):
         "decode MapInPandas must sit above the gate Filter in the tree "
         "(Spark prints operators top-down: downstream first)"
     )
+
+
+def test_per_blob_kernels_use_the_shared_runner():
+    """Per-blob decode/explode kernels run through
+    ``multimodal.blob_map``: outside the runner's own body, the
+    multimodal, PDF, archive-source and multimodal-catalog modules
+    hand-roll no ``mapInPandas`` batch loop and no ``iterrows`` walk."""
+    import ast
+    from pathlib import Path
+
+    import aroa_etl_spark
+
+    root = Path(aroa_etl_spark.__file__).parent
+    modules = [
+        "operators/multimodal.py",
+        "operators/pdfscan.py",
+        *(f"sources/{m}.py" for m in
+          ("tarfmt", "zipfmt", "warc", "mbox", "tfrecord", "avro_ocf")),
+        "plans/catalog_mm.py",
+    ]
+    for rel in modules:
+        lines = (root / rel).read_text().splitlines()
+        for node in ast.parse("\n".join(lines)).body:
+            if isinstance(node, ast.FunctionDef) and node.name == "blob_map":
+                del lines[node.lineno - 1:node.end_lineno]
+                break
+        src = "\n".join(lines)
+        for banned in (".mapInPandas(", "iterrows(", "def kernel("):
+            assert banned not in src, f"{rel}: hand-rolled {banned!r}"
