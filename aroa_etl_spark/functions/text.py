@@ -32,8 +32,6 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from aroa_etl_spark.operators.skew import persist_coalesced as _persist_coalesced
-
 # Tiny per-language stopword vocabularies (public common function words).
 # Deliberately small: the heuristic is "which vocabulary hits most
 # tokens", not a trained model.
@@ -294,8 +292,8 @@ def quality_score_from(
     three times (token count, stopword ratio, and typically a caller's
     own token column); whole-stage codegen does not reliably eliminate
     the repeated regex-split subtrees, so on a documents-table scan the
-    tokenization dominates (root-caused round 6: the bench entry's
-    +20% drift was this, not noise).  Same integer arithmetic, same
+    tokenization dominates (root-caused: a bench entry's +20% drift
+    was this, not noise).  Same integer arithmetic, same
     oracle — ``toks`` must be a plain column reference from a previous
     projection (the shingles_from re-evaluation rule)."""
     toks = F.col(toks) if isinstance(toks, str) else toks
@@ -674,14 +672,13 @@ def pack_sequences(
     # token counts are integral by contract; the explicit BIGINT cast
     # (a) keeps `div` analyzable when the column arrives as
     # DOUBLE/FLOAT from parquet (Spark's `div` rejects non-integral
-    # operands — r5 review finding) and (b) truncates any fractional
+    # operands) and (b) truncates any fractional
     # count deterministically in BOTH engines before summation.
     tok = F.col(token_col).cast("bigint")
     cum_excl = F.sum(tok).over(w) - tok
     # `div` is exact BIGINT division (matches the oracle's `//`); a
     # float divide-then-floor would round once a shard's cumulative
-    # token count passed 2^53, breaking the bit-for-bit DuckDB replay
-    # (round-4 advisor finding).
+    # token count passed 2^53, breaking the bit-for-bit DuckDB replay.
     return (
         out.select("*", cum_excl.alias("__cum"))
         .select(
@@ -955,7 +952,7 @@ def bpe_train(
         df.select(F.explode(toks).alias("w"))
         .groupBy("w").agg(F.count(F.lit(1)).alias("freq"))
         .select(F.regexp_replace("w", "(.)", "<$1>").alias("w"), "freq")
-        .transform(_persist_coalesced)
+        .persist()
     )
     wf = base
     try:

@@ -61,6 +61,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from aroa_etl_spark.operators.skew import spread_small
+
 
 def _dot(x: Column, y: Column) -> Column:
     return F.aggregate(
@@ -95,8 +97,6 @@ def brute_force_topk(
     Broadcast the (small) query set against the corpus scan; rank with
     a per-query window. Ties break by neighbor id ascending so results
     are total-ordered and reproducible."""
-    from aroa_etl_spark.operators.skew import spread_small
-
     q = queries.select(
         F.col(query_id).alias("query_id"), F.col(query_vec).alias("__qv")
     )
@@ -215,32 +215,17 @@ def _cents_col(centroids: "list[list[float]]") -> Column:
     literal.  A nested F.lit embeds every double as a source-level
     constant in the generated Java, so any change to the centroid
     values (every Lloyd round, every fresh search) is a fresh Janino
-    compile (~0.5-2 s at 8×64, measured r13); the json string rides the
+    compile (~0.5-2 s at 8×64, measured); the json string rides the
     codegen references array instead, making the generated source
     byte-identical across rounds and calls — compiled once per session.
     json.dumps repr round-trips finite doubles exactly, so distances
-    are bit-identical to the literal form (differential-checked r13)."""
+    are bit-identical to the literal form (differential-checked)."""
     import json as _json
 
     return F.from_json(
         F.lit(_json.dumps([[float(v) for v in c] for c in centroids])),
         "array<array<double>>",
     )
-
-
-def _spread_small(df: DataFrame) -> DataFrame:
-    """Round-robin a frame up to core-count partitions when its scan
-    plans FEWER — higher-order-function kernels (distance lambdas) are
-    interpreted, so a small single-file input otherwise evaluates them
-    serially on one task (guide §2.5: input skew; measured ~2 s/round
-    serial vs ~0.15 s spread on the 500-row gate fixture).  Inputs
-    that already have >= defaultParallelism partitions — any corpus at
-    scale — pass through untouched, so no shuffle is ever added to a
-    big scan.  (Shared implementation: operators/skew.spread_small,
-    promoted there in r13 for the other scan-side kernels.)"""
-    from aroa_etl_spark.operators.skew import spread_small
-
-    return spread_small(df)
 
 
 def ivf_topk(
@@ -315,7 +300,7 @@ def ivf_topk(
     # cell assignment runs the interpreted distance lambda per corpus
     # row BEFORE any exchange, i.e. at the scan's parallelism — spread
     # small single-file corpora so it isn't one serial task
-    c = _spread_small(corpus).select(
+    c = spread_small(corpus).select(
         F.col(corpus_id).alias("neighbor_id"),
         F.col(corpus_vec).alias("__cv"),
         assign(corpus_vec).alias("__cell"),
@@ -661,15 +646,12 @@ def ivf_train_centroids(
         train = train.sample(fraction=train_fraction, seed=seed)
     # Higher-order-function distance kernels are interpreted (no
     # codegen), so a training sample that scans as FEWER partitions
-    # than cores runs the whole assignment serially — the r13 profile
+    # than cores runs the whole assignment serially — a profile
     # put ~2 s/round on ONE task for a 1-file 500-row fixture.  Spread
     # small inputs to core count; at scale the sample already has >=
     # core-count partitions and this is a no-op (scale-adaptive, not a
     # local[] constant — guide §2.5 input-skew rule).
-    from aroa_etl_spark.operators.skew import persist_coalesced
-
-    train = _spread_small(train)
-    train = persist_coalesced(train)
+    train = spread_small(train).persist()
     try:
         # first materialization doubles as the emptiness check and the
         # seeded init sample — the old separate .first() probe and
@@ -718,13 +700,13 @@ def ivf_save_centroids(spark, centroids: "list[list[float]]", path: str) -> None
     Written DRIVER-SIDE with pyarrow, no Spark job at all: the
     quantizer is n_centroids × dim floats of metadata, exactly the
     "driver does metadata, executors do data" split (guide §5).  The
-    r12 createDataFrame routes both cost seconds for 8 rows — the
+    createDataFrame routes both cost seconds for 8 rows — the
     pickled path pays a sequential Python-worker round-trip per
     parallelize slice under coalesce(1) (~4 s at local[32]), and the
     pandas/Arrow path silently falls back to pickled rows on any
     session without spark.sql.execution.arrow.pyspark.enabled (the
-    correctness driver's plain session — measured 5.5-6.8 s there,
-    r13).  The pyarrow write is ~0.01 s on every session and
+    correctness driver's plain session — measured 5.5-6.8 s there).
+    The pyarrow write is ~0.01 s on every session and
     spark.read.parquet reads the single file unchanged."""
     import os
 
@@ -734,7 +716,7 @@ def ivf_save_centroids(spark, centroids: "list[list[float]]", path: str) -> None
     os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
     # a previous run (or the old Spark writer) may have left a
     # DIRECTORY at path — pq.write_table writes a single file and
-    # would raise on it (r13 verdict #7)
+    # would raise on it
     if os.path.isdir(path):
         import shutil
 

@@ -43,13 +43,7 @@ from pyspark.sql import types as T
 from aroa_etl_spark.functions.simkernels import person_similarity
 from aroa_etl_spark.functions.vocab import has_value
 from aroa_etl_spark.operators.matching import _score_udf, candidate_pairs
-
-# Cached plans compile without AQE partition coalescing unless this
-# session flag is on; the iterative loops below persist per-round
-# frames, so they enable it for their lifetime (details in
-# connected_components' docstring).  Module switch for A/B harnesses.
-_AQE_CACHE = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-_AQE_CACHE_ON = True
+from aroa_etl_spark.session import scoped_conf
 
 # Size of one edge row in the "fits on the driver" test: two 8-byte ids.
 _EDGE_BYTES = 16
@@ -123,25 +117,15 @@ def connected_components(
     (ContextCleaner frees them when the frame is unreferenced).
 
     ``num_partitions`` pins ``spark.sql.shuffle.partitions`` for the
-    call's lifetime (restored on exit), so the edge derivation upstream
-    (materialized by the checkpoint) and every round shuffle at that
-    width. Labels are (node, label) pairs, tiny next to the data they
-    describe, so a session-wide shuffle width (e.g. 200 under a plain
-    driver session) schedules mostly-empty tasks every round; size it to
-    ~nodes×16 bytes / 64 MB, floored at the cluster's default
-    parallelism. ``None`` (default) leaves the session conf alone.
-
-    The call also enables
-    ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`` for
-    its lifetime (restored on exit): every round persists a labels
-    frame, and with the flag at its default (false) cached plans
-    compile WITHOUT AQE partition coalescing, so each round's tiny
-    label shuffle materializes at the full pinned width — dozens of
-    near-empty tasks per round whose scheduling dominates small/medium
-    graphs. With the flag on, AQE sizes every round by the 64 MB
-    advisory instead — width follows the data at any scale (guide §2.2
-    fewer-larger partitions; no constant tuned to either local mode or
-    a cluster).
+    call's lifetime through :func:`~aroa_etl_spark.session.scoped_conf`
+    (restored on exit; concurrent pinned calls take turns), so the edge
+    derivation upstream (materialized by the checkpoint) and every
+    round shuffle at that width. Labels are (node, label) pairs, tiny
+    next to the data they describe, so a session-wide shuffle width
+    (e.g. 200 under a plain driver session) schedules mostly-empty
+    tasks every round; size it to ~nodes×16 bytes / 64 MB, floored at
+    the cluster's default parallelism. ``None`` (default) leaves the
+    session conf alone.
 
     ``stats`` (optional dict) receives ``path`` (``"driver"`` or
     ``"rounds"``), ``edges`` (edge rows after dropping self-loops and
@@ -150,33 +134,26 @@ def connected_components(
     """
     spark = edges.sparkSession
     stats = {} if stats is None else stats
-    conf_before: str | None = None
-    aqe_before = spark.conf.get(_AQE_CACHE, "false")
-    if num_partitions is not None:
-        conf_before = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(num_partitions))
-    spark.conf.set(_AQE_CACHE, "true" if _AQE_CACHE_ON else aqe_before)
-    ck = None
-    try:
+    pin = {} if num_partitions is None else {"spark.sql.shuffle.partitions": str(num_partitions)}
+    with scoped_conf(spark, pin):
         ck, n_edges = _edge_checkpoint(edges, src, dst)
-        stats["edges"] = n_edges
-        id_type = ck.schema["a"].dataType
-        driver_ok = isinstance(id_type, T.IntegralType) or id_type == T.StringType()
-        # the threshold in bytes as the planner reads it (-1: never broadcast)
-        threshold = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
-        if driver_ok and n_edges * _EDGE_BYTES <= threshold:
-            stats["path"] = "driver"
-            return _components_on_driver(ck, stats)
-        stats["path"] = "rounds"
-        return _propagation_rounds(ck, max_iter, dedup_edges, checkpoint_every, stats)
-    finally:
-        if ck is not None:
+        try:
+            stats["edges"] = n_edges
+            id_type = ck.schema["a"].dataType
+            driver_ok = isinstance(id_type, T.IntegralType) or id_type == T.StringType()
+            # the threshold in bytes as the planner reads it (-1: never broadcast)
+            threshold = (
+                spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+            )
+            if driver_ok and n_edges * _EDGE_BYTES <= threshold:
+                stats["path"] = "driver"
+                return _components_on_driver(ck, stats)
+            stats["path"] = "rounds"
+            return _propagation_rounds(ck, max_iter, dedup_edges, checkpoint_every, stats)
+        finally:
             # both results are materialized without it: free its blocks
             # now, not whenever a JVM GC lets the ContextCleaner run
             ck._jdf.queryExecution().analyzed().rdd().unpersist(False)
-        spark.conf.set(_AQE_CACHE, aqe_before)
-        if conf_before is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", conf_before)
 
 
 def _edge_checkpoint(edges: DataFrame, src: str, dst: str) -> tuple[DataFrame, int]:
@@ -352,116 +329,96 @@ def connected_components_star(
     star variant when diameters are unbounded. ``stats['rounds']``
     reports the converged round count (for tests and tuning).
     """
-    spark = edges.sparkSession
-    # same cached-plan AQE-coalescing scope as connected_components:
-    # the oriented edge set is persisted and every round re-scans it —
-    # without the flag it materializes at full pinned width however
-    # small the graph is
-    conf_before: str | None = None
-    aqe_before = spark.conf.get(_AQE_CACHE, "false")
-    if num_partitions is not None:
-        conf_before = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(num_partitions))
-    spark.conf.set(_AQE_CACHE, "true" if _AQE_CACHE_ON else aqe_before)
-    try:
-        return _connected_components_star_loop(edges, src, dst, max_iter, stats)
-    finally:
-        spark.conf.set(_AQE_CACHE, aqe_before)
-        if conf_before is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", conf_before)
-
-
-def _connected_components_star_loop(
-    edges: DataFrame, src: str, dst: str, max_iter: int, stats: dict | None
-) -> DataFrame:
-    # orient every edge big → small once; self-loops dropped
-    e = (
-        edges.select(
-            F.greatest(F.col(src), F.col(dst)).alias("u"),
-            F.least(F.col(src), F.col(dst)).alias("v"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .persist()
-    )
-
-    def probe(df: DataFrame):
-        # set-identity witness: order-independent sum of per-edge hashes
-        # (+ count) — equal probes on consecutive rounds mean the edge
-        # set reached the star fixpoint, where both ops are the identity
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("s"),
-        ).collect()[0]
-        return (row["n"], row["s"])
-
-    prev = probe(e)
-    rounds = 0
-    cached = [e]
-    for i in range(max_iter):
-        rounds = i + 1
-        # large-star: sym view, per-node min over ALL neighbors ∪ self,
-        # larger neighbors re-point at it
-        sym = e.select("u", "v").unionByName(
-            e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        m = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
-        # no distinct here: m2's min-agg absorbs duplicate (v, m) pairs
-        # and the per-round dedup on new_e bounds the edge set — one
-        # shuffle per round instead of two
-        large = (
-            sym.join(m, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+    pin = {} if num_partitions is None else {"spark.sql.shuffle.partitions": str(num_partitions)}
+    with scoped_conf(edges.sparkSession, pin):
+        # orient every edge big → small once; self-loops dropped
+        e = (
+            edges.select(
+                F.greatest(F.col(src), F.col(dst)).alias("u"),
+                F.least(F.col(src), F.col(dst)).alias("v"),
+            )
             .filter(F.col("u") != F.col("v"))
-        )
-        # small-star: edges are big → small, so N≤(u) is exactly the
-        # neighbor set along this orientation
-        m2 = large.groupBy("u").agg(F.min("v").alias("m"))
-        new_e = (
-            large.join(m2, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .unionByName(m2.select("u", F.col("m").alias("v")))
             .distinct()
+            .persist()
         )
-        # lineage cut EVERY round: a star round references the previous
-        # edge set four times (sym twice + two joins), so without a cut
-        # the analyzed plan grows ~4^k — Catalyst analysis, not data,
-        # becomes the cost (measured: rounds 1-2 ≈ 1 s, round 3 ≈ 18 s
-        # with persist-only). The eager checkpoint materializes the
-        # (tiny) edge set and makes every round's plan constant-size.
-        # The convergence probe rides the SAME materialization as an
-        # Observation (observed metrics fire on an eager localCheckpoint)
-        # — one job per round instead of two; per-round cost here is
-        # job/stage overhead, not data (guide §1.2).
-        obs = Observation()
-        new_e = new_e.observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("s"),
-        ).localCheckpoint(eager=True)
-        got = obs.get
-        cur = (got["n"], got["s"])
-        e = new_e
-        if cur == prev:
-            break
-        prev = cur
 
-    out = (
-        e.select(F.col("u").alias("node"), F.col("v").alias("component"))
-        .unionByName(
-            e.select(F.col("v").alias("node"), F.col("v").alias("component")).distinct()
+        def probe(df: DataFrame):
+            # set-identity witness: order-independent sum of per-edge hashes
+            # (+ count) — equal probes on consecutive rounds mean the edge
+            # set reached the star fixpoint, where both ops are the identity
+            row = df.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("s"),
+            ).collect()[0]
+            return (row["n"], row["s"])
+
+        prev = probe(e)
+        rounds = 0
+        cached = [e]
+        for i in range(max_iter):
+            rounds = i + 1
+            # large-star: sym view, per-node min over ALL neighbors ∪ self,
+            # larger neighbors re-point at it
+            sym = e.select("u", "v").unionByName(
+                e.select(F.col("v").alias("u"), F.col("u").alias("v"))
+            )
+            m = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
+            # no distinct here: m2's min-agg absorbs duplicate (v, m) pairs
+            # and the per-round dedup on new_e bounds the edge set — one
+            # shuffle per round instead of two
+            large = (
+                sym.join(m, "u")
+                .filter(F.col("v") > F.col("u"))
+                .select(F.col("v").alias("u"), F.col("m").alias("v"))
+                .filter(F.col("u") != F.col("v"))
+            )
+            # small-star: edges are big → small, so N≤(u) is exactly the
+            # neighbor set along this orientation
+            m2 = large.groupBy("u").agg(F.min("v").alias("m"))
+            new_e = (
+                large.join(m2, "u")
+                .select(F.col("v").alias("u"), F.col("m").alias("v"))
+                .filter(F.col("u") != F.col("v"))
+                .unionByName(m2.select("u", F.col("m").alias("v")))
+                .distinct()
+            )
+            # lineage cut EVERY round: a star round references the previous
+            # edge set four times (sym twice + two joins), so without a cut
+            # the analyzed plan grows ~4^k — Catalyst analysis, not data,
+            # becomes the cost (measured: rounds 1-2 ≈ 1 s, round 3 ≈ 18 s
+            # with persist-only). The eager checkpoint materializes the
+            # (tiny) edge set and makes every round's plan constant-size.
+            # The convergence probe rides the SAME materialization as an
+            # Observation (observed metrics fire on an eager localCheckpoint)
+            # — one job per round instead of two; per-round cost here is
+            # job/stage overhead, not data (guide §1.2).
+            obs = Observation()
+            new_e = new_e.observe(
+                obs,
+                F.count(F.lit(1)).alias("n"),
+                F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("s"),
+            ).localCheckpoint(eager=True)
+            got = obs.get
+            cur = (got["n"], got["s"])
+            e = new_e
+            if cur == prev:
+                break
+            prev = cur
+
+        out = (
+            e.select(F.col("u").alias("node"), F.col("v").alias("component"))
+            .unionByName(
+                e.select(F.col("v").alias("node"), F.col("v").alias("component")).distinct()
+            )
+            .groupBy("node")
+            .agg(F.min("component").alias("component"))
+            .localCheckpoint(eager=True)
         )
-        .groupBy("node")
-        .agg(F.min("component").alias("component"))
-        .localCheckpoint(eager=True)
-    )
-    for df in cached:
-        df.unpersist()
-    if stats is not None:
-        stats["rounds"] = rounds
-    return out
+        for df in cached:
+            df.unpersist()
+        if stats is not None:
+            stats["rounds"] = rounds
+        return out
 
 
 def _star_edges(df: DataFrame, id_col: str, key_col: str) -> DataFrame:

@@ -28,6 +28,8 @@ Scale notes (100 TB posture):
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -48,25 +50,19 @@ from aroa_etl_spark.functions.text import (
 # localCheckpoint) is deliberate: the columnar InMemoryRelation keeps
 # stats + whole-stage codegen for the downstream self-joins — measured
 # 1.9× faster on the simhash band join than a checkpoint's row-based
-# RDD scan at sf0.1.
+# RDD scan at sf0.1. The lock makes append and take-all atomic, so a
+# frame registered while release_caches runs is released by this call
+# or the next, never dropped from the registry while still persisted.
 _CACHED_FRAMES: list[DataFrame] = []
+_CACHED_FRAMES_LOCK = threading.Lock()
 
 
 def _barrier(df: DataFrame) -> DataFrame:
     """Persist ``df`` as an optimizer barrier + reuse point and register
-    it for :func:`release_caches`.
-
-    The cached plan is compiled WITH AQE partition coalescing
-    (``canChangeCachedPlanOutputPartitioning`` binds at persist time):
-    without it a barrier materializes at the session's
-    full shuffle width — under the correctness driver's plain session
-    that is 200 near-empty tasks per cache fill for frames of a few MB
-    (guide §2.2 fewer-larger partitions; at scale AQE's 64 MB advisory
-    keeps the width large)."""
-    from aroa_etl_spark.operators.skew import persist_coalesced
-
-    df = persist_coalesced(df)
-    _CACHED_FRAMES.append(df)
+    it for :func:`release_caches`."""
+    df = df.persist()
+    with _CACHED_FRAMES_LOCK:
+        _CACHED_FRAMES.append(df)
     return df
 
 
@@ -77,14 +73,16 @@ def release_caches() -> int:
     the final action on the result (the frames are plan-internal, so
     the operators themselves can never know when the caller is done).
     Returns the number of frames released."""
+    with _CACHED_FRAMES_LOCK:
+        frames = _CACHED_FRAMES[:]
+        _CACHED_FRAMES.clear()
     n = 0
-    for df in _CACHED_FRAMES:
+    for df in frames:
         try:
             df.unpersist()
             n += 1
         except Exception:
             pass
-    _CACHED_FRAMES.clear()
     return n
 
 

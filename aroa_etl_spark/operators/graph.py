@@ -27,8 +27,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from aroa_etl_spark.operators.skew import persist_coalesced
-
 __all__ = ["pagerank"]
 
 SCALE = 1_000_000_000_000  # 1e12 fixed-point rank units
@@ -187,10 +185,10 @@ def bfs_hops(
         e = e.union(
             edges.select(F.col(dst).alias("src"), F.col(src).alias("dst"))
         )
-    e = persist_coalesced(e)
+    e = e.persist()
     cached = [e]
     node_col = seeds.columns[0]
-    frontier = persist_coalesced(seeds.select(F.col(node_col).alias("node")).distinct())
+    frontier = seeds.select(F.col(node_col).alias("node")).distinct().persist()
     cached.append(frontier)
     visited = frontier
     out = frontier.withColumn("dist", F.lit(0).cast("int"))
@@ -204,7 +202,7 @@ def bfs_hops(
         if checkpoint_every and h % checkpoint_every == 0:
             frontier = frontier.localCheckpoint(eager=True)
         else:
-            frontier = persist_coalesced(frontier)
+            frontier = frontier.persist()
             cached.append(frontier)
         # JVM-side emptiness probe (df.rdd.isEmpty() would route every
         # frontier through Python-RDD serialization — measured ~4x the

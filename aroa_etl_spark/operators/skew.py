@@ -29,31 +29,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_AQE_CACHE = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-
-
-def persist_coalesced(df: DataFrame) -> DataFrame:
-    """``persist()`` with the cached plan compiled under AQE partition
-    coalescing.
-
-    ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``
-    defaults to false, so a cached plan normally compiles WITHOUT AQE
-    and materializes at the session's full shuffle width — under the
-    correctness driver's plain session that is 200 near-empty tasks
-    per cache fill for frames of a few MB.  The flag binds at persist
-    time (verified r14: on@persist/off@action coalesces, the reverse
-    does not), so scoping it here covers every caller without touching
-    session state elsewhere.  Scale-adaptive by construction: AQE's
-    64 MB advisory keeps genuinely large caches wide (guide §2.2)."""
-    spark = df.sparkSession
-    before = spark.conf.get(_AQE_CACHE, "false")
-    spark.conf.set(_AQE_CACHE, "true")
-    try:
-        return df.persist()
-    finally:
-        spark.conf.set(_AQE_CACHE, before)
-
-
 def spread_small(df: DataFrame) -> DataFrame:
     """Round-robin a frame up to core-count partitions when its plan
     yields FEWER — the input-skew mitigation of guide §2.5 for heavy
@@ -66,7 +41,7 @@ def spread_small(df: DataFrame) -> DataFrame:
     at scale already plans >= defaultParallelism partitions and passes
     through untouched, so no shuffle is ever added to a big scan; at
     fixture scale the repartition moves a few MB once and the kernel
-    parallelizes (measured r13: the classifier-scoring scan 2.5 s
+    parallelizes (measured: the classifier-scoring scan 2.5 s
     serial -> ~0.3 s spread at sf0.1)."""
     sc = df.sparkSession.sparkContext
     dp = sc.defaultParallelism

@@ -14,7 +14,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from aroa_etl_spark.operators.skew import persist_coalesced
 from aroa_etl_spark.plans.catalog import query
 from aroa_etl_spark.session import load_tables
 
@@ -41,8 +40,8 @@ _POW60 = "1152921504606846976"
 # PROCESS (reuse never crosses process/run boundaries — see the entry)
 _PRUNED_STAGED_ROOTS: set = set()
 
-# same stage-once discipline for the lakehouse snapshot fixtures (r13,
-# extending the r12 verdict-#2 template): root -> staging artifacts the
+# same stage-once discipline for the lakehouse snapshot fixtures (the
+# pruned-read template): root -> staging artifacts the
 # attestations need (snapshot ids).  Per-process ONLY — a fresh
 # bench/oracle process always rebuilds from the parquet inputs.
 _SNAPSHOT_STAGED: dict = {}
@@ -447,7 +446,7 @@ def tdp_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # DuckDB replay of the Public Suffix List algorithm over a
 # hosts(doc_id, host) CTE -> doms(doc_id, domain).  The rule table is
-# the COMPLETE vendored publicsuffix.org snapshot (round 11) read from
+# the COMPLETE vendored publicsuffix.org snapshot read from
 # the very same file functions/web.load_psl_snapshot ships — ~9.5k
 # rules — with comments dropped and the '!' prefix stripped into the
 # kind column, the same normalization registered_domain_psl applies to
@@ -531,7 +530,7 @@ _PSL_DOMAIN_SQL = r"""
 )
 def web_domain_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-registered-domain URL statistics under the REAL Public
-    Suffix List path (functions/web.registered_domain_psl — round 10;
+    Suffix List path (functions/web.registered_domain_psl;
     the two-label heuristic stays attested as the zero-join fallback
     via web_blocklist_filter): URLs are planted in-plan (a co.uk shop
     URL with a www+mixed-case host every third doc, a bare .net CDN URL
@@ -541,7 +540,7 @@ def web_domain_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     rolled up to eTLD+1 with the published PSL algorithm over the
     broadcast snapshot (exception beats longest beats implicit '*';
     www needs no special-casing — co.uk rules absorb the label) — and
-    since round 11 the snapshot is the COMPLETE vendored
+    the snapshot is the COMPLETE vendored
     publicsuffix.org list (~9.5k rules), with the oracle replaying the
     identical algorithm in SQL over the VERY SAME file via read_csv,
     so both engines see all wildcards/exceptions, not a curated slice.  Scale: candidates explode ≤5 rows per DISTINCT host,
@@ -1651,7 +1650,7 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def tdp_curation_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """END-TO-END curation v2 — the round-3 composition story: planted
+    """END-TO-END curation v2 — the composition story: planted
     boilerplate -> corpus line dedup (line_dedup) -> token-count gate
     (>=20) -> overlapping chunking (token_chunks_overlap 32/24) ->
     deterministic hash split -> per-split chunk statistics. Every stage
@@ -1916,8 +1915,8 @@ def tdp_domain_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-domain document quotas — the crawl-curation cap that stops a
     handful of giant domains from dominating a corpus (C4/RefinedWeb
     recipe), rolled up to eTLD+1 under the REAL Public Suffix List
-    path (round 10; round 11 swapped in the COMPLETE vendored
-    publicsuffix.org snapshot on both engines): the planted URL mix
+    path (the COMPLETE vendored publicsuffix.org snapshot on both
+    engines): the planted URL mix
     includes *.ck wildcard-suffix hosts and the !www.ck exception
     alongside the co.uk family and the example.org long tail, and both
     engines run the published PSL algorithm over the same ~9.5k-rule
@@ -2268,7 +2267,7 @@ def er_linkage_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_cube_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE completes the multi-level-aggregation trio (rollup and
-    GROUPING SETS landed in round 2): all four grouping combinations of
+    GROUPING SETS are attested separately): all four grouping combinations of
     (priority, status) from ONE scan+shuffle via the Expand operator.
     NULL grouping placeholders are coalesced to '<all>' on both sides
     (the synthetic data has no NULL keys, so the marker is unambiguous);
@@ -2436,7 +2435,7 @@ def inc_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def inc_table_commits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The snapshot-manifest transactional table's CRASH-REPLAY MATRIX
-    (operators/table.py — round 10, the one audited commit protocol
+    (operators/table.py — the one audited commit protocol
     behind the incremental family and the streaming upsert sink),
     oracle-attested end to end:
 
@@ -2452,7 +2451,7 @@ def inc_table_commits(spark: SparkSession, sf_dir: str) -> DataFrame:
        either (half commits are invisible by construction);
     5. vacuum(keep_last=1) reaps superseded versions, the orphan, and
        the temp manifest; the snapshot re-reads identically after;
-    6. (round 11, r10 verdict #4) the SAME matrix re-runs with manifest
+    6. the SAME matrix re-runs with manifest
        visibility through the CONDITIONAL-PUT commit protocol over the
        in-repo object-store shim — commits, poisoned replay no-op,
        vacuum, and a staged two-writer race whose loser must raise
@@ -2618,7 +2617,7 @@ def inc_table_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = _scratch_stage("table_pruned", sf_dir)
     t = os.path.join(root, "t")
-    # Stage-once discipline (r12 verdict #2: don't re-pay the 16-commit
+    # Stage-once discipline (don't re-pay the 16-commit
     # fixture build per rep — the entry attests a READ-side property).
     # Reuse is PER-PROCESS ONLY: every new process (each bench/oracle
     # invocation) rebuilds the fixture from the parquet inputs, so no
@@ -2630,7 +2629,7 @@ def inc_table_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders = load_tables(spark, sf_dir, ("orders",))["orders"].select(
             "o_orderkey", "o_orderpriority",
             (F.col("o_orderkey") % 16).cast("int").alias("day"),
-        ).transform(persist_coalesced)  # 16 per-day commits scan memory, not parquet
+        ).persist()  # 16 per-day commits scan memory, not parquet
         for day in range(16):
             table_commit(
                 orders.filter(F.col("day") == day), t,
@@ -2657,7 +2656,7 @@ def inc_table_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the returned frame reads the POST-compaction snapshot, so the
     # oracle's value hash IS the compaction content-identity check —
     # the old in-entry before/after collect doubled the read for a
-    # guarantee the gate already provides (r11 verdict finding #2)
+    # guarantee the gate already provides
     return (
         table_read(spark, t, prune={"day": (3, 5)})
         .filter(F.col("day").between(3, 5))
@@ -2860,8 +2859,8 @@ def tdp_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def tdp_perplexity_buckets_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet head/middle/tail partitioning, the 100 TB form (round-5
-    judge ask #3): per-language tercile THRESHOLDS from ONE groupBy
+    """CCNet head/middle/tail partitioning, the 100 TB form:
+    per-language tercile THRESHOLDS from ONE groupBy
     aggregation (``grouped_equidepth_buckets``), broadcast-joined back,
     buckets assigned by comparison — NO per-language window sort
     anywhere in the plan (pinned in test_plan_invariants).  This is
@@ -3593,7 +3592,7 @@ def s_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     declared branch order, NESTED records, block-encoded ARRAYS, and
     the null / raw-deflate / SNAPPY codecs — snappy via the vendored
     pure-Python block-format decoder with the spec's big-endian CRC32
-    verified; round 10 closed all three former boundaries).  Every
+    verified).  Every
     document becomes a 2-4-record OCF (codec rotating ALL SIX — null/
     deflate/snappy/bzip2/xz/zstandard — by blob, multi-block at 2
     records per block) parsed back
@@ -3639,7 +3638,7 @@ def s_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "precision": 10, "scale": 2}},
             {"name": "uid", "type": {
                 "type": "string", "logicalType": "uuid"}},
-            # MULTI-BRANCH union (round 12, r11 verdict #4): the
+            # MULTI-BRANCH union: the
             # Kafka-style event-envelope shape ["null", A, B]
             {"name": "u", "type": ["null", "long", "string"]},
         ],
@@ -3721,7 +3720,7 @@ def s_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the kernel's rec_schema pins the TYPED columns (DateType /
         # TimestampNTZType / DecimalType); the hash surface casts date
         # and decimal because the comparator materializes DuckDB via
-        # pandas (DATE -> datetime64, DECIMAL -> float64 — round-1 law)
+        # pandas (DATE -> datetime64, DECIMAL -> float64)
         F.col("born").cast("string").alias("born"),
         "ts",
         F.col("amt").cast("double").alias("amt"),
@@ -3753,11 +3752,11 @@ def s_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def s_delta_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Delta Lake table READ without delta-spark (round 11 —
-    sources/delta_log.py, the public Delta Transaction Log Protocol
-    replayed directly): orders split into four key-range bands become
-    a PARTITIONED Delta table built by the fixture twin — real
-    part-files, JSON commits with per-file numRecords/min/max STATS,
+    """Delta Lake table READ without delta-spark (sources/delta_log.py,
+    the public Delta Transaction Log Protocol replayed directly):
+    orders split into four key-range bands become a PARTITIONED Delta
+    table built by the fixture twin — real part-files, JSON commits
+    with per-file numRecords/min/max STATS,
     a genuine parquet CHECKPOINT + _last_checkpoint pointer mid-log,
     and a COMPACTION commit (remove + content-identical re-add).  The
     entry then attests, loudly in-entry:
@@ -3801,7 +3800,7 @@ def s_delta_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     ])
     import json as _json
 
-    # Stage-once discipline (r13, the r12-verdict-#2 / pruned-read
+    # Stage-once discipline (the pruned-read
     # template): the fixture build — five band writes + checkpoint —
     # is staging for the READ path the oracle attests.  Reuse is
     # PER-PROCESS ONLY: every fresh bench/oracle process rebuilds from
@@ -3813,11 +3812,10 @@ def s_delta_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(root, ignore_errors=True)
         # the fixture splits this frame five ways (four band writes +
         # the compaction re-add) — persist so each write scans memory,
-        # not parquet (gate-cap trim, r12: the entry sat at 7.9 s vs
-        # the 8 s driver cap)
+        # not parquet (the entry sat at 7.9 s vs the 8 s driver cap)
         banded = orders.withColumn(
             "band", F.floor(F.col("k") * 4 / (maxk + 1)).cast("int")
-        ).transform(persist_coalesced)
+        ).persist()
         part = [
             banded.filter(F.col("band") == b).select("k", "p")
             for b in range(4)
@@ -3831,8 +3829,8 @@ def s_delta_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             stats_cols=["k"],
         )
         # compaction commit: band 1 rewritten content-identically —
-        # expressed through the builder's log-continuation mode (r11
-        # review: the hand-rolled commit/checkpoint writer duplicated
+        # expressed through the builder's log-continuation mode (a
+        # hand-rolled commit/checkpoint writer would duplicate
         # build_delta_table), with the real parquet checkpoint +
         # _last_checkpoint pointer written at version 2.  The re-add
         # writes part[1] again — the SAME frame band 1's original file
@@ -3860,7 +3858,7 @@ def s_delta_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the newest snapshot — checkpoint + one replayed commit, broadcast
     # partition join — is what the returned frame's oracle hash
     # attests; re-reading every historical version here tripled the
-    # entry's Spark jobs for no extra coverage, r12 gate-cap trim) ---
+    # entry's Spark jobs for no extra coverage) ---
     snap = delta_snapshot(t)
     if snap["version"] != 3 or snap["n_commits_replayed"] != 1:
         raise AssertionError(
@@ -3889,7 +3887,7 @@ def s_delta_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"stats pruning ineffective: {len(kept)}/{len(snap['files'])}"
         )
     # protocol honesty on a sibling log (deletionVectors became a
-    # SUPPORTED feature in round 12 — the refusal surface moved to
+    # SUPPORTED feature — the refusal surface is
     # v2Checkpoint, which stays unimplemented)
     t2 = os.path.join(root, "t_features")
     os.makedirs(os.path.join(t2, "_delta_log"), exist_ok=True)
@@ -3932,8 +3930,8 @@ def s_delta_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def s_iceberg_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Apache Iceberg table READ without iceberg-spark (round 11 —
-    sources/iceberg_meta.py, the public spec's metadata tree walked
+    """Apache Iceberg table READ without iceberg-spark
+    (sources/iceberg_meta.py, the public spec's metadata tree walked
     directly, with BOTH Avro layers — manifest lists and manifests —
     read by the engine's own OCF reader): orders in four key-range
     bands become an identity-partitioned Iceberg table built by the
@@ -3974,7 +3972,7 @@ def s_iceberg_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     maxk = orders.agg(F.max("k")).first()[0]
     root = _scratch_stage("iceberg_snapshot", sf_dir)
     t = os.path.join(root, "t")
-    # Stage-once discipline (r13 — see the Delta twin): build the
+    # Stage-once discipline (see the Delta twin): build the
     # 4-snapshot fixture once per PROCESS; reps 2..N time the metadata
     # walk + read the oracle attests.  The snapshot ids the
     # attestations need ride the process-local memo; the memo is only
@@ -3984,10 +3982,10 @@ def s_iceberg_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not staged:
         shutil.rmtree(root, ignore_errors=True)
         # five fixture writes consume this frame: persist so each scans
-        # memory, not parquet (gate-cap trim, r12 — see the Delta twin)
+        # memory, not parquet (see the Delta twin)
         banded = orders.withColumn(
             "band", F.floor(F.col("k") * 4 / (maxk + 1)).cast("int")
-        ).transform(persist_coalesced)
+        ).persist()
         part = [banded.filter(F.col("band") == b) for b in range(4)]
         sids = build_iceberg_table(
             spark, t,
@@ -4016,7 +4014,7 @@ def s_iceberg_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count; the newest snapshot's DATA path — manifest-tree walk
     # through the engine's own Avro reader into one parquet read — is
     # what the returned frame's oracle hash attests; re-reading every
-    # historical snapshot here tripled the Spark jobs, r12 gate trim)
+    # historical snapshot here tripled the Spark jobs)
     def _band_rows(sid):
         out: dict = {}
         for _p, i in iceberg_snapshot(t, snapshot_id=sid)["files"].items():
@@ -4041,7 +4039,7 @@ def s_iceberg_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     if pruned_inputs != sorted(os.path.basename(p) for p in kept):
         raise AssertionError("pruned read planned the wrong file set")
     # merge-on-read honesty on a sibling table (1-row fixture).
-    # POSITION and EQUALITY deletes both apply since round 12
+    # POSITION and EQUALITY deletes both apply
     # (s_iceberg_pos_deletes attests the reads); what remains are the
     # LOUDNESS surfaces: an equality-delete entry without its
     # equality_ids, and a "delete" manifest carrying plain data
@@ -4117,11 +4115,11 @@ def s_iceberg_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def inc_table_export_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DELTA EXPORT of the engine's snapshot table (round 12 —
-    operators/table.table_export_delta; r11 verdict #5: MIGRATION.md
-    promised interop inward only, so engine-produced tables were
-    proprietary to this repo).  A three-commit table (overwrite,
-    append, then a SCHEMA-EVOLVING overwrite adding a boolean column)
+    """DELTA EXPORT of the engine's snapshot table
+    (operators/table.table_export_delta; MIGRATION.md promised interop
+    inward only, so engine-produced tables were proprietary to this
+    repo).  A three-commit table (overwrite, append, then a
+    SCHEMA-EVOLVING overwrite adding a boolean column)
     exports its whole manifest history as a _delta_log — add/remove
     actions per parquet part file, metaData re-emitted at the
     evolution, dir-level stats carried as per-file bounds, numRecords
@@ -4145,7 +4143,7 @@ def inc_table_export_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     orders = load_tables(spark, sf_dir, ("orders",))["orders"].select(
         F.col("o_orderkey").alias("k"), F.col("o_orderpriority").alias("p")
-    ).transform(persist_coalesced)
+    ).persist()
     n_all = orders.count()
     half = orders.filter(F.col("k") % 2 == 0)
     n_half = half.count()
@@ -4209,9 +4207,8 @@ def inc_table_export_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def s_delta_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Delta DELETION VECTORS read for real (round 12 —
-    sources/delta_dv.py + delta_log.py; the round-11 verdict's #2 ask:
-    modern Delta writers default to DVs for row-level deletes, so a
+    """Delta DELETION VECTORS read for real (sources/delta_dv.py +
+    delta_log.py: modern Delta writers default to DVs for row-level deletes, so a
     reader that refuses them refuses most actively-updated tables).
     Orders split into four key-sorted band files; a second commit
     attaches three descriptor/container shapes the decoder must parse:
@@ -4256,7 +4253,7 @@ def s_delta_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     maxk = orders.agg(F.max("k")).first()[0]
     banded = orders.withColumn(
         "band", F.floor(F.col("k") * 4 / (maxk + 1)).cast("int")
-    ).transform(persist_coalesced)
+    ).persist()
     counts = {
         r["band"]: r["count"]
         for r in banded.groupBy("band").count().collect()
@@ -4326,8 +4323,7 @@ def s_delta_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def s_iceberg_pos_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Iceberg v2 MERGE-ON-READ position deletes (round 12 — the
-    round-11 verdict's #2 ask: positional deletes are standard output
+    """Iceberg v2 MERGE-ON-READ position deletes (positional deletes are standard output
     of Flink/streaming Iceberg writers, so a copy-on-write-only reader
     cannot read other teams' tables).  Snapshot 1 appends four
     key-sorted identity-partitioned band files; snapshot 2 adds a
@@ -4337,7 +4333,7 @@ def s_iceberg_pos_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     one anti-join on (data-file basename, ``_metadata.row_index``) —
     and a third snapshot adds an EQUALITY delete (content=2, one
     priority value) applied null-safely to strictly-older sequences,
-    the Flink-upsert shape (round 12).
+    the Flink-upsert shape.
     The delete manifest is written by the engine's own Avro OCF writer
     and parsed back by its own reader, like every other manifest.
     Key-sorted files make rank == row position, so the oracle replays
@@ -4360,7 +4356,7 @@ def s_iceberg_pos_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     maxk = orders.agg(F.max("k")).first()[0]
     banded = orders.withColumn(
         "band", F.floor(F.col("k") * 4 / (maxk + 1)).cast("int")
-    ).transform(persist_coalesced)
+    ).persist()
     n0 = banded.filter(F.col("band") == 0).count()
     root = _scratch_stage("iceberg_posdel", sf_dir)
     shutil.rmtree(root, ignore_errors=True)
@@ -4379,7 +4375,7 @@ def s_iceberg_pos_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
             [{"pos_deletes": [({"band": 0}, list(range(0, n0, 5))),
                               ({"band": 2}, list(range(5, 25)))]}],
             # seq 3: EQUALITY delete by priority value — applies to all
-            # strictly-older data across every band (round 12)
+            # strictly-older data across every band
             [{"eq_deletes": (["p"], [("1-URGENT",)])}],
         ],
     )
@@ -4441,7 +4437,7 @@ def s_zip_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     shrunken stdlib ZIP64 limits so it carries FULL ZIP64 structures
     (EOCD64 record + locator, 0xFFFFFFFF central sentinels resolved
     through 0x0001 extras) — the layout of every >4 GiB crawl archive,
-    attested without the bytes (round 10).  Strict mode verifies every
+    attested without the bytes.  Strict mode verifies every
     local header offset AND every member's crc32 after inflation, so a
     flipped payload bit fails the entry.  The oracle replays names,
     methods, and uncompressed sizes from doc_id arithmetic (compressed
@@ -5270,8 +5266,8 @@ def s_tar_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def s_tar_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WebDataset SAMPLE assembly — the consumption contract that makes
-    the tar source a training-data source instead of an archive lister
-    (r6 verdict ask #1): ``format("tar")`` member rows are regrouped by
+    the tar source a training-data source instead of an archive lister:
+    ``format("tar")`` member rows are regrouped by
     sample key (path up to the first dot of the basename, the
     WebDataset convention) into ONE ROW PER SAMPLE with extension-keyed
     columns (here txt/cls/json md5s) via
@@ -5516,7 +5512,7 @@ def s_tar_shard_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # FULL OUTER join: a shard present on only one side (lost tar,
     # unreadable file, phantom manifest row) must SURFACE as an
-    # inconsistent row, not vanish from the audit (review finding) —
+    # inconsistent row, not vanish from the audit —
     # missing sides show as -1 with consistent=false
     return (
         observed.join(F.broadcast(manifest), "shard_idx", "full_outer")
@@ -5590,7 +5586,7 @@ def web_main_content_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit('</p><p>tiny</p><p>Footer <a href="/y">y</a></p>'),
     )
     staged = docs.select("doc_id", html.alias("html"))
-    # the SAME gate main_content filters with (review finding: a hand
+    # the SAME gate main_content filters with (a hand
     # copy of the predicate would drift if the defaults change)
     kept_n = F.size(
         F.filter(F.split(F.col("html"), "</p>"), main_content_keep())
@@ -5947,7 +5943,7 @@ def w_rank_movers(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the honest idiom for intra-period ranking: aggregate first,
     window the aggregate.  Revenue ranks use DECIMAL sums (exact tie
     semantics, customer-key tiebreak) so rank assignment is
-    deterministic cross-engine.  Scale (r7 verdict ask #4): the
+    deterministic cross-engine.  Scale: the
     per-month rank previously windowed over a whole month partition —
     O(total customers) in one sort task; it now goes through
     operators/stats.exact_grouped_rank (global percentile bands +
@@ -5968,7 +5964,7 @@ def w_rank_movers(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.sum(d2("o_totalprice")).alias("r"))
     )
-    # (persist deliberately OFF: an r13 A/B measured caching this cheap
+    # (persist deliberately OFF: an A/B measured caching this cheap
     # orders rollup a wash-to-slower — the sizes and window scans share
     # their exchange anyway; persist=True is for genuinely expensive
     # upstreams, e.g. exact_auc's classifier scoring)
@@ -6087,7 +6083,7 @@ def a_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_custkey")
         .agg((F.sum(d2("o_totalprice")) * 100).cast("bigint").alias("cents"))
     )
-    # persist=True (the exact_auc probe-order template, r13 verdict #4):
+    # persist=True (the exact_auc probe-order template):
     # rev is scanned by the rank's percentile probe, its band-size agg,
     # its windowed pass, AND the n_total count below — without the
     # barrier the orders scan+groupBy runs 4x.  The frame registers in
@@ -6558,8 +6554,8 @@ def search_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def st_tfrecord_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming TFRecord SINK with exactly-once commits (r8 verdict
-    ask #7) — the write half the r8 streaming source left open:
+    """Streaming TFRecord SINK with exactly-once commits — the write
+    half the streaming source left open:
     readStream over the documents table drains through
     ``foreachBatch(tfrecord_batch_writer)``
     (sources/tfrecord.py) into deterministically named per-batch

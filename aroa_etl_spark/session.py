@@ -8,10 +8,23 @@ shuffle-partition sizing, Arrow) are the ones that matter on a
 from __future__ import annotations
 
 import os
+import threading
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+# Off by default in Spark: a persisted plan then compiles without AQE's
+# final-stage partition coalescing and fills its cache at the full
+# shuffle width, however small the frame. The flag binds when persist()
+# is called, so it must be on in the session before any operator
+# persists a reuse barrier or a per-round frame.
+CACHED_PLAN_COALESCE_CONF = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+
+# Serializes every scoped_conf body in the process (see scoped_conf).
+_CONF_LOCK = threading.RLock()
 
 
 def get_spark(
@@ -29,6 +42,14 @@ def get_spark(
       columnar batches, not pickled rows.
     - UTC session timezone: deterministic timestamp semantics and
       DuckDB-oracle comparability.
+    - ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=true``:
+      persisted frames (the dedup/matching reuse barriers, the
+      connected-components and BFS per-round frames) compile with AQE
+      partition coalescing. Spark's default (false) fills each cache at
+      the full ``spark.sql.shuffle.partitions`` width, i.e. mostly
+      empty tasks for the few-MB frames these operators cache; with the
+      flag on, AQE's 64 MB advisory sizes them, and large caches stay
+      wide.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -41,6 +62,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config(CACHED_PLAN_COALESCE_CONF, "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
@@ -99,7 +121,11 @@ def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None 
 
     Session-level side effects (documented API contract): sets the
     runtime confs ``spark.sql.legacy.parquet.nanosAsLong=true`` (events
-    nanos) and — only when events ships LTZ timestamps —
+    nanos), ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=true``
+    (the cached-plan coalescing :func:`get_spark` also sets: without
+    it every operator cache fills at the full shuffle width, 200
+    near-empty tasks per fill on a plain session) and — only when
+    events ships LTZ timestamps —
     ``spark.sql.session.timeZone=UTC`` via :func:`pin_utc_session_tz`,
     which warns once per session when a non-UTC zone is overridden.
     """
@@ -122,8 +148,11 @@ def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None 
     # correctness driver's plain SparkSession). events.ts is parquet
     # INT64 TIMESTAMP(NANOS), which the vectorized reader rejects unless
     # this runtime-settable conf is on — set it here, not only in
-    # get_spark, so any session can read the tables.
+    # get_spark, so any session can read the tables. The cached-plan
+    # flag rides along for the same reason: the operators downstream of
+    # these tables persist frames on whatever session they are given.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set(CACHED_PLAN_COALESCE_CONF, "true")
 
     out = {}
     for name in names:
@@ -148,3 +177,28 @@ def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None 
             df.createOrReplaceTempView(name)
             out[name] = df
     return out
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set the session confs ``confs`` for the body of a ``with`` block.
+
+    On exit, normal or by an exception, each key gets back its previous
+    value, and a key that was unset before is unset again. Every scope
+    in the process holds one re-entrant lock for its whole body, so two
+    scopes (on any session) never interleave their set/restore and a
+    pinned body never runs under another scope's values; a scope nested
+    in the same thread re-enters. The body must therefore not wait on
+    another thread that opens a scope of its own."""
+    with _CONF_LOCK:
+        before = {k: spark.conf.get(k, None) for k in confs}
+        try:
+            for k, v in confs.items():
+                spark.conf.set(k, v)
+            yield
+        finally:
+            for k, v in before.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)

@@ -4,6 +4,11 @@ Builds a PLAIN SparkSession (no get_spark — the driver does not use our
 session factory, so any conf we only set in get_spark is invisible to
 the gate) and runs every catalog query at sf0.01
 against its DuckDB oracle with the strict repr-level comparator.
+Every catalog builder reads its inputs through ``session.load_tables``,
+which sets the runtime confs the operators rely on on whatever session
+it is handed — ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``
+among them, so operator caches fill AQE-coalesced here too, not at the
+plain session's 200-partition default.
 
 Usage: python scripts/driver_mirror.py [sf_dir] [name_filter...]
 """

@@ -211,3 +211,27 @@ def test_per_blob_kernels_use_the_shared_runner():
         src = "\n".join(lines)
         for banned in (".mapInPandas(", "iterrows(", "def kernel("):
             assert banned not in src, f"{rel}: hand-rolled {banned!r}"
+
+
+def test_session_confs_stay_with_the_session_module():
+    """The cached-plan coalescing flag is a session default that only
+    ``session.py`` sets (``get_spark`` and ``load_tables``), no operator
+    flips it around its own ``persist()``, and no operator module sets
+    or unsets a session conf: a scoped change goes through
+    ``session.scoped_conf``."""
+    from pathlib import Path
+
+    import aroa_etl_spark
+
+    root = Path(aroa_etl_spark.__file__).parent
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        src = path.read_text()
+        assert "persist_coalesced" not in src, f"{rel}: per-call cached-plan flip"
+        if rel != "session.py":
+            assert "canChangeCachedPlanOutputPartitioning" not in src, (
+                f"{rel}: the cached-plan flag belongs to session.py"
+            )
+        if rel.startswith("operators/"):
+            for banned in ("conf.set(", "conf.unset("):
+                assert banned not in src, f"{rel}: {banned!r} outside scoped_conf"
