@@ -12,12 +12,9 @@ Scale notes (100 TB posture):
 - MinHash LSH: per-doc signature is a projection (no shuffle); the
   candidate join shuffles on band-bucket keys. Bucket sizes are bounded
   by band width; hot buckets (boilerplate docs) are the skew risk —
-  AQE skew-join handles moderate skew, and ``max_bucket_size`` routes
-  degenerate buckets through the two-sided salted join by default
-  (``hot_bucket_mode="salt"``: pair-set identical to no cap, quadratic
-  work spread across salt partitions) with an explicit ``"drop"``
-  opt-out plus an ``observation`` metric so recall loss is never
-  silent.
+  AQE skew-join handles moderate skew, and every banded or
+  inverted-index candidate join shares one hot-bucket policy,
+  :func:`_hot_buckets`.
 - Pair verification (exact Jaccard) runs only on candidate pairs, not
   n² — the whole point of LSH.
 - SimHash: banding on bit-slices; same join shape.
@@ -157,46 +154,99 @@ def _jaccard_filter(
     )
 
 
-def _observed_hot_set(sizes, key_col, max_bucket_size: int, observation):
-    """Hot-key frame from a (key, __bs) size aggregation, honoring the
-    Observation contract shared by every banded-candidate operator.
-    ``key_col`` may be a single column name or a list (composite keys —
-    the containment path's (block, shingle) buckets).
+def _hot_buckets(
+    rows: DataFrame,
+    keys,
+    *,
+    max_bucket_size: int | None,
+    hot_bucket_mode: str,
+    observation,
+):
+    """The hot-bucket policy of every banded or inverted-index candidate
+    join in this module → ``(keep, hot)``.
 
-    Under an Observation the observed subplan must execute EXACTLY
-    once: downstream the hot set feeds multiple joins (both sides of a
-    self-join, or the salted split's anti/semi quadrants), and a
-    multi-referenced CollectMetrics corrupts the observation — whether
-    it survives depends on exchange reuse, so it can pass in one plan
-    and throw toPyRow assertions in the next (reproduced on the
-    simhash path; the incremental path's guard has the same root
-    cause).  So with an Observation the hot
-    set is materialized eagerly through a barrier — the count() fires
-    the observed aggregation completely (full scan, no take(1)
-    short-circuit) and every downstream reference reads the cache.
+    A bucket of size s puts s² candidate pairs on one task, and real
+    corpora grow boilerplate buckets (one template page, an empty-doc
+    pile, a constant-embedding batch).  ``rows`` holds one row per
+    bucket membership over ``keys`` (a column name or a list — the
+    (block, shingle) postings use a composite key); buckets with more
+    than ``max_bucket_size`` rows are hot.  ``hot_bucket_mode`` picks
+    the handling:
 
-    Returns (hot_df, n_hot) — n_hot is None when no Observation is
-    attached (callers then use the isEmpty() probe, which is skipped
-    under an Observation precisely because its take(1) would freeze
-    partial metrics)."""
-    key_cols = [key_col] if isinstance(key_col, str) else list(key_col)
+    - ``"salt"`` (default): hot buckets are PROCESSED through
+      :func:`_bucket_join`'s two-sided salted join — row-identical to
+      ``max_bucket_size=None``, so pair sets and intersection counts do
+      not change, while each hot bucket's quadratic work spreads over
+      ``hot_salt`` shuffle partitions.  Boilerplate buckets are where
+      template-heavy corpora keep their wanted duplicates, so silent
+      recall loss is the wrong default.
+    - ``"drop"``: hot buckets are discarded — cheapest, an explicit
+      recall trade (pairs that share only hot buckets are lost, and
+      inverted-index intersections undercount).
+
+    ``observation`` (optional ``pyspark.sql.Observation``) is attached
+    to the bucket-size aggregation: after the caller's first action it
+    holds ``hot_buckets`` (buckets over the cap) and ``hot_bucket_rows``
+    (rows inside them) — the dropped work in drop mode, the salted work
+    in salt mode.  The observed subplan must execute exactly once: the
+    hot set feeds several joins (both self-join sides, the salted
+    split's anti/semi quadrants), and a multi-referenced CollectMetrics
+    corrupts the metrics or throws depending on exchange reuse.  So
+    under an Observation the hot set is filled eagerly through a
+    barrier (``count()`` runs the whole aggregation), and drop mode
+    anti-joins that cached set instead of re-deriving the cold buckets.
+
+    Healthy corpora have no hot bucket, and the salted split's extra
+    anti/semi/explode stages then cost a measured ~11% on the minhash
+    entry for nothing, so an empty hot set takes the plain equi-join.
+    Without an Observation emptiness is an ``isEmpty()`` probe; with one
+    the count is already known (a ``take(1)`` would freeze partial
+    metrics).
+
+    ``keep(frame)`` removes hot keys from ``frame`` in drop mode and is
+    the identity otherwise; ``hot`` is the key frame to salt, or
+    ``None`` for the plain join.  With ``max_bucket_size=None`` nothing
+    is sized: ``(identity, None)``."""
+    if hot_bucket_mode not in ("drop", "salt"):
+        raise ValueError("hot_bucket_mode must be 'drop' or 'salt'")
+    keys = [keys] if isinstance(keys, str) else list(keys)
+    if max_bucket_size is None:
+        return (lambda frame: frame), None
+    sizes = rows.groupBy(*keys).agg(F.count(F.lit(1)).alias("__bs"))
+    is_hot = F.col("__bs") > max_bucket_size
     if observation is not None:
-        observed = sizes.observe(
+        sizes = sizes.observe(
             observation,
-            F.sum((F.col("__bs") > max_bucket_size).cast("long")).alias(
-                "hot_buckets"
+            F.sum(is_hot.cast("long")).alias("hot_buckets"),
+            F.sum(F.when(is_hot, F.col("__bs")).otherwise(F.lit(0))).alias(
+                "hot_bucket_rows"
             ),
-            F.sum(
-                F.when(F.col("__bs") > max_bucket_size, F.col("__bs")).otherwise(
-                    F.lit(0)
-                )
-            ).alias("hot_bucket_rows"),
         )
-        hot = _barrier(
-            observed.filter(F.col("__bs") > max_bucket_size).select(*key_cols)
-        )
-        return hot, hot.count()
-    return sizes.filter(F.col("__bs") > max_bucket_size).select(*key_cols), None
+        hot = _barrier(sizes.filter(is_hot).select(*keys))
+        n_hot = hot.count()
+    else:
+        hot = sizes.filter(is_hot).select(*keys)
+        n_hot = None
+    if hot_bucket_mode == "drop":
+        if observation is not None:
+            return (lambda frame: frame.join(hot, keys, "left_anti")), None
+        cold = sizes.filter(F.col("__bs") <= max_bucket_size).select(*keys)
+        return (lambda frame: frame.join(cold, keys)), None
+    if n_hot == 0 or (observation is None and hot.isEmpty()):
+        hot = None
+    return (lambda frame: frame), hot
+
+
+def _bucket_join(a: DataFrame, b: DataFrame, keys, hot, salt: int) -> DataFrame:
+    """``a.join(b, keys)``, salted over the ``hot`` keys when
+    :func:`_hot_buckets` returned any.  The salted join replicates
+    ``b``'s hot rows ``salt`` times, so ``b`` is the side with fewer hot
+    rows."""
+    if hot is None:
+        return a.join(b, keys)
+    from aroa_etl_spark.operators.skew import salted_hot_join
+
+    return salted_hot_join(a, b, keys, hot, salt=salt)
 
 
 def _inverted_index_intersections(
@@ -212,50 +262,22 @@ def _inverted_index_intersections(
     """(id_a, id_b, n_intersect) from an inverted-index self-join of the
     posting frame ``ex`` (one row per (id, *key_cols) posting) — the
     shared candidate-generation core of the containment and blocked
-    Jaccard paths, carrying the SAME hot-bucket policy as the minhash/
-    simhash/winnowing operators (without it, one boilerplate shingle
-    shared by 10k docs in a block is ~5·10⁷ pair rows on a single
-    task).
-
-    ``hot_bucket_mode='salt'`` (default) routes postings whose key
-    appears more than ``max_bucket_size`` times through
-    :func:`skew.salted_hot_join` — row-identical to the plain join, so
-    n_intersect counts (and thus attested oracles) are unchanged while
-    each hot key's quadratic work spreads over ``hot_salt`` shuffle
-    partitions.  ``'drop'`` discards hot postings entirely — an explicit
-    recall trade that UNDERCOUNTS intersections for pairs sharing a hot
-    key; the optional ``observation`` reports ``hot_buckets`` /
-    ``hot_bucket_rows`` so the loss is never silent.
-    """
-    if hot_bucket_mode not in ("drop", "salt"):
-        raise ValueError("hot_bucket_mode must be 'drop' or 'salt'")
-    hot = None
+    Jaccard paths.  Hot (block, shingle) keys follow
+    :func:`_hot_buckets`: one boilerplate shingle shared by 10k docs in
+    a block is ~5·10⁷ pair rows on a single task."""
     if max_bucket_size is not None:
         ex = _barrier(ex)  # sizing + both join sides read the postings
-        sizes = ex.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("__bs"))
-        hot, n_hot = _observed_hot_set(sizes, key_cols, max_bucket_size, observation)
-        if hot_bucket_mode == "drop":
-            if observation is not None:
-                # anti-join against the cached hot set == the cold
-                # partition; re-deriving cold from sizes would re-reference
-                # the observed subplan (see _observed_hot_set)
-                ex = ex.join(hot, key_cols, "left_anti")
-            else:
-                ex = ex.join(
-                    sizes.filter(F.col("__bs") <= max_bucket_size).select(*key_cols),
-                    key_cols,
-                )
-            hot = None
-        elif n_hot == 0 or (observation is None and hot.isEmpty()):
-            hot = None
+    keep, hot = _hot_buckets(
+        ex,
+        key_cols,
+        max_bucket_size=max_bucket_size,
+        hot_bucket_mode=hot_bucket_mode,
+        observation=observation,
+    )
+    ex = keep(ex)
     left = ex.select(F.col(id_col).alias("id_a"), *key_cols)
     right = ex.select(F.col(id_col).alias("id_b"), *key_cols)
-    if hot is not None:
-        from aroa_etl_spark.operators.skew import salted_hot_join
-
-        joined = salted_hot_join(left, right, key_cols, hot, salt=hot_salt)
-    else:
-        joined = left.join(right, key_cols)
+    joined = _bucket_join(left, right, key_cols, hot, hot_salt)
     return (
         joined.filter(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
@@ -324,16 +346,7 @@ def minhash_lsh_incremental(
     100 TB workflow (a new crawl batch dedups against the indexed corpus
     without re-pairing the corpus against itself).
 
-    Hot buckets get the same policy surface as :func:`minhash_lsh_dedup`
-    (a degenerate boilerplate bucket in the INDEX would otherwise make
-    the new x index join quadratic on one task — the exact LSH skew mode
-    mitigated elsewhere): bucket occupancy is measured over new ∪ index
-    keys, and buckets over ``max_bucket_size`` are either processed via
-    the two-sided salted join (``"salt"``, default — pair-set identical
-    to no cap) or discarded from both quadrants (``"drop"``); an
-    optional ``observation`` reports ``hot_buckets`` /
-    ``hot_bucket_rows`` exactly like the batch operators, so drop-mode
-    recall loss is measurable on every LSH path.
+    Hot buckets follow :func:`_hot_buckets`, sized over new ∪ index keys.
 
     Candidates = (new x index bucket equi-join) ∪ (new x new
     self-join); every pair is emitted in canonical (least, greatest) id
@@ -355,54 +368,23 @@ def minhash_lsh_incremental(
         index_docs, id_col, text_col, num_perm, bands, shingle_n
     )
 
-    if hot_bucket_mode not in ("drop", "salt"):
-        raise ValueError("hot_bucket_mode must be 'drop' or 'salt'")
-    a_new = keys_new.select(F.col(id_col).alias("__ia"), "__bucket")
-    b_idx = keys_idx.select(F.col(id_col).alias("__ib"), "__bucket")
-    b_new = keys_new.select(F.col(id_col).alias("__ib"), "__bucket")
-    hot_buckets = None
-    if max_bucket_size is not None:
-        sizes = (
-            keys_new.select("__bucket")
-            .unionAll(keys_idx.select("__bucket"))
-            .groupBy("__bucket")
-            .agg(F.count(F.lit(1)).alias("__bs"))
-        )
-        hot, n_hot = _observed_hot_set(
-            sizes, "__bucket", max_bucket_size, observation
-        )
-        if hot_bucket_mode == "drop":
-            if observation is not None:
-                # anti-join against the (cached, usually tiny) hot set ==
-                # the cold semi-join partition; re-deriving the cold set
-                # would re-reference the observed subplan from three
-                # joins (see _observed_hot_set)
-                a_new = a_new.join(hot, "__bucket", "left_anti")
-                b_idx = b_idx.join(hot, "__bucket", "left_anti")
-                b_new = b_new.join(hot, "__bucket", "left_anti")
-            else:
-                cold = sizes.filter(F.col("__bs") <= max_bucket_size).select(
-                    "__bucket"
-                )
-                a_new = a_new.join(cold, "__bucket")
-                b_idx = b_idx.join(cold, "__bucket")
-                b_new = b_new.join(cold, "__bucket")
-        elif not (n_hot == 0 or (observation is None and hot.isEmpty())):
-            hot_buckets = hot
-    if hot_buckets is not None:
-        from aroa_etl_spark.operators.skew import salted_hot_join
-
-        # side order matters: salted_hot_join replicates b's hot rows
-        # ``salt`` times, so the NEW batch (small in the incremental
-        # workflow) is b and the index (where hot boilerplate buckets
-        # mostly live) only scatters
-        cross = salted_hot_join(b_idx, a_new, "__bucket", hot_buckets, salt=hot_salt)
-        self_new = salted_hot_join(
-            a_new, b_new, "__bucket", hot_buckets, salt=hot_salt
-        ).filter(F.col("__ia") < F.col("__ib"))
-    else:
-        cross = a_new.join(b_idx, "__bucket")
-        self_new = a_new.join(b_new, "__bucket").filter(F.col("__ia") < F.col("__ib"))
+    keep, hot = _hot_buckets(
+        keys_new.select("__bucket").unionAll(keys_idx.select("__bucket")),
+        "__bucket",
+        max_bucket_size=max_bucket_size,
+        hot_bucket_mode=hot_bucket_mode,
+        observation=observation,
+    )
+    a_new = keep(keys_new.select(F.col(id_col).alias("__ia"), "__bucket"))
+    b_idx = keep(keys_idx.select(F.col(id_col).alias("__ib"), "__bucket"))
+    b_new = keep(keys_new.select(F.col(id_col).alias("__ib"), "__bucket"))
+    # the NEW batch (small in the incremental workflow) is the replicated
+    # side; the index, where hot boilerplate buckets mostly live, only
+    # scatters
+    cross = _bucket_join(b_idx, a_new, "__bucket", hot, hot_salt)
+    self_new = _bucket_join(a_new, b_new, "__bucket", hot, hot_salt).filter(
+        F.col("__ia") < F.col("__ib")
+    )
     pairs = (
         cross.unionByName(self_new)
         .select(
@@ -436,29 +418,8 @@ def minhash_lsh_dedup(
     threshold.
     Returns (id_a, id_b, n_intersect, n_union).
 
-    Buckets over ``max_bucket_size`` are the LSH skew failure mode at
-    scale (a bucket of size s contributes s² candidate pairs; real
-    corpora grow boilerplate hot buckets).  ``hot_bucket_mode`` picks
-    the handling:
-
-    - ``"salt"`` (default): hot buckets are PROCESSED via the two-sided
-      salted self-join (operators/skew.salted_hot_join): pair-set
-      identical to ``max_bucket_size=None``, but each hot bucket's
-      quadratic work spreads over ``hot_salt`` shuffle partitions
-      instead of one straggler task.  Default because at 100 TB the
-      boilerplate hot buckets are precisely where wanted duplicates
-      live (template-heavy corpora) — silent recall loss is the wrong
-      default.
-    - ``"drop"``: degenerate buckets are discarded — cheapest, an
-      explicit recall trade for noise-heavy buckets.  Pass an
-      ``observation`` to make the loss visible.
-
-    ``observation`` (optional ``pyspark.sql.Observation``) is attached
-    to the bucket-size aggregation whenever ``max_bucket_size`` is set:
-    after the caller's first action, ``observation.get`` holds
-    ``hot_buckets`` (count over the cap) and ``hot_bucket_rows`` (keys
-    inside them) — the dropped-work metric in drop mode, the
-    salted-work metric in salt mode.
+    Hot buckets (``max_bucket_size``, ``hot_bucket_mode``, ``hot_salt``,
+    ``observation``) follow :func:`_hot_buckets`.
     """
     # Materialize tokens, then distinct shingles, as separate projections
     # (see shingles_from) and persist via _barrier: the shingle frame
@@ -476,45 +437,17 @@ def minhash_lsh_dedup(
         df, id_col, text_col, num_perm, bands, shingle_n
     )
 
-    if hot_bucket_mode not in ("drop", "salt"):
-        raise ValueError("hot_bucket_mode must be 'drop' or 'salt'")
-    hot_buckets = None
-    if max_bucket_size is not None:
-        sizes = keys.groupBy("__bucket").agg(F.count(F.lit(1)).alias("__bs"))
-        hot_buckets, n_hot = _observed_hot_set(
-            sizes, "__bucket", max_bucket_size, observation
-        )
-        if hot_bucket_mode == "drop":
-            if observation is not None:
-                # anti-join against the eagerly-cached hot set; the cold
-                # inner join would re-reference the observed subplan
-                # from both self-join sides (see _observed_hot_set)
-                keys = keys.join(hot_buckets, "__bucket", "left_anti")
-            else:
-                keys = keys.join(
-                    sizes.filter(F.col("__bs") <= max_bucket_size).select("__bucket"),
-                    "__bucket",
-                )
-            hot_buckets = None
-        # Empty-hot fast path: healthy corpora usually have zero hot
-        # buckets, and the salted split's extra anti/semi/explode stages
-        # cost a measured ~11% on the bench minhash entry when the hot
-        # set is empty — take the plain join in that common case (the
-        # pair-set is identical by construction either way).  Under an
-        # Observation the count is already known (metrics fired by the
-        # helper's count()); without one the isEmpty() probe is safe —
-        # an observed take(1) would freeze partial metrics.
-        elif n_hot == 0 or (observation is None and hot_buckets.isEmpty()):
-            hot_buckets = None
-
+    keep, hot = _hot_buckets(
+        keys,
+        "__bucket",
+        max_bucket_size=max_bucket_size,
+        hot_bucket_mode=hot_bucket_mode,
+        observation=observation,
+    )
+    keys = keep(keys)
     left = keys.select(F.col(id_col).alias("id_a"), "__bucket")
     right = keys.select(F.col(id_col).alias("id_b"), "__bucket")
-    if hot_buckets is not None:
-        from aroa_etl_spark.operators.skew import salted_hot_join
-
-        joined = salted_hot_join(left, right, "__bucket", hot_buckets, salt=hot_salt)
-    else:
-        joined = left.join(right, "__bucket")
+    joined = _bucket_join(left, right, "__bucket", hot, hot_salt)
     pairs = (
         joined
         .filter(F.col("id_a") < F.col("id_b"))
@@ -611,22 +544,10 @@ def ngram_jaccard_pairs(
     sharing a run of ``winnow_window``+n-1 tokens share a fingerprint,
     so near-dups are caught regardless of where the overlap sits —
     strictly better recall than the previous opening-n-gram key at the
-    same join shape. ``max_bucket_size`` bounds hot buckets on BOTH
-    candidate paths — winnowing-fingerprint buckets here, and (via
-    :func:`_inverted_index_intersections`) the blocked
-    path's (block, shingle) posting lists — with the same two policies
-    as MinHash LSH:
-    ``hot_bucket_mode='salt'`` (default) PROCESSES them through the
-    two-sided salted self-join (pair-set identical to no cap, hot work
-    spread ``hot_salt`` ways — recall preserved, the 100 TB-safe
-    default); ``'drop'`` discards them (explicit recall trade).  An
-    optional ``observation`` attached to the fingerprint-size
-    aggregation reports ``hot_buckets`` / ``hot_bucket_rows`` after
-    the first action, so drop-mode recall loss is never silent.
+    same join shape. Hot winnowing-fingerprint buckets and hot blocked
+    (block, shingle) posting lists follow :func:`_hot_buckets`.
     Returns (id_a, id_b, n_intersect, n_union) for Jaccard ≥ threshold.
     """
-    if hot_bucket_mode not in ("drop", "salt"):
-        raise ValueError("hot_bucket_mode must be 'drop' or 'salt'")
     sh = (
         df.select(
             F.col(id_col),
@@ -658,9 +579,6 @@ def ngram_jaccard_pairs(
             F.col(id_col), F.col(block_col).alias("__b"), F.explode("__sh").alias("__s")
         )
         sizes = sh.select(F.col(id_col), F.size("__sh").alias("__sz"))
-        # same hot-(block, shingle) policy as the containment path —
-        # the policy is uniform across EVERY inverted-index candidate
-        # join, not just the banded/winnowed ones
         inter = _inverted_index_intersections(
             ex,
             id_col,
@@ -687,38 +605,29 @@ def ngram_jaccard_pairs(
     if block_col is not None:
         # threshold == 0: every in-block pair with a non-empty union must
         # appear, including zero-intersection ones — the inverted index
-        # can't see those, so fall back to the bounded block cross product.
+        # can't see those, so fall back to the bounded block cross
+        # product, which sizes no buckets.
         k = sh.select(F.col(id_col), F.col(block_col).alias("__k"))
+        max_bucket_size = None
     else:
         from aroa_etl_spark.functions.text import with_winnowing_fingerprints
 
         k = with_winnowing_fingerprints(
             sh.select(F.col(id_col), "__sq"), "__sq", "__wfp", window=winnow_window
         ).select(F.col(id_col), F.explode("__wfp").alias("__k"))
-    hot = None
-    if block_col is None and max_bucket_size is not None:
-        k = _barrier(k)  # sizing + splits + both join sides read it
-        sizes = k.groupBy("__k").agg(F.count(F.lit(1)).alias("__bs"))
-        hot, n_hot = _observed_hot_set(sizes, "__k", max_bucket_size, observation)
-        if hot_bucket_mode == "drop":
-            if observation is not None:
-                k = k.join(hot, "__k", "left_anti")  # see _observed_hot_set
-            else:
-                k = k.join(
-                    sizes.filter(F.col("__bs") <= max_bucket_size).select("__k"),
-                    "__k",
-                )
-            hot = None
-        elif n_hot == 0 or (observation is None and hot.isEmpty()):
-            hot = None
+        if max_bucket_size is not None:
+            k = _barrier(k)  # sizing + splits + both join sides read it
+    keep, hot = _hot_buckets(
+        k,
+        "__k",
+        max_bucket_size=max_bucket_size,
+        hot_bucket_mode=hot_bucket_mode,
+        observation=observation,
+    )
+    k = keep(k)
     left = k.select(F.col(id_col).alias("id_a"), "__k")
     right = k.select(F.col(id_col).alias("id_b"), "__k")
-    if hot is not None:
-        from aroa_etl_spark.operators.skew import salted_hot_join
-
-        joined = salted_hot_join(left, right, "__k", hot, salt=hot_salt)
-    else:
-        joined = left.join(right, "__k")
+    joined = _bucket_join(left, right, "__k", hot, hot_salt)
     pairs = (
         joined
         .filter(F.col("id_a") < F.col("id_b"))
@@ -756,15 +665,8 @@ def simhash_dedup(
     band space → ~200 docs per bucket).  60 = 15 hex chars of md5 —
     the engine's BIGINT-safe cross-engine hash family.
 
-    Degenerate bands get the SAME hot-bucket policy as the minhash/
-    ngram paths (the policy is uniform across every banded-candidate
-    operator): a boilerplate band (e.g. thousands of
-    empty docs all simhashing to 0) would otherwise make the band
-    self-join quadratic on one task.  Buckets over ``max_bucket_size``
-    are salted through :func:`skew.salted_hot_join` (``"salt"``,
-    default — pair-set identical to no cap, so attested oracles are
-    unchanged) or discarded (``"drop"``); the optional ``observation``
-    reports ``hot_buckets`` / ``hot_bucket_rows``.
+    Hot bands (thousands of empty docs all simhashing to 0) follow
+    :func:`_hot_buckets`.
     """
     if hash_bits % 4 or hash_bits % n_bands or not (0 < hash_bits <= 60):
         raise ValueError(
@@ -835,38 +737,18 @@ def simhash_dedup(
             )
         ).alias("__band"),
     )
-    if hot_bucket_mode not in ("drop", "salt"):
-        raise ValueError("hot_bucket_mode must be 'drop' or 'salt'")
     banded = _barrier(banded)  # feeds both join sides + the size agg
-    hot = None
-    if max_bucket_size is not None:
-        sizes = banded.groupBy("__band").agg(F.count(F.lit(1)).alias("__bs"))
-        hot, n_hot = _observed_hot_set(sizes, "__band", max_bucket_size, observation)
-        if hot_bucket_mode == "drop":
-            if observation is not None:
-                # anti-join against the eagerly-cached hot set (tiny);
-                # re-deriving the cold set would re-reference the
-                # observed subplan — see _observed_hot_set
-                banded = banded.join(hot, "__band", "left_anti")
-            else:
-                banded = banded.join(
-                    sizes.filter(F.col("__bs") <= max_bucket_size).select("__band"),
-                    "__band",
-                )
-            hot = None
-        elif n_hot == 0 or (observation is None and hot.isEmpty()):
-            # empty-hot fast path: under an Observation the count is
-            # already known (metrics fully fired); without one the
-            # isEmpty() probe is safe
-            hot = None
+    keep, hot = _hot_buckets(
+        banded,
+        "__band",
+        max_bucket_size=max_bucket_size,
+        hot_bucket_mode=hot_bucket_mode,
+        observation=observation,
+    )
+    banded = keep(banded)
     left = banded.select(F.col(id_col).alias("id_a"), F.col("__sh").alias("__ha"), "__band")
     right = banded.select(F.col(id_col).alias("id_b"), F.col("__sh").alias("__hb"), "__band")
-    if hot is not None:
-        from aroa_etl_spark.operators.skew import salted_hot_join
-
-        joined = salted_hot_join(left, right, "__band", hot, salt=hot_salt)
-    else:
-        joined = left.join(right, "__band")
+    joined = _bucket_join(left, right, "__band", hot, hot_salt)
     return (
         joined
         .filter(F.col("id_a") < F.col("id_b"))
@@ -924,11 +806,8 @@ def embedding_neardup_pairs(
     ann.brute_force_topk as the exact baseline.
 
     Hot sign-buckets (a zero-vector pile, a constant-embedding batch
-    bug) get the uniform banded-path policy: over
-    ``max_bucket_size`` they are salted (``"salt"``, default —
-    pair-set identical, auto-banding's ~4-per-bucket sizing makes this
-    a pure safety net) or dropped; ``observation`` reports
-    ``hot_buckets`` / ``hot_bucket_rows``.
+    bug) follow :func:`_hot_buckets`; auto-banding's ~4-per-bucket
+    sizing makes that a safety net.
     """
     # dims past the vector length read NULL via element_at -> constant
     # "0" bits -> degraded selectivity toward the all-pairs blowup the
@@ -963,33 +842,22 @@ def embedding_neardup_pairs(
             ],
         )
 
-    if hot_bucket_mode not in ("drop", "salt"):
-        raise ValueError("hot_bucket_mode must be 'drop' or 'salt'")
     k = df.select(
         F.col(id_col),
         F.col(vec_col),
         F.explode(F.array(*[band_key(b) for b in range(n_bands)])).alias("__k"),
     )
-    hot = None
-    if max_bucket_size is not None:
-        # sizes scan the key projection only (no vectors) — a narrow
-        # recompute, deliberately NOT cached: the vector payload in k
-        # is the expensive part and never feeds the size agg
-        sizes = k.select("__k").groupBy("__k").agg(
-            F.count(F.lit(1)).alias("__bs")
-        )
-        hot, n_hot = _observed_hot_set(sizes, "__k", max_bucket_size, observation)
-        if hot_bucket_mode == "drop":
-            if observation is not None:
-                k = k.join(hot, "__k", "left_anti")  # see _observed_hot_set
-            else:
-                k = k.join(
-                    sizes.filter(F.col("__bs") <= max_bucket_size).select("__k"),
-                    "__k",
-                )
-            hot = None
-        elif n_hot == 0 or (observation is None and hot.isEmpty()):
-            hot = None
+    # sizes scan the key projection only (no vectors) — a narrow
+    # recompute, deliberately NOT cached: the vector payload in k is the
+    # expensive part and never feeds the size agg
+    keep, hot = _hot_buckets(
+        k.select("__k"),
+        "__k",
+        max_bucket_size=max_bucket_size,
+        hot_bucket_mode=hot_bucket_mode,
+        observation=observation,
+    )
+    k = keep(k)
     a = k.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("__va"), "__k")
     b = k.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("__vb"), "__k")
 
@@ -1000,13 +868,7 @@ def embedding_neardup_pairs(
             lambda acc, v: acc + v,
         )
 
-    if hot is not None:
-        from aroa_etl_spark.operators.skew import salted_hot_join
-
-        joined = salted_hot_join(a, b, "__k", hot, salt=hot_salt)
-    else:
-        joined = a.join(b, "__k")
-    pairs = joined.filter(F.col("id_a") < F.col("id_b"))
+    pairs = _bucket_join(a, b, "__k", hot, hot_salt).filter(F.col("id_a") < F.col("id_b"))
     if n_bands > 1:
         # a pair can collide in several bands: dedup BEFORE the cosine
         # verify so each candidate is scored once
@@ -1164,15 +1026,8 @@ def ngram_containment_pairs(
     materialize; containment >= pct > 0 implies a shared shingle, so
     blocking loses nothing.
 
-    Hot (block, shingle) buckets get the SAME ``max_bucket_size`` /
-    ``hot_bucket_mode`` policy as every sibling candidate-generating
-    operator (via :func:`_inverted_index_intersections`; boilerplate
-    shingles are exactly where containment dedup lives, so
-    the uncapped join was the quadratic failure mode at crawl scale).
-    The default ``'salt'`` mode is pair-set AND count identical to
-    ``max_bucket_size=None``; ``'drop'`` undercounts intersections on
-    hot shingles — an explicit recall trade, reported through
-    ``observation``."""
+    Hot (block, shingle) buckets follow :func:`_hot_buckets`.
+    Boilerplate shingles are exactly where containment dedup lives."""
     if not 1 <= threshold_pct <= 100:
         raise ValueError(f"threshold_pct must be in [1, 100], got {threshold_pct}")
     # tokens materialize in their OWN projection first: shingles_from's

@@ -20,14 +20,16 @@ self-contained container files" source share one scan model:
 format from four ingredients: the format name, the filename suffixes
 that count as real container files (manifests/.tmp droppings in the
 watched directory must never wedge the stream), the per-blob parse
-function (bytes -> list[dict]), and the record schema.  The generated
-class pickles by value (cloudpickle) to executors, with the parse
-function resolving as a plain module-level import.
+function (bytes -> list[dict]), and the record schema — plus, for
+formats whose readers may want the raw bytes, an optional payload
+column behind ``.option("payload", "true")``.  The generated class
+pickles by value (cloudpickle) to executors, with the parse function
+resolving as a plain module-level import.
 
-sources/warc_datasource.py and the mbox DataSource (sources/mbox.py)
-are both instantiations — the streaming semantics live here ONCE, so
-the growth guard, monotonic offsets, and suffix filtering cannot
-drift between formats.
+sources/warc_datasource.py, the mbox DataSource (sources/mbox.py) and
+the tar DataSource (sources/tar_datasource.py) are instantiations — the
+streaming semantics live here ONCE, so the growth guard, monotonic
+offsets, and suffix filtering cannot drift between formats.
 """
 
 from __future__ import annotations
@@ -45,13 +47,18 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-__all__ = ["make_container_datasource", "path_blob_id"]
+__all__ = ["make_container_datasource", "path_blob_id", "wants_payload"]
 
 
 def path_blob_id(path: str) -> int:
     """Stable 60-bit id from the file path, deterministic across runs,
     executors, and retries."""
     return int(hashlib.md5(path.encode("utf-8")).hexdigest()[:15], 16)
+
+
+def wants_payload(options: dict) -> bool:
+    """True when the reader options ask for the raw payload column."""
+    return str(options.get("payload", "false")).lower() in ("true", "1")
 
 
 class _FilePartition(InputPartition):
@@ -66,6 +73,7 @@ def make_container_datasource(
     parse_blob: Callable,
     record_schema: T.StructType,
     id_field: str = "blob_id",
+    payload: T.StructField | None = None,
 ) -> type:
     """Build a ``DataSource`` subclass for a container format.
 
@@ -73,9 +81,20 @@ def make_container_datasource(
     except ``id_field`` (injected as the path hash) — the parser is
     shared VERBATIM with the format's mapInPandas kernel, so the
     DataSource and the explode path can never disagree about record
-    boundaries.  The source schema is ``path`` + ``record_schema``."""
+    boundaries.  The source schema is ``path`` + ``record_schema``.
+
+    ``payload`` (a field, ``None`` for no payload column) is appended
+    to the schema when the reader sets ``.option("payload", "true")``;
+    ``parse_blob`` is then called with ``with_payload=True`` and fills
+    it.  The default schema keeps scans that only fingerprint records
+    from materializing their bytes."""
     source_schema = T.StructType(
         [T.StructField("path", T.StringType()), *record_schema.fields]
+    )
+    payload_schema = (
+        T.StructType([*source_schema.fields, payload])
+        if payload is not None
+        else source_schema
     )
     fields = [f.name for f in record_schema.fields]
     sufs = tuple(s.lower() for s in suffixes)
@@ -83,21 +102,31 @@ def make_container_datasource(
     def is_container(name: str) -> bool:
         return name.lower().endswith(sufs)
 
-    def read_file(path: str, size: int | None = None) -> Iterator[tuple]:
+    def with_payload(options: dict) -> bool:
+        return payload is not None and wants_payload(options)
+
+    def read_file(
+        path: str, size: int | None = None, payload_on: bool = False
+    ) -> Iterator[tuple]:
         # `size` caps the read at the byte length the planner observed,
         # so a file that grows between offset listing and executor read
         # still parses exactly the snapshot the offset describes
         with open(path, "rb") as fh:
             blob = fh.read() if size is None else fh.read(size)
         bid = path_blob_id(path)
-        for rec in parse_blob(blob):
+        if payload_on:
+            names, recs = [*fields, payload.name], parse_blob(blob, with_payload=True)
+        else:
+            names, recs = fields, parse_blob(blob)
+        for rec in recs:
             yield (
                 path,
-                *[bid if f == id_field else rec.get(f) for f in fields],
+                *[bid if f == id_field else rec.get(f) for f in names],
             )
 
     class Reader(DataSourceReader):
         def __init__(self, options: dict):
+            self.payload_on = with_payload(options)
             path = options.get("path")
             if not path:
                 raise ValueError(
@@ -122,10 +151,11 @@ def make_container_datasource(
             return [_FilePartition(p) for p in self.paths]
 
         def read(self, partition: _FilePartition) -> Iterator[tuple]:
-            return read_file(partition.path)
+            return read_file(partition.path, payload_on=self.payload_on)
 
     class StreamReader(DataSourceStreamReader):
         def __init__(self, options: dict):
+            self.payload_on = with_payload(options)
             self.dir = options.get("path")
             if not self.dir or not os.path.isdir(self.dir):
                 raise ValueError(f"streaming {fmt} source needs a directory path")
@@ -134,9 +164,9 @@ def make_container_datasource(
         def _listing(self) -> list:
             # identity is (name, size, mtime_ns): size alone cannot see
             # an already-ingested file atomically RE-placed with
-            # different content of the SAME size (round-10 advisor) —
-            # placement is a rename, so the replacement always carries a
-            # fresh mtime even when sizes collide
+            # different content of the SAME size — placement is a
+            # rename, so the replacement always carries a fresh mtime
+            # even when sizes collide
             out = []
             for n in sorted(os.listdir(self.dir)):
                 p = os.path.join(self.dir, n)
@@ -163,8 +193,9 @@ def make_container_datasource(
 
         @staticmethod
         def _seen_map(offset: dict) -> dict:
-            # pre-round-10 checkpoints hold [name, size] entries — treat
-            # their mtime as unknown (None skips the mtime comparison)
+            # checkpoints written before the mtime field hold [name, size]
+            # entries — treat their mtime as unknown (None skips the
+            # mtime comparison)
             out = {}
             for e in offset.get("seen", []):
                 n, size = e[0], e[1]
@@ -210,7 +241,7 @@ def make_container_datasource(
         def read(self, partition: _FilePartition) -> Iterator[tuple]:
             if not partition.path:  # empty-batch placeholder
                 return iter(())
-            return read_file(partition.path, partition.size)
+            return read_file(partition.path, partition.size, self.payload_on)
 
         def commit(self, end: dict) -> None:
             pass  # offsets are self-describing; nothing external to ack
@@ -221,7 +252,7 @@ def make_container_datasource(
             return fmt
 
         def schema(self) -> T.StructType:
-            return source_schema
+            return payload_schema if with_payload(self.options) else source_schema
 
         def reader(self, schema: T.StructType) -> DataSourceReader:
             return Reader(self.options)
@@ -240,4 +271,5 @@ def make_container_datasource(
     Source.Reader = Reader
     Source.StreamReader = StreamReader
     Source.source_schema = source_schema
+    Source.payload_schema = payload_schema
     return Source

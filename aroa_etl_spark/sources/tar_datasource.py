@@ -10,207 +10,60 @@ natively instead of the two-step ``binaryFile`` scan +
     spark.dataSource.register(TarDataSource)
     df = spark.read.format("tar").load("/corpus/shards/*.tar")
 
-Scale model mirrors the WARC source: one ``InputPartition`` per shard
-file — the natural WebDataset unit (shards are sized for exactly this
-kind of parallel consumption) — with the member explosion fused into
-the scan and zero shuffle.  Rows carry the shard path, a stable 60-bit
-path hash (the engine's md5-prefix id family), and the member fields
-of ``sources/tarfmt.py``'s schema, parsed by the SAME hand-rolled
-USTAR walk as the mapInPandas kernel so the two paths can never
-disagree about member boundaries or checksums.
+Rows carry the shard path, a stable 60-bit path hash (``shard_id``, the
+engine's md5-prefix id family), and the member fields of
+``sources/tarfmt.py``'s schema, parsed by the SAME hand-rolled USTAR
+walk as the mapInPandas kernel so the two paths can never disagree
+about member boundaries or checksums.  ``.option("payload", "true")``
+appends the raw member bytes — the training-loader shape.
 
-``spark.readStream.format("tar")`` tails a shard directory: each
-micro-batch ingests shards that appeared since the last offset — the
-training-data shape where a packing job drops finished shards and the
-pipeline consumes them continuously.  Same placement contract as
-Spark's FileStreamSource and the WARC stream: shards must land
-atomically (write elsewhere, rename in); a seen shard whose size later
-changes — grown or replaced — fails planning loudly instead of
-silently dropping appended or swapped members.
+The scan/stream mechanics are the shared container model
+(sources/container_datasource.py): one ``InputPartition`` per shard —
+the natural WebDataset unit — with the member explosion fused into the
+scan and zero shuffle; ``spark.readStream.format("tar")`` tails a shard
+directory with monotonic ``[name, size, mtime_ns]`` offsets.  Shards
+must land atomically (write elsewhere, rename in): a seen shard that
+grows, shrinks, or is re-placed at the same size with a fresh mtime
+fails planning loudly instead of silently dropping or skipping members.
 """
 
 from __future__ import annotations
 
-import glob
-import hashlib
-import os
-from typing import Iterator
-
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    DataSourceStreamReader,
-    InputPartition,
-)
 from pyspark.sql import types as T
 
+from aroa_etl_spark.sources.container_datasource import (
+    make_container_datasource,
+    path_blob_id,
+)
 from aroa_etl_spark.sources.tarfmt import TAR_MEMBERS_SCHEMA, parse_tar_blob
 
-# path + shard id + the shared member schema minus the media_id the
-# mapInPandas form uses (the path hash plays that role here)
-TAR_SOURCE_SCHEMA = T.StructType(
-    [
-        T.StructField("path", T.StringType()),
-        T.StructField("shard_id", T.LongType()),
-        *[f for f in TAR_MEMBERS_SCHEMA.fields if f.name != "media_id"],
+# the mapInPandas schema's media_id is the shard path hash here
+_MEMBER_FIELDS = [f for f in TAR_MEMBERS_SCHEMA.fields if f.name != "media_id"]
+_ROW_NAMES = [*(f.name for f in _MEMBER_FIELDS), "payload"]
+
+
+def _parse_shard(blob: bytes, with_payload: bool = False) -> list[dict]:
+    return [
+        dict(zip(_ROW_NAMES, row))
+        for row in parse_tar_blob(blob, with_payload=with_payload)
     ]
+
+
+TarDataSource = make_container_datasource(
+    "tar",
+    (".tar",),
+    _parse_shard,
+    T.StructType([T.StructField("shard_id", T.LongType()), *_MEMBER_FIELDS]),
+    id_field="shard_id",
+    payload=T.StructField("payload", T.BinaryType()),
 )
-
-# .option("payload", "true") appends the raw member bytes — the
-# training-loader shape; the default md5-only schema keeps catalog
-# scans from materializing blobs they only need to fingerprint.
-TAR_SOURCE_PAYLOAD_SCHEMA = T.StructType(
-    [*TAR_SOURCE_SCHEMA.fields, T.StructField("payload", T.BinaryType())]
-)
-
-
-def _wants_payload(options: dict) -> bool:
-    return str(options.get("payload", "false")).lower() in ("true", "1")
-
-_TAR_SUFFIXES = (".tar",)
-
-
-def _is_tar_file(name: str) -> bool:
-    return name.lower().endswith(_TAR_SUFFIXES)
-
-
-def _path_shard_id(path: str) -> int:
-    return int(hashlib.md5(path.encode("utf-8")).hexdigest()[:15], 16)
-
-
-class _TarShardPartition(InputPartition):
-    def __init__(self, path: str, size: int | None = None):
-        self.path = path
-        self.size = size
-
-
-def _read_shard_members(
-    path: str, size: int | None = None, with_payload: bool = False
-) -> Iterator[tuple]:
-    """One shard → member tuples in TAR_SOURCE_SCHEMA (or
-    TAR_SOURCE_PAYLOAD_SCHEMA) order.  ``size`` caps the read at the
-    byte length the planner recorded so executors parse exactly the
-    snapshot the offset describes."""
-    with open(path, "rb") as fh:
-        blob = fh.read() if size is None else fh.read(size)
-    sid = _path_shard_id(path)
-    for row in parse_tar_blob(blob, with_payload=with_payload):
-        yield (path, sid, *row)
-
-
-class TarReader(DataSourceReader):
-    def __init__(self, options: dict):
-        self.with_payload = _wants_payload(options)
-        path = options.get("path")
-        if not path:
-            raise ValueError("tar source needs a path: .load('/shards/*.tar')")
-        if os.path.isdir(path):
-            paths = [
-                p for p in glob.glob(os.path.join(path, "*"))
-                if _is_tar_file(p)
-            ]
-        else:
-            paths = glob.glob(path)
-        self.paths = sorted(p for p in paths if os.path.isfile(p))
-        if not self.paths:
-            raise FileNotFoundError(f"tar source matched no files: {path}")
-
-    def partitions(self) -> list[InputPartition]:
-        return [_TarShardPartition(p) for p in self.paths]
-
-    def read(self, partition: _TarShardPartition) -> Iterator[tuple]:
-        return _read_shard_members(partition.path, with_payload=self.with_payload)
-
-
-class TarStreamReader(DataSourceStreamReader):
-    """Tail a WebDataset shard directory; offsets are the sorted
-    ``[name, size]`` list of already-ingested shards."""
-
-    def __init__(self, options: dict):
-        self.with_payload = _wants_payload(options)
-        self.dir = options.get("path")
-        if not self.dir or not os.path.isdir(self.dir):
-            raise ValueError("streaming tar source needs a directory path")
-        self._high: dict = {}
-
-    def _listing(self) -> list[list]:
-        out = []
-        for n in sorted(os.listdir(self.dir)):
-            p = os.path.join(self.dir, n)
-            if _is_tar_file(n) and os.path.isfile(p):
-                out.append([n, os.path.getsize(p)])
-        return out
-
-    def initialOffset(self) -> dict:
-        return {"seen": []}
-
-    def latestOffset(self) -> dict:
-        # MONOTONIC offsets (review finding): a seen shard that is
-        # deleted and later re-placed must not be forgotten by the
-        # offset (it would silently re-ingest as "new") — the high
-        # watermark remembers every shard this reader has ever listed;
-        # a reappearance at a DIFFERENT size still fails planning via
-        # the changed-size guard.
-        for n, size in self._listing():
-            self._high[n] = size
-        return {"seen": sorted([n, s] for n, s in self._high.items())}
-
-    def partitions(self, start: dict, end: dict):
-        seen = dict(map(tuple, start.get("seen", [])))
-        # Any size change on an already-ingested shard — grown OR shrunk
-        # — violates the atomic-placement contract: a replaced shard's
-        # members would otherwise be silently skipped (neither "grown"
-        # nor "new"), so every mutation fails planning loudly.
-        changed = [
-            (n, seen[n], size)
-            for n, size in end.get("seen", [])
-            if n in seen and size != seen[n]
-        ]
-        if changed:
-            raise ValueError(
-                "tar stream: already-ingested shard(s) changed size — "
-                "shards must be placed atomically and never mutated "
-                "(write to a temp name, rename into the directory): "
-                f"{changed}"
-            )
-        new = [(n, size) for n, size in end.get("seen", []) if n not in seen]
-        return [
-            _TarShardPartition(os.path.join(self.dir, n), size)
-            for n, size in new
-        ] or [_TarShardPartition("")]  # Spark requires >= 1 partition
-
-    def read(self, partition: _TarShardPartition) -> Iterator[tuple]:
-        if not partition.path:
-            return iter(())
-        return _read_shard_members(
-            partition.path, partition.size, with_payload=self.with_payload
-        )
-
-    def commit(self, end: dict) -> None:
-        pass  # offsets are self-describing
-
-
-class TarDataSource(DataSource):
-    """``spark.read.format("tar")`` / ``spark.readStream.format("tar")``
-    — register once per session via
-    ``spark.dataSource.register(TarDataSource)``."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "tar"
-
-    def schema(self) -> T.StructType:
-        if _wants_payload(self.options):
-            return TAR_SOURCE_PAYLOAD_SCHEMA
-        return TAR_SOURCE_SCHEMA
-
-    def reader(self, schema: T.StructType) -> DataSourceReader:
-        return TarReader(self.options)
-
-    def streamReader(self, schema: T.StructType) -> DataSourceStreamReader:
-        return TarStreamReader(self.options)
+TAR_SOURCE_SCHEMA = TarDataSource.source_schema
+TAR_SOURCE_PAYLOAD_SCHEMA = TarDataSource.payload_schema
+TarStreamReader = TarDataSource.StreamReader
+_path_shard_id = path_blob_id
 
 
 def register_tar_source(spark) -> None:
-    """Idempotent registration helper."""
+    """Idempotent registration helper (re-registering is a no-op
+    overwrite in the Python DataSource registry)."""
     spark.dataSource.register(TarDataSource)

@@ -23,9 +23,12 @@ so they cannot disagree.
 
 Scale model mirrors the tar/WARC sources: one ``InputPartition`` per
 shard file, record explosion fused into the scan, zero shuffle; the
-streaming reader tails a directory with the same atomic-placement
-contract (offsets = ingested [name, size] list; any mutation of a seen
-shard fails planning loudly).
+streaming reader tails a directory with an atomic-placement contract
+(offsets = ingested [name, size] list; a size change on a seen shard
+fails planning loudly).  Unlike the container sources
+(sources/container_datasource.py), which also compare mtimes, a seen
+shard re-placed at the same size is NOT an error here: re-placing a
+byte-identical shard is an accepted operation for this source.
 
 Reference analogue: none — the reference has no TFRecord surface; this
 is the LLM-data-pipeline extension (SURVEY §2.11), closing the
@@ -54,6 +57,7 @@ from aroa_etl_spark._vendor.google.protobuf._minipb import (
     encode_varint,
     raw_fields,
 )
+from aroa_etl_spark.sources.container_datasource import path_blob_id, wants_payload
 
 # ---------------------------------------------------------------------------
 # CRC-32C (Castagnoli) — table-driven, reflected polynomial 0x82F63B78
@@ -259,16 +263,8 @@ TFRECORD_PAYLOAD_SCHEMA = T.StructType(
 )
 
 
-def _wants_payload(options: dict) -> bool:
-    return str(options.get("payload", "false")).lower() in ("true", "1")
-
-
 def _is_tfrecord_file(name: str) -> bool:
     return name.lower().endswith((".tfrecord", ".tfrecords"))
-
-
-def _file_id(path: str) -> int:
-    return int(hashlib.md5(path.encode("utf-8")).hexdigest()[:15], 16)
 
 
 class _TFRecordPartition(InputPartition):
@@ -282,7 +278,7 @@ def _read_records(
 ) -> Iterator[tuple]:
     with open(path, "rb") as fh:
         blob = fh.read() if size is None else fh.read(size)
-    fid = _file_id(path)
+    fid = path_blob_id(path)
     for i, payload in enumerate(iter_tfrecords(blob, strict=True)):
         base = (
             path, fid, i, len(payload),
@@ -293,7 +289,7 @@ def _read_records(
 
 class TFRecordReader(DataSourceReader):
     def __init__(self, options: dict):
-        self.with_payload = _wants_payload(options)
+        self.with_payload = wants_payload(options)
         path = options.get("path")
         if not path:
             raise ValueError(
@@ -322,7 +318,7 @@ class TFRecordStreamReader(DataSourceStreamReader):
     contract as the tar/WARC streams."""
 
     def __init__(self, options: dict):
-        self.with_payload = _wants_payload(options)
+        self.with_payload = wants_payload(options)
         self.dir = options.get("path")
         if not self.dir or not os.path.isdir(self.dir):
             raise ValueError("streaming tfrecord source needs a directory path")
@@ -389,7 +385,7 @@ class TFRecordDataSource(DataSource):
         return "tfrecord"
 
     def schema(self) -> T.StructType:
-        if _wants_payload(self.options):
+        if wants_payload(self.options):
             return TFRECORD_PAYLOAD_SCHEMA
         return TFRECORD_SOURCE_SCHEMA
 

@@ -725,6 +725,29 @@ def test_tar_stream_mutated_shard_fails_planning(tmp_path):
     assert parts[0].size == 512
 
 
+def test_tar_stream_same_size_replacement_fails_planning(tmp_path):
+    """A seen shard re-placed with different members of the SAME size
+    carries a fresh mtime; the stream offsets record it, so planning
+    fails instead of silently skipping the swapped members."""
+    import os
+    import tarfile
+
+    from aroa_etl_spark.sources.tar_datasource import TarStreamReader
+
+    shard = tmp_path / "w0.tar"
+    shard.write_bytes(_tar_bytes([("a.txt", b"alpha")], tarfile.USTAR_FORMAT))
+    reader = TarStreamReader({"path": str(tmp_path)})
+    o1 = reader.latestOffset()
+    st = os.stat(shard)
+    shard.write_bytes(_tar_bytes([("a.txt", b"omega")], tarfile.USTAR_FORMAT))
+    # an explicit new mtime: the check must not depend on clock granularity
+    os.utime(shard, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+    assert os.stat(shard).st_size == st.st_size
+    o2 = reader.latestOffset()
+    with pytest.raises(ValueError, match="changed size or mtime"):
+        reader.partitions(o1, o2)
+
+
 def test_webdataset_sample_assembly_roundtrip(spark, tmp_path):
     """The WebDataset last mile: write multi-member samples through
     write_webdataset_shards, read back via format('tar') with

@@ -235,3 +235,18 @@ def test_session_confs_stay_with_the_session_module():
         if rel.startswith("operators/"):
             for banned in ("conf.set(", "conf.unset("):
                 assert banned not in src, f"{rel}: {banned!r} outside scoped_conf"
+
+
+def test_dedup_hot_bucket_policy_lives_in_one_place():
+    """Every banded or inverted-index candidate join in ``dedup.py``
+    goes through ``_hot_buckets``/``_bucket_join``: the mode check and
+    the salted join each appear once, and no per-operator hot-set
+    helper comes back."""
+    from pathlib import Path
+
+    import aroa_etl_spark
+
+    src = (Path(aroa_etl_spark.__file__).parent / "operators/dedup.py").read_text()
+    assert src.count("salted_hot_join(") == 1, "hand-rolled salted join"
+    assert src.count('("drop", "salt")') == 1, "hand-rolled hot_bucket_mode check"
+    assert "_observed_hot_set" not in src
