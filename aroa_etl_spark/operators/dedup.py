@@ -154,6 +154,13 @@ def _jaccard_filter(
     )
 
 
+def _check_hot_mode(hot_bucket_mode: str) -> None:
+    """Reject an unknown ``hot_bucket_mode``; operators call it before
+    their first barrier so a bad mode registers no cached frame."""
+    if hot_bucket_mode not in ("drop", "salt"):
+        raise ValueError("hot_bucket_mode must be 'drop' or 'salt'")
+
+
 def _hot_buckets(
     rows: DataFrame,
     keys,
@@ -207,8 +214,7 @@ def _hot_buckets(
     the identity otherwise; ``hot`` is the key frame to salt, or
     ``None`` for the plain join.  With ``max_bucket_size=None`` nothing
     is sized: ``(identity, None)``."""
-    if hot_bucket_mode not in ("drop", "salt"):
-        raise ValueError("hot_bucket_mode must be 'drop' or 'salt'")
+    _check_hot_mode(hot_bucket_mode)
     keys = [keys] if isinstance(keys, str) else list(keys)
     if max_bucket_size is None:
         return (lambda frame: frame), None
@@ -361,6 +367,7 @@ def minhash_lsh_incremental(
     index x index quadrant — the overwhelming bulk at 100 TB — is never
     joined at all.  Ids must be disjoint between the two frames.
     """
+    _check_hot_mode(hot_bucket_mode)
     sh_new, keys_new = _lsh_shingles_and_keys(
         new_docs, id_col, text_col, num_perm, bands, shingle_n
     )
@@ -421,6 +428,7 @@ def minhash_lsh_dedup(
     Hot buckets (``max_bucket_size``, ``hot_bucket_mode``, ``hot_salt``,
     ``observation``) follow :func:`_hot_buckets`.
     """
+    _check_hot_mode(hot_bucket_mode)
     # Materialize tokens, then distinct shingles, as separate projections
     # (see shingles_from) and persist via _barrier: the shingle frame
     # feeds signature computation AND both sides of the Jaccard
@@ -548,6 +556,7 @@ def ngram_jaccard_pairs(
     (block, shingle) posting lists follow :func:`_hot_buckets`.
     Returns (id_a, id_b, n_intersect, n_union) for Jaccard ≥ threshold.
     """
+    _check_hot_mode(hot_bucket_mode)
     sh = (
         df.select(
             F.col(id_col),
@@ -673,6 +682,7 @@ def simhash_dedup(
             "hash_bits must be ≤60 (BIGINT-safe), a multiple of 4 (hex "
             "chars), and divisible by n_bands (equal band widths)"
         )
+    _check_hot_mode(hot_bucket_mode)
     band_bits = hash_bits // n_bands
     # SimHash via explode + grouped bit-votes rather than nested array
     # folds: flat codegen-friendly expressions, map-side partial
@@ -809,6 +819,7 @@ def embedding_neardup_pairs(
     bug) follow :func:`_hot_buckets`; auto-banding's ~4-per-bucket
     sizing makes that a safety net.
     """
+    _check_hot_mode(hot_bucket_mode)
     # dims past the vector length read NULL via element_at -> constant
     # "0" bits -> degraded selectivity toward the all-pairs blowup the
     # probe exists to prevent; the dimensionality check therefore runs
@@ -1030,6 +1041,7 @@ def ngram_containment_pairs(
     Boilerplate shingles are exactly where containment dedup lives."""
     if not 1 <= threshold_pct <= 100:
         raise ValueError(f"threshold_pct must be in [1, 100], got {threshold_pct}")
+    _check_hot_mode(hot_bucket_mode)
     # tokens materialize in their OWN projection first: shingles_from's
     # documented contract — an inline tokenizer re-splits the text once
     # per shingle (measured 5x slowdown; see functions/text.py)

@@ -29,6 +29,8 @@ fails planning loudly instead of silently dropping or skipping members.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
 from pyspark.sql import types as T
 
 from aroa_etl_spark.sources.container_datasource import (
@@ -42,11 +44,12 @@ _MEMBER_FIELDS = [f for f in TAR_MEMBERS_SCHEMA.fields if f.name != "media_id"]
 _ROW_NAMES = [*(f.name for f in _MEMBER_FIELDS), "payload"]
 
 
-def _parse_shard(blob: bytes, with_payload: bool = False) -> list[dict]:
-    return [
+def _parse_shard(blob: bytes, with_payload: bool = False) -> Iterator[dict]:
+    # lazy: a task holds one member's payload at a time, not a copy of the shard
+    return (
         dict(zip(_ROW_NAMES, row))
         for row in parse_tar_blob(blob, with_payload=with_payload)
-    ]
+    )
 
 
 TarDataSource = make_container_datasource(

@@ -1,7 +1,7 @@
 """Count code, comment/docstring and blank lines in the Python package.
 
-Every physical line of each ``.py`` file under ``aroa_etl_spark/`` (or
-the directories given on the command line) falls in exactly one class:
+Every physical line of each ``.py`` file under ``aroa_etl_spark/`` falls
+in exactly one class:
 
 - blank: whitespace only, docstring interiors included;
 - comment/docstring: the line carries only ``#`` comments, or lies
@@ -9,15 +9,14 @@ the directories given on the command line) falls in exactly one class:
 - code: every other line.
 
 Comments are found with ``tokenize``, so a ``#`` inside a string literal
-is code, not a comment.  Run from the repo root:
+is code, not a comment.  Run from the repo root; it prints one row per
+file and a total row:
 
-    python scripts/count_lines.py            # per-file rows + total
-    python scripts/count_lines.py --total    # total row only
+    python scripts/count_lines.py
 """
 
 from __future__ import annotations
 
-import argparse
 import ast
 import io
 import sys
@@ -73,22 +72,17 @@ def count_file(path: Path) -> tuple[int, int, int]:
     return code, comment, blank
 
 
-def main(argv: list[str] | None = None) -> int:
-    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("roots", nargs="*", default=["aroa_etl_spark"])
-    ap.add_argument("--total", action="store_true", help="print the total row only")
-    args = ap.parse_args(argv)
-    files = sorted(p for r in args.roots for p in Path(r).rglob("*.py"))
+def main() -> int:
+    files = sorted(Path("aroa_etl_spark").rglob("*.py"))
     if not files:
-        print(f"no .py files under {args.roots}", file=sys.stderr)
+        print("no .py files under aroa_etl_spark/", file=sys.stderr)
         return 1
     totals = [0, 0, 0]
     print(f"{'code':>7} {'comment':>7} {'blank':>7}  file")
     for f in files:
         counts = count_file(f)
         totals = [t + c for t, c in zip(totals, counts)]
-        if not args.total:
-            print(f"{counts[0]:>7} {counts[1]:>7} {counts[2]:>7}  {f}")
+        print(f"{counts[0]:>7} {counts[1]:>7} {counts[2]:>7}  {f}")
     print(f"{totals[0]:>7} {totals[1]:>7} {totals[2]:>7}  total ({len(files)} files)")
     return 0
 

@@ -748,6 +748,23 @@ def test_tar_stream_same_size_replacement_fails_planning(tmp_path):
         reader.partitions(o1, o2)
 
 
+def test_tar_shard_parse_is_lazy():
+    """The tar source parses a shard lazily, one member at a time, so a
+    payload read never holds a copy of every member alongside the
+    shard blob."""
+    import tarfile
+    from collections.abc import Iterator
+
+    from aroa_etl_spark.sources.tar_datasource import _parse_shard
+
+    blob = _tar_bytes([("a.txt", b"alpha"), ("b.txt", b"beta")], tarfile.USTAR_FORMAT)
+    recs = _parse_shard(blob, with_payload=True)
+    assert isinstance(recs, Iterator)
+    first = next(recs)
+    assert (first["name"], first["payload"]) == ("a.txt", b"alpha")
+    assert [r["name"] for r in recs] == ["b.txt"]
+
+
 def test_webdataset_sample_assembly_roundtrip(spark, tmp_path):
     """The WebDataset last mile: write multi-member samples through
     write_webdataset_shards, read back via format('tar') with

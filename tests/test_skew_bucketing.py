@@ -536,8 +536,9 @@ def test_ngram_jaccard_blocked_salt_mode_matches_unbounded(spark):
 
 def _hot_bucket_operators():
     """The six candidate joins under the shared hot-bucket policy, each
-    as ``run(docs, **cap_kwargs)`` over :func:`_skewed_docs` (its 120
-    boilerplate docs form one bucket of >= 120 rows per band/key)."""
+    as ``run(docs, **cap_kwargs)`` over the first 240 of
+    :func:`_skewed_docs` (its 120 boilerplate docs form one bucket of
+    >= 120 rows per band/key)."""
     from aroa_etl_spark.operators import dedup
 
     def incremental(docs, **kw):
@@ -566,7 +567,9 @@ def _hot_bucket_operators():
         "minhash_incremental": incremental,
         "ngram_winnowing": lambda docs, **kw: dedup.ngram_jaccard_pairs(
             docs, n=3, threshold=0.5, winnow_window=4, **kw),
-        "simhash": lambda docs, **kw: dedup.simhash_dedup(docs, **kw),
+        # 16-bit hashes: a quarter of the default's vote columns, the
+        # same band join
+        "simhash": lambda docs, **kw: dedup.simhash_dedup(docs, hash_bits=16, **kw),
         "embedding": embedding,
         "containment_inverted_index": lambda docs, **kw: dedup.ngram_containment_pairs(
             docs.withColumn("source", F.lit("s0")), n=3, threshold_pct=80,
@@ -582,7 +585,7 @@ def test_hot_bucket_policy_keeps_the_plain_join_fast_path(spark, op):
     from aroa_etl_spark.operators.dedup import release_caches
 
     run = _hot_bucket_operators()[op]
-    docs = _skewed_docs(spark)
+    docs = _skewed_docs(spark).filter(F.col("doc_id") < 240)
     try:
         cold = run(docs, max_bucket_size=1000)
         assert "__salt" not in cold._jdf.queryExecution().toString()
@@ -590,3 +593,17 @@ def test_hot_bucket_policy_keeps_the_plain_join_fast_path(spark, op):
         assert "__salt" in hot._jdf.queryExecution().toString()
     finally:
         release_caches()
+
+
+def test_invalid_hot_bucket_mode_caches_nothing(spark):
+    """An unknown ``hot_bucket_mode`` is rejected before the operator
+    persists any barrier frame, so nothing is left for
+    ``release_caches`` to find."""
+    from aroa_etl_spark.operators import dedup
+
+    docs = _skewed_docs(spark)
+    before = list(dedup._CACHED_FRAMES)
+    for op, run in sorted(_hot_bucket_operators().items()):
+        with pytest.raises(ValueError, match="hot_bucket_mode"):
+            run(docs, hot_bucket_mode="explode")
+        assert dedup._CACHED_FRAMES == before, op
