@@ -16,9 +16,10 @@ the scale path here is:
 4. Connected components (``connected_components``): the edge list is
    materialized once; an edge list that fits on the driver (the
    planner's own broadcast test) is resolved there by a vectorized
-   union-find, a larger one by distributed min-label propagation.
+   union-find, a larger one by distributed large-star/small-star
+   rounds, which converge in O(log n) rounds whatever the diameter.
    Person graphs are name-blocked, so their edge lists are small next
-   to the mentions they link, and a dozen eager jobs per propagation
+   to the mentions they link, and a dozen eager jobs per distributed
    run would cost more than the data.
 5. ``Person_Entity_ID`` = dense rank of the component root — stable,
    deterministic (SURVEY §7 risk 3: no nondeterministic UUIDs).
@@ -54,8 +55,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 25,
-    dedup_edges: bool = False,
-    checkpoint_every: int = 5,
     num_partitions: int | None = None,
     stats: dict | None = None,
 ) -> DataFrame:
@@ -78,41 +77,24 @@ def connected_components(
       a vectorized union-find (``np.unique`` dense ids, ``np.minimum.at``
       root hooking, pointer jumping). The answer comes back through
       ``createDataFrame``: one job for the whole fixpoint instead of a
-      job per propagation round, each of which pays driver-side
+      job per distributed round, each of which pays driver-side
       planning on a lineage that grows every round. ``max_iter`` does
       not apply: the driver always reaches the fixpoint. Ids other than
       integers and plain (non-collated) strings take the rounds path.
     - **rounds**: otherwise (and always under a threshold of ``-1``,
-      Spark's "never broadcast"), distributed min-label propagation
-      from the checkpoint, described below.
+      Spark's "never broadcast"), alternating large-star / small-star
+      rounds from the checkpoint (:func:`_star_rounds`), O(log n)
+      of them whatever the graph's diameter. ``max_iter`` caps them.
 
-    Min-label propagation: each round every node takes the minimum label
-    among itself and its neighbors — ONE join + union + aggregation per
-    round (the self-label rides the union, so no second join to merge it
-    back). Convergence detection free-rides on monotonicity: labels only
-    ever decrease, so the label SUM strictly decreases until the
-    fixpoint — equality of consecutive sums terminates (computed as
-    decimal so planet-scale id sums can't overflow a long; ids that are
-    not integers sum a 64-bit hash of each (node, label) pair). Converges in
-    O(diameter) rounds; ``max_iter`` caps them, so raise it for
-    adversarial graphs (or use :func:`connected_components_star`).
+    The distributed path is the star loop rather than min-label
+    propagation, which moves a label one hop per round: on a 100-node
+    chain propagation stopped at the 25-round cap with 74 of 100 nodes
+    still carrying a stale component, and gave no warning; the star
+    rounds reached the fixpoint in 8.  Duplicate edges need no
+    ``distinct`` pass up front: the per-round min-aggregations absorb
+    them and each round's new edge set is deduplicated.
 
-    Shuffle budget of a round:
-
-    - round 1 is FUSED into label init — ``min(self, neighbors)`` is one
-      aggregation over the edge list, no join;
-    - the symmetric edge list is persisted pre-partitioned on the join
-      key and every round's labels come out of a ``groupBy(node)``
-      persisted WITH their partitioning (persist, unlike a checkpoint,
-      keeps outputPartitioning visible to Catalyst), so each round
-      shuffles only the propagated labels, not the edges;
-    - ``dedup_edges=False`` by default: min() absorbs duplicate edges,
-      so the distinct shuffle is pure overhead unless the input carries
-      heavy multi-edges;
-    - every ``checkpoint_every`` rounds the lineage is cut so plans
-      don't grow unboundedly on adversarial-diameter graphs.
-
-    All internal persists are released before returning; the rounds
+    All intermediate blocks are released before returning; the rounds
     result is an eager local checkpoint that owns its blocks
     (ContextCleaner frees them when the frame is unreferenced).
 
@@ -120,8 +102,8 @@ def connected_components(
     call's lifetime through :func:`~aroa_etl_spark.session.scoped_conf`
     (restored on exit; concurrent pinned calls take turns), so the edge
     derivation upstream (materialized by the checkpoint) and every
-    round shuffle at that width. Labels are (node, label) pairs, tiny
-    next to the data they describe, so a session-wide shuffle width
+    round shuffle at that width. Edges are (id, id) pairs, tiny next
+    to the data they describe, so a session-wide shuffle width
     (e.g. 200 under a plain driver session) schedules mostly-empty
     tasks every round; size it to ~nodes×16 bytes / 64 MB, floored at
     the cluster's default parallelism. ``None`` (default) leaves the
@@ -130,7 +112,7 @@ def connected_components(
     ``stats`` (optional dict) receives ``path`` (``"driver"`` or
     ``"rounds"``), ``edges`` (edge rows after dropping self-loops and
     NULL ids) and ``rounds`` (union-find hooking rounds on the driver,
-    propagation rounds including the fused first one otherwise).
+    star rounds otherwise).
     """
     spark = edges.sparkSession
     stats = {} if stats is None else stats
@@ -149,7 +131,7 @@ def connected_components(
                 stats["path"] = "driver"
                 return _components_on_driver(ck, stats)
             stats["path"] = "rounds"
-            return _propagation_rounds(ck, max_iter, dedup_edges, checkpoint_every, stats)
+            return _star_rounds(ck, max_iter, stats)
         finally:
             # both results are materialized without it: free its blocks
             # now, not whenever a JVM GC lets the ContextCleaner run
@@ -217,208 +199,79 @@ def _union_find(u: np.ndarray, v: np.ndarray, n: int, stats: dict) -> np.ndarray
     return parent
 
 
-def _propagation_rounds(
-    ck: DataFrame,
-    max_iter: int,
-    dedup_edges: bool,
-    checkpoint_every: int,
-    stats: dict,
-) -> DataFrame:
-    # symmetrize in one pass over the checkpoint: explode(array(fwd, rev))
-    sym = ck.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("a"), F.col("b")),
-                F.struct(F.col("b").alias("a"), F.col("a").alias("b")),
-            )
-        ).alias("__e")
-    ).select("__e.a", "__e.b")
-    if dedup_edges:
-        sym = sym.distinct()
-    sym = sym.repartition("b").persist()
+def _star_rounds(ck: DataFrame, max_iter: int, stats: dict) -> DataFrame:
+    """Alternating large-star / small-star rounds (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC'14) from the
+    edge checkpoint.  The rounds rewire the edge set toward one star per
+    component (every member pointing at the component minimum), so they
+    finish in O(log n) rounds whatever the graph's diameter:
 
-    # convergence witness: labels only decrease, so integer labels have
-    # an exact one in their sum; other ids sum a 64-bit hash of every
-    # (node, label) pair, the set-identity witness of the star variant
-    if isinstance(ck.schema["a"].dataType, T.IntegralType):
-        witness = F.col("label")
-    else:
-        witness = F.xxhash64("node", "label")
+    - **large-star** (per node u): every LARGER neighbor of u re-points
+      at min(u ∪ N(u)) — one agg for the per-node min + one join;
+    - **small-star** (per node u, over the big → small orientation the
+      large-star emits, where N(u) holds only smaller nodes): u and all
+      its neighbors re-point at the smallest of them.
 
-    def probe(df: DataFrame):
-        return df.agg(F.sum(witness.cast("decimal(38,0)")).alias("s")).collect()[0]["s"]
-
-    # fused round 1: every node takes min(self, neighbors) in one agg
-    labels = (
-        sym.groupBy("a")
-        .agg(F.min("b").alias("__mn"))
-        .select(F.col("a").alias("node"), F.least("a", "__mn").alias("label"))
-        .persist()
-    )
-    prev_sum = probe(labels)
-    cached = [labels]
-    rounds = 1
-
-    for i in range(max_iter - 1):
+    Both keep connectivity and only ever lower attachment targets, so
+    an edge set equal to the previous round's (same row count and sum
+    of per-edge 64-bit hashes) is the fixpoint, where both steps are the
+    identity and the edge set IS the answer: one (node, root) edge per
+    non-root node."""
+    # the checkpoint holds (a, b) with a < b: orient every edge big → small
+    e = ck.select(F.col("b").alias("u"), F.col("a").alias("v"))
+    prev, rounds = None, 0
+    while rounds < max_iter:
         rounds += 1
-        neighbor_labels = sym.join(labels, sym["b"] == labels["node"]).select(
-            F.col("a").alias("node"), "label"
+        sym = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
+        m = sym.groupBy("u").agg(F.least(F.min("v"), F.col("u")).alias("m"))
+        # no distinct here: m2's min-agg absorbs duplicate (v, m) pairs
+        # and the per-round distinct on the new edge set bounds it
+        large = (
+            sym.join(m, "u")
+            .filter(F.col("v") > F.col("u"))
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
         )
-        new_labels = (
-            neighbor_labels.unionByName(labels)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-        )
-        if (i + 1) % checkpoint_every == 0:
-            new_labels = new_labels.localCheckpoint(eager=True)  # lineage cut
-        else:
-            new_labels = new_labels.persist()
-            cached.append(new_labels)
-        label_sum = probe(new_labels)
-        labels = new_labels
-        if label_sum == prev_sum:
-            break
-        prev_sum = label_sum
-
-    out = labels.select("node", F.col("label").alias("component")).localCheckpoint(
-        eager=True
-    )
-    for df in cached:
-        df.unpersist()
-    sym.unpersist()
-    stats["rounds"] = rounds
-    return out
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 20,
-    num_partitions: int | None = None,
-    stats: dict | None = None,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) → (node, component) with component = min member id — the
-    same contract as :func:`connected_components`.
-
-    Min-label propagation moves a label ONE hop per round: O(diameter)
-    rounds, which is fine for blocked person graphs (tiny diameters)
-    but quadratic-ish wall time on chain-shaped graphs (transaction
-    chains, citation paths). The star operations rewire the graph
-    itself toward a star per component — O(log n) rounds regardless
-    of diameter:
-
-    - **large-star** (per node u): point every LARGER neighbor at
-      min(u ∪ N(u)) — one agg for the per-node min + one join, both
-      shuffling on node id;
-    - **small-star** (per node u, over the (big → small) edge
-      orientation the large-star emits): point u and every smaller
-      neighbor at the smallest of them.
-
-    Both preserve connectivity and only ever decrease attachment
-    targets, so the (count, sum) probe over the deduped edge set is a
-    monotone convergence witness (same argument as the label-sum probe
-    in the propagation variant). At the fixpoint the edge set IS the
-    answer: exactly one (node, root) edge per non-root node.
-
-    Propagation stays the default — for the small-diameter graphs the
-    matching pipeline produces it does fewer shuffles per round (2 vs
-    4) and its fused first round often finishes the job. Reach for the
-    star variant when diameters are unbounded. ``stats['rounds']``
-    reports the converged round count (for tests and tuning).
-    """
-    pin = {} if num_partitions is None else {"spark.sql.shuffle.partitions": str(num_partitions)}
-    with scoped_conf(edges.sparkSession, pin):
-        # orient every edge big → small once; self-loops dropped
-        e = (
-            edges.select(
-                F.greatest(F.col(src), F.col(dst)).alias("u"),
-                F.least(F.col(src), F.col(dst)).alias("v"),
-            )
+        m2 = large.groupBy("u").agg(F.min("v").alias("m"))
+        # lineage cut EVERY round: a round references the previous edge
+        # set four times (sym twice + two joins), so without a cut the
+        # analyzed plan grows ~4^k and Catalyst analysis, not data,
+        # becomes the cost (measured: rounds 1-2 ≈ 1 s, round 3 ≈ 18 s
+        # with persist-only).  The convergence probe rides the same
+        # eager checkpoint as an Observation: one job per round.
+        obs = Observation()
+        nxt = (
+            large.join(m2, "u")
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .filter(F.col("u") != F.col("v"))
+            .unionByName(m2.select("u", F.col("m").alias("v")))
             .distinct()
-            .persist()
-        )
-
-        def probe(df: DataFrame):
-            # set-identity witness: order-independent sum of per-edge hashes
-            # (+ count) — equal probes on consecutive rounds mean the edge
-            # set reached the star fixpoint, where both ops are the identity
-            row = df.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("s"),
-            ).collect()[0]
-            return (row["n"], row["s"])
-
-        prev = probe(e)
-        rounds = 0
-        cached = [e]
-        for i in range(max_iter):
-            rounds = i + 1
-            # large-star: sym view, per-node min over ALL neighbors ∪ self,
-            # larger neighbors re-point at it
-            sym = e.select("u", "v").unionByName(
-                e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-            )
-            m = sym.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
-            # no distinct here: m2's min-agg absorbs duplicate (v, m) pairs
-            # and the per-round dedup on new_e bounds the edge set — one
-            # shuffle per round instead of two
-            large = (
-                sym.join(m, "u")
-                .filter(F.col("v") > F.col("u"))
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .filter(F.col("u") != F.col("v"))
-            )
-            # small-star: edges are big → small, so N≤(u) is exactly the
-            # neighbor set along this orientation
-            m2 = large.groupBy("u").agg(F.min("v").alias("m"))
-            new_e = (
-                large.join(m2, "u")
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .filter(F.col("u") != F.col("v"))
-                .unionByName(m2.select("u", F.col("m").alias("v")))
-                .distinct()
-            )
-            # lineage cut EVERY round: a star round references the previous
-            # edge set four times (sym twice + two joins), so without a cut
-            # the analyzed plan grows ~4^k — Catalyst analysis, not data,
-            # becomes the cost (measured: rounds 1-2 ≈ 1 s, round 3 ≈ 18 s
-            # with persist-only). The eager checkpoint materializes the
-            # (tiny) edge set and makes every round's plan constant-size.
-            # The convergence probe rides the SAME materialization as an
-            # Observation (observed metrics fire on an eager localCheckpoint)
-            # — one job per round instead of two; per-round cost here is
-            # job/stage overhead, not data (guide §1.2).
-            obs = Observation()
-            new_e = new_e.observe(
+            .observe(
                 obs,
                 F.count(F.lit(1)).alias("n"),
                 F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("s"),
-            ).localCheckpoint(eager=True)
-            got = obs.get
-            cur = (got["n"], got["s"])
-            e = new_e
-            if cur == prev:
-                break
-            prev = cur
-
-        out = (
-            e.select(F.col("u").alias("node"), F.col("v").alias("component"))
-            .unionByName(
-                e.select(F.col("v").alias("node"), F.col("v").alias("component")).distinct()
             )
-            .groupBy("node")
-            .agg(F.min("component").alias("component"))
             .localCheckpoint(eager=True)
         )
-        for df in cached:
-            df.unpersist()
-        if stats is not None:
-            stats["rounds"] = rounds
-        return out
+        if rounds > 1:  # round 1 read the caller's checkpoint, not its own
+            e._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        e = nxt
+        got = obs.get
+        cur = (got["n"], got["s"])
+        if cur == prev:
+            break
+        prev = cur
+
+    out = (
+        e.select(F.col("u").alias("node"), F.col("v").alias("component"))
+        .unionByName(e.select(F.col("v").alias("node"), F.col("v").alias("component")))
+        .groupBy("node")
+        .agg(F.min("component").alias("component"))
+        .localCheckpoint(eager=True)
+    )
+    if rounds:
+        e._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    stats["rounds"] = rounds
+    return out
 
 
 def _star_edges(df: DataFrame, id_col: str, key_col: str) -> DataFrame:

@@ -545,15 +545,16 @@ def ngram_jaccard_pairs(
     With ``block_col`` (e.g. lang or source) pairs come from an
     inverted-index join on (block, shingle) — only docs sharing a
     shingle inside a block pair up, and the intersection size is a
-    map-side-combinable count (``threshold == 0`` falls back to the
-    bounded per-block cross product, since zero-overlap pairs must then
+    map-side-combinable count (``threshold == 0`` joins on the block
+    alone, a per-block cross product, since zero-overlap pairs must then
     appear). Without it, candidates come from shared WINNOWING fingerprints
     (window minima over the shingle-hash sequence): any two docs
     sharing a run of ``winnow_window``+n-1 tokens share a fingerprint,
     so near-dups are caught regardless of where the overlap sits —
     strictly better recall than the previous opening-n-gram key at the
-    same join shape. Hot winnowing-fingerprint buckets and hot blocked
-    (block, shingle) posting lists follow :func:`_hot_buckets`.
+    same join shape. Hot winnowing-fingerprint buckets, hot blocked
+    (block, shingle) posting lists and, at ``threshold == 0``, hot
+    blocks follow :func:`_hot_buckets`.
     Returns (id_a, id_b, n_intersect, n_union) for Jaccard ≥ threshold.
     """
     _check_hot_mode(hot_bucket_mode)
@@ -614,10 +615,8 @@ def ngram_jaccard_pairs(
     if block_col is not None:
         # threshold == 0: every in-block pair with a non-empty union must
         # appear, including zero-intersection ones — the inverted index
-        # can't see those, so fall back to the bounded block cross
-        # product, which sizes no buckets.
+        # can't see those, so the block itself is the join key
         k = sh.select(F.col(id_col), F.col(block_col).alias("__k"))
-        max_bucket_size = None
     else:
         from aroa_etl_spark.functions.text import with_winnowing_fingerprints
 

@@ -15,7 +15,7 @@ is pre-folded into the edge frame once) and one map-side-combinable
 groupBy on dst, then a left join back to the node set for dangling
 nodes. Lineage grows linearly with iterations; for long runs pass
 ``checkpoint_every`` to cut it with an eager localCheckpoint (the same
-pattern as connected_components_star, clustering.py).
+pattern as the star rounds of connected_components, clustering.py).
 
 Dangling-node mass (nodes with no out-edges) is dropped, not
 redistributed — ranks then need no global renormalization pass and stay
@@ -150,7 +150,6 @@ def bfs_hops(
     src: str = "src",
     dst: str = "dst",
     undirected: bool = True,
-    checkpoint_every: int | None = None,
 ) -> DataFrame:
     """Exact hop distances (node, dist) from a seed set, bounded at
     ``max_hops`` — multi-source BFS as the classic frontier expansion:
@@ -175,9 +174,7 @@ def bfs_hops(
     The edge list is deliberately NOT deduplicated: the per-hop
     ``reached.distinct()`` (over the frontier's neighborhood only)
     already absorbs duplicate edges, and a whole-graph distinct is a
-    full extra shuffle that measured as HALF this walk's cost.
-    ``checkpoint_every`` additionally cuts frontier lineage on deep
-    walks (same escape hatch as pagerank)."""
+    full extra shuffle that measured as HALF this walk's cost."""
     if max_hops < 0:
         raise ValueError(f"max_hops must be >= 0, got {max_hops}")
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
@@ -198,12 +195,8 @@ def bfs_hops(
             .select(F.col("dst").alias("node"))
             .distinct()
         )
-        frontier = reached.join(visited, "node", "left_anti")
-        if checkpoint_every and h % checkpoint_every == 0:
-            frontier = frontier.localCheckpoint(eager=True)
-        else:
-            frontier = frontier.persist()
-            cached.append(frontier)
+        frontier = reached.join(visited, "node", "left_anti").persist()
+        cached.append(frontier)
         # JVM-side emptiness probe (df.rdd.isEmpty() would route every
         # frontier through Python-RDD serialization — measured ~4x the
         # whole walk's cost); also forces the persisted frontier

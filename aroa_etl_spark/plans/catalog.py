@@ -852,7 +852,7 @@ def cc_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     Components are exactly the per-customer order sets, so the oracle is
     a plain group-min — while the Spark side runs the real
     connected-components operator (its driver union-find while the edge
-    list fits under the broadcast threshold, min-label propagation
+    list fits under the broadcast threshold, large-star/small-star
     rounds above it)."""
     from aroa_etl_spark.operators.clustering import connected_components
 
@@ -925,16 +925,18 @@ _PERSONS_SQL = f"""
     """,
 )
 def cc_star_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components via alternating large-star/small-star
-    (clustering.py connected_components_star) on CHAIN-ONLY edges —
-    per-customer order chains give the graph an unbounded diameter,
-    exactly the shape where O(diameter) min-label propagation degrades
-    and the star algorithm's O(log n) rounds win. Same oracle (and the
-    same fixpoint) as cc_connected_components. Edge labels are tiny, so
-    the loop pins a narrow shuffle width (8): star rounds are many
-    small stages and per-task overhead, not data volume, is the gate-
-    scale cost."""
-    from aroa_etl_spark.operators.clustering import connected_components_star
+    """Connected components on CHAIN-ONLY edges — per-customer order
+    chains give the graph an unbounded diameter, the shape where
+    O(diameter) min-label propagation degrades and the large-star/
+    small-star rounds' O(log n) win. Same oracle (and the same
+    fixpoint) as cc_connected_components. The operator picks its path
+    from the measured edge size, not from the caller: at catalog scale
+    the edge list fits under the broadcast threshold and the driver
+    union-find resolves it; above the threshold (or at ``-1``) the star
+    rounds run. Edges are tiny, so the call pins a narrow shuffle width
+    (8): star rounds are many small stages and per-task overhead, not
+    data volume, is their cost."""
+    from aroa_etl_spark.operators.clustering import connected_components
 
     t = load_tables(spark, sf_dir, ("orders",))
     o = t["orders"].select("o_orderkey", "o_custkey")
@@ -943,7 +945,7 @@ def cc_star_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderkey").alias("src"),
         F.lead("o_orderkey").over(w).alias("dst"),
     ).filter(F.col("dst").isNotNull())
-    comp = connected_components_star(edges, num_partitions=8)
+    comp = connected_components(edges, num_partitions=8)
     return o.join(comp, o["o_orderkey"] == comp["node"], "left").select(
         F.col("o_orderkey").alias("node"),
         F.coalesce("component", "o_orderkey").alias("component"),

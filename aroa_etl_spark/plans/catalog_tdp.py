@@ -1199,8 +1199,8 @@ def er_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays the bit-exact LSH pair generation and then derives
     components INDEPENDENTLY via a recursive-CTE transitive closure
     (label-set saturation), where the engine runs a union-find (or
-    min-label propagation when the edge list outgrows the driver) — two
-    different algorithms, same fixpoint."""
+    large-star/small-star rounds when the edge list outgrows the
+    driver) — two different algorithms, same fixpoint."""
     from aroa_etl_spark.operators.clustering import connected_components
     from aroa_etl_spark.operators.dedup import minhash_lsh_dedup, release_caches
 
@@ -2328,10 +2328,10 @@ def dedup_canonical_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle closes the SAME pair graph with a recursive CTE
     (min reachable id == min label fixpoint), so the cluster structure
     and every keep bit are value-checked, not just pair counts.  Scale:
-    the LSH join is the banded/salted path, CC shuffles only (node,
-    label) pairs — tiny next to the corpus — and converges in
-    O(cluster diameter) rounds; near-dup clusters are shallow (pairs
-    and small stars), so 8 rounds is generous."""
+    the LSH join is the banded/salted path, and CC shuffles only (id,
+    id) edge pairs — tiny next to the corpus — resolved on the driver
+    while they fit under the broadcast threshold, by O(log n) star
+    rounds above it."""
     from aroa_etl_spark.operators.clustering import connected_components
     from aroa_etl_spark.operators.dedup import minhash_lsh_dedup
 
@@ -2339,15 +2339,14 @@ def dedup_canonical_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = minhash_lsh_dedup(
         docs, num_perm=8, bands=4, shingle_n=3, threshold=0.7
     )
-    # The label frames are (id, id) pairs over just the paired docs —
+    # The edge frames are (id, id) pairs over just the paired docs —
     # orders of magnitude smaller than the corpus — so the loop runs at
     # a narrow shuffle width (see connected_components' num_partitions
     # note) instead of scheduling session-width empty tasks each round.
     # max_iter stays at the operator's 25-round default: convergence
-    # detection exits after ~diameter rounds anyway, so the headroom is
-    # free when clusters are shallow and protects long templated-doc
-    # CHAINS (diameter > 8) from silently keeping stale labels — the
-    # review counterexample for a hand-lowered cap.
+    # detection exits once the edge set stops changing, so the headroom
+    # is free on shallow clusters and a hand-lowered cap is the one way
+    # left to stop a deep one short of its fixpoint.
     comp = connected_components(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
         num_partitions=8,

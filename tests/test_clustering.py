@@ -184,50 +184,60 @@ def test_person_clustering_dense_ids_distributed(spark):
 
 
 # ---------------------------------------------------------------------------
-# large-star / small-star variant (round 3)
+# large-star / small-star rounds (the distributed path)
 # ---------------------------------------------------------------------------
 
 def test_star_cc_matches_propagation_on_random_graph(spark):
+    """The rounds path agrees with the driver union-find on the same
+    150-edge random graph."""
     import random
-
-    from aroa_etl_spark.operators.clustering import (
-        connected_components,
-        connected_components_star,
-    )
 
     rng = random.Random(42)
     edges = [(rng.randrange(200), rng.randrange(200)) for _ in range(150)]
     df = spark.createDataFrame(edges, "src long, dst long")
-    prop = {r["node"]: r["component"] for r in connected_components(df).collect()}
-    star = {r["node"]: r["component"] for r in connected_components_star(df).collect()}
-    assert star == prop
+    driver, d_stats = _run_cc(spark, df, "67108864")
+    rounds, r_stats = _run_cc(spark, df, "-1")
+    assert (d_stats["path"], r_stats["path"]) == ("driver", "rounds")
+    assert rounds == driver
 
 
 def test_star_cc_chain_graph_converges_in_log_rounds(spark):
-    """A 64-node chain has diameter 63: min-label propagation needs ~63
-    rounds (it moves labels one hop per round), the star variant O(log n).
-    The fixpoint must still be component 0 for every node."""
-    from aroa_etl_spark.operators.clustering import connected_components_star
-
+    """A 64-node chain has diameter 63: min-label propagation would need
+    ~63 rounds (it moves labels one hop per round), the star rounds
+    O(log n). The fixpoint must still be component 0 for every node."""
     n = 64
     df = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "src long, dst long")
-    stats: dict = {}
-    out = {r["node"]: r["component"]
-           for r in connected_components_star(df, stats=stats).collect()}
+    out, stats = _run_cc(spark, df, "-1")
+    assert stats["path"] == "rounds"
     assert out == {i: 0 for i in range(n)}
     assert stats["rounds"] <= 10  # log-ish, nowhere near the 63 propagation needs
 
 
 def test_star_cc_handles_duplicate_and_reversed_edges(spark):
-    from aroa_etl_spark.operators.clustering import connected_components_star
-
     df = spark.createDataFrame(
         [(1, 2), (2, 1), (2, 3), (3, 2), (5, 5), (7, 8), (8, 7), (7, 8)],
         "src long, dst long",
     )
-    out = {r["node"]: r["component"] for r in connected_components_star(df).collect()}
-    # 5's only edge is a self-loop -> dropped, matching connected_components
+    out, stats = _run_cc(spark, df, "-1")
+    assert stats["path"] == "rounds"
+    # 5's only edge is a self-loop -> dropped
     assert out == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}
+
+
+def test_rounds_path_reaches_the_fixpoint_on_a_deep_chain(spark):
+    """A 100-node chain has diameter 99, four times the default
+    ``max_iter`` (25): a loop that moves labels one hop per round stops
+    at the cap with stale labels. The star rounds converge well inside
+    it and keep only the result's blocks."""
+    n = 100
+    df = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "src long, dst long")
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = len(persisted())
+    out, stats = _run_cc(spark, df, "-1")
+    assert stats["path"] == "rounds"
+    assert out == {i: 0 for i in range(n)}
+    assert stats["rounds"] < 25
+    assert len(persisted()) <= before + 1  # the result's own checkpoint
 
 
 # ---------------------------------------------------------------------------

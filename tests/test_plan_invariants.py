@@ -250,3 +250,32 @@ def test_dedup_hot_bucket_policy_lives_in_one_place():
     assert src.count("salted_hot_join(") == 1, "hand-rolled salted join"
     assert src.count('("drop", "salt")') == 1, "hand-rolled hot_bucket_mode check"
     assert "_observed_hot_set" not in src
+
+
+def test_one_distributed_cc_loop():
+    """``clustering.py`` keeps one distributed connected-components
+    algorithm, the star rounds: no propagation fallback, no second
+    public entry point, no knob that only the removed loops read, and
+    nothing in the package imports the removed entry point."""
+    import ast
+    from pathlib import Path
+
+    import aroa_etl_spark
+
+    root = Path(aroa_etl_spark.__file__).parent
+    src = (root / "operators/clustering.py").read_text()
+    assert "_propagation_rounds" not in src
+    assert "def connected_components_star" not in src
+    for node in ast.walk(ast.parse(src)):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            a = node.args
+            params = {p.arg for p in a.posonlyargs + a.args + a.kwonlyargs}
+            for knob in ("dedup_edges", "checkpoint_every"):
+                assert knob not in params, f"{node.name}({knob}=...)"
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, (ast.Import, ast.ImportFrom)):
+                names = {alias.name.rsplit(".", 1)[-1] for alias in node.names}
+                assert "connected_components_star" not in names, (
+                    f"{path.relative_to(root)} imports connected_components_star"
+                )

@@ -534,6 +534,35 @@ def test_ngram_jaccard_blocked_salt_mode_matches_unbounded(spark):
     assert len(dropped) < len(unbounded)
 
 
+def test_ngram_jaccard_blocked_threshold_zero_honours_the_cap(spark):
+    """At ``threshold == 0`` the blocked path joins on the block alone
+    (zero-overlap pairs must appear), and that per-block cross product
+    follows the same hot-bucket policy: the 300-doc block is hot under
+    a cap of 50, salt mode keeps every one of its 300·299/2 pairs, drop
+    mode loses them all, and the Observation counts the one hot block."""
+    from pyspark.sql import Observation
+
+    from aroa_etl_spark.operators.dedup import ngram_jaccard_pairs, release_caches
+
+    docs = _skewed_block_docs(spark)
+    kw = dict(n=3, threshold=0, block_col="source")
+    try:
+        unbounded = _pairs(ngram_jaccard_pairs(docs, **kw, max_bucket_size=None))
+        salted_df = ngram_jaccard_pairs(docs, **kw, max_bucket_size=50, hot_salt=8)
+        assert "__salt" in salted_df._jdf.queryExecution().toString()
+        salted = _pairs(salted_df)
+        obs = Observation("block_hot")
+        dropped = _pairs(ngram_jaccard_pairs(
+            docs, **kw, max_bucket_size=50, hot_bucket_mode="drop", observation=obs))
+        m = obs.get
+    finally:
+        release_caches()
+    assert len(unbounded) == 300 * 299 // 2
+    assert salted == unbounded
+    assert dropped == []
+    assert m["hot_buckets"] == 1 and m["hot_bucket_rows"] == 300
+
+
 def _hot_bucket_operators():
     """The six candidate joins under the shared hot-bucket policy, each
     as ``run(docs, **cap_kwargs)`` over the first 240 of
